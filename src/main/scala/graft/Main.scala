@@ -67,11 +67,18 @@ object Main {
     val written = ExtractPipeline.runWithCommitLog(spark, docs, output, opts,
       buckets, skewBytes, htmlBackup)
     val secs = (System.nanoTime() - t0) / 1e9
-    val done = spark.read.parquet(s"$output/bucket-*")
-    val nOk = done.filter("ok").count()
-    val nAll = done.count()
+    // counts come from the manifests: buckets this run wrote vs. buckets an
+    // earlier run had already committed; throughput counts this run's only
+    val thisRun = written.toSet
+    val (run, before) = (0 until buckets)
+      .flatMap(b => ExtractPipeline.manifestMetrics(output, b).map(s"$output/bucket-$b" -> _))
+      .partition { case (path, _) => thisRun.contains(path) }
+    def total(ms: Seq[(String, Map[String, Long])], k: String) = ms.map(_._2(k)).sum
+    val nRun = total(run, "docs")
     println(f"GRAFT-EXTRACT done: buckets_written=${written.length}/$buckets " +
-      f"docs=$nAll ok=$nOk wall=$secs%.1fs tput=${nAll / math.max(secs, 1e-9)}%.0f docs/s " +
+      f"docs_this_run=$nRun ok_this_run=${total(run, "ok")} " +
+      f"docs_already_committed=${total(before, "docs")} " +
+      f"wall=$secs%.1fs tput=${nRun / math.max(secs, 1e-9)}%.0f docs/s " +
       s"output=$output (skew threshold ${skewBytes}B, mode $mode, htmlBackup=$htmlBackup)")
     spark.stop()
   }

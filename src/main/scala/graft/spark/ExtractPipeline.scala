@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.extract.{Deduplicator, ExtractedDoc, Extraction, ExtractorOptions}
 import graft.out.Serializers.Span
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Input row: the Iceberg-style interleaved document (BASELINE.json
@@ -28,7 +28,7 @@ final case class ResultRow(
   * per-row kernel; the only cross-boundary points are the scan, the
   * doc_id-hash repartition, and the sink).
   *
-  * Scale design (local[32] here; 1000-executor story):
+  * Scale design (1000-executor story):
   *  - the kernel is per-row pure Scala — embarrassingly parallel, no shuffle
   *    besides the explicit doc_id repartition for balanced task sizes;
   *  - mega-document skew (north rule) is routed explicitly: rows heavier than
@@ -133,8 +133,21 @@ object ExtractPipeline {
     * table. `htmlBackup=true` adds a SECOND read of the bucket for the
     * backup write (2/buckets per pass): re-reading the pruned parquet keeps
     * the memory profile flat, vs. caching a whole bucket of raw pages to
-    * save a scan. Each manifest records the pruned path + files read. */
-  /** `htmlBackup=true` mirrors the reference's HTML backup sink
+    * save a scan. Each manifest records the pruned path + files read.
+    *
+    * Concurrency: the uncommitted buckets run on a pool of at most
+    * `defaultParallelism` passes that pull from one queue, so driver-side
+    * job overhead of one bucket overlaps the tasks of others. `wall_ms` in
+    * a manifest is that bucket's own wall time, which overlaps its
+    * neighbours'. The returned paths are in ascending bucket order. If a
+    * pass throws, no further pass starts, passes already running still
+    * commit, and the first failure is rethrown as is; a re-run then
+    * processes only the failed and unstarted buckets.
+    *
+    * Metrics: docs, ok, spans and kernel_us are observed on the bucket's
+    * write itself (`Dataset.observe`), not read back from the written files.
+    *
+    * `htmlBackup=true` mirrors the reference's HTML backup sink
     * (cli_utils.py:161-170: `--backup-dir` persists the raw page next to the
     * extraction output): each bucket's raw html payloads land in
     * `html-bucket-N`, committed by the same atomic manifest as the
@@ -184,46 +197,86 @@ object ExtractPipeline {
           "(or carrying stale) html-bucket-N data")
     }
     val rowSchema = org.apache.spark.sql.Encoders.product[DocRow].schema
-    val written = scala.collection.mutable.ListBuffer.empty[String]
-    (0 until buckets).foreach { b =>
-      val manifest = new java.io.File(s"$outDir/_commits/bucket-$b.json")
-      if (!manifest.exists()) {
-        val t0 = System.nanoTime()
-        // path-level partition pruning: only this bucket's files are read
-        val bucketPath = s"$stagedDir/_bucket=$b"
-        val part =
-          if (new java.io.File(bucketPath).exists())
-            spark.read.schema(rowSchema).parquet(bucketPath).as[DocRow]
-          else spark.emptyDataset[DocRow]
-        val scannedFiles = part.inputFiles.length
-        val out =
-          if (skewThresholdBytes > 0) extractDocsSkewAware(part, options, skewThresholdBytes)
-          else extractDocs(part, options)
-        val target = s"$outDir/bucket-$b"
-        out.write.mode("overwrite").parquet(target)
-        if (htmlBackup) {
-          import spark.implicits._
-          part.map(r => (r.doc_id, htmlPayload(r.spans)))
-            .toDF("doc_id", "html")
-            .write.mode("overwrite").parquet(s"$outDir/html-bucket-$b")
+
+    /** One bucket pass: pruned scan -> extract -> parquet write (+ html
+      * backup) -> atomic manifest. The manifest metrics are observed on the
+      * write itself, so no job re-reads the committed files. */
+    def commitBucket(b: Int): String = {
+      val t0 = System.nanoTime()
+      // path-level partition pruning: only this bucket's files are read
+      val bucketPath = s"$stagedDir/_bucket=$b"
+      val part =
+        if (new java.io.File(bucketPath).exists())
+          spark.read.schema(rowSchema).parquet(bucketPath).as[DocRow]
+        else spark.emptyDataset[DocRow]
+      val scannedFiles = part.inputFiles.length
+      val out =
+        if (skewThresholdBytes > 0) extractDocsSkewAware(part, options, skewThresholdBytes)
+        else extractDocs(part, options)
+      val target = s"$outDir/bucket-$b"
+      val metrics = Observation(s"commit-log-bucket-$b")
+      out.observe(metrics, count(lit(1)).as("docs"),
+        coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)).as("ok"),
+        coalesce(sum(size(col("spans"))), lit(0L)).as("spans"),
+        coalesce(sum(col("kernel_us")), lit(0L)).as("kernel_us"))
+        .write.mode("overwrite").parquet(target)
+      if (htmlBackup)
+        part.map(r => (r.doc_id, htmlPayload(r.spans)))
+          .toDF("doc_id", "html")
+          .write.mode("overwrite").parquet(s"$outDir/html-bucket-$b")
+      val stats = metrics.get
+      val durMs = (System.nanoTime() - t0) / 1000000
+      val json =
+        s"""{"bucket":$b,"docs":${stats("docs")},"ok":${stats("ok")},""" +
+          s""""spans":${stats("spans")},"kernel_us":${stats("kernel_us")},""" +
+          s""""wall_ms":$durMs,"input":"hash(doc_id) % $buckets == $b",""" +
+          s""""scan_path":"$bucketPath","scanned_files":$scannedFiles}"""
+      val tmp = java.nio.file.Paths.get(s"$outDir/_commits/.bucket-$b.json.tmp")
+      java.nio.file.Files.writeString(tmp, json)
+      // atomic commit; a failed rename throws instead of reporting the
+      // bucket as written while its manifest is missing
+      java.nio.file.Files.move(tmp, manifestPath(outDir, b),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      target
+    }
+
+    // `width` lanes pull uncommitted buckets from one queue (`next` indexes
+    // `pending`). The pool is created here, not shared, so its threads
+    // inherit this thread's Spark local properties (job group, scheduler
+    // pool); a pre-existing pool would issue unattributed jobs.
+    val pending = (0 until buckets).filterNot(b => java.nio.file.Files.exists(manifestPath(outDir, b)))
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val done = new Array[String](buckets)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val width = math.max(1, math.min(pending.size, spark.sparkContext.defaultParallelism))
+    val lane: java.util.concurrent.Callable[Unit] = () => {
+      var i = next.getAndIncrement()
+      while (i < pending.size && failure.get == null) {
+        val b = pending(i)
+        try done(b) = commitBucket(b)
+        catch {
+          case t: Throwable =>
+            if (!failure.compareAndSet(null, t)) failure.get.addSuppressed(t)
         }
-        // metrics read back from the committed files (cheap: parquet footers)
-        val stats = spark.read.parquet(target)
-          .agg(count(lit(1)), coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
-            coalesce(sum(size(col("spans"))), lit(0L)), coalesce(sum(col("kernel_us")), lit(0L)))
-          .collect()(0)
-        val durMs = (System.nanoTime() - t0) / 1000000
-        val json =
-          s"""{"bucket":$b,"docs":${stats.getLong(0)},"ok":${stats.getLong(1)},""" +
-            s""""spans":${stats.getLong(2)},"kernel_us":${stats.getLong(3)},""" +
-            s""""wall_ms":$durMs,"input":"hash(doc_id) % $buckets == $b",""" +
-            s""""scan_path":"$bucketPath","scanned_files":$scannedFiles}"""
-        val tmp = new java.io.File(s"$outDir/_commits/.bucket-$b.json.tmp")
-        java.nio.file.Files.writeString(tmp.toPath, json)
-        tmp.renameTo(manifest) // atomic commit
-        written += target
+        i = next.getAndIncrement()
       }
     }
-    written.toSeq
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
+    try Seq.fill(width)(pool.submit(lane)).foreach(_.get())
+    finally pool.shutdown()
+    if (failure.get != null) throw failure.get
+    done.toSeq.filter(_ != null)
+  }
+
+  private def manifestPath(outDir: String, bucket: Int): java.nio.file.Path =
+    java.nio.file.Paths.get(s"$outDir/_commits/bucket-$bucket.json")
+
+  /** The numeric fields of bucket `bucket`'s manifest (docs, ok, spans,
+    * kernel_us, wall_ms, ...), or None while the bucket is uncommitted. */
+  def manifestMetrics(outDir: String, bucket: Int): Option[Map[String, Long]] = {
+    val p = manifestPath(outDir, bucket)
+    if (!java.nio.file.Files.exists(p)) None
+    else Some(""""(\w+)":(\d+)""".r.findAllMatchIn(java.nio.file.Files.readString(p))
+      .map(m => m.group(1) -> m.group(2).toLong).toMap)
   }
 }

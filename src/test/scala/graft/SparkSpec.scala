@@ -94,21 +94,109 @@ class SparkSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-crash").toString
     val input = DocsTables.docsTable(spark, sf)
     ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4)
-    // simulate the crash window: bucket 1's data landed but the atomic
-    // manifest rename never happened
-    assert(new java.io.File(s"$dir/_commits/bucket-1.json").delete())
-    // plant a stale marker inside the bucket dir: mode("overwrite") must
+    // simulate the crash window in two buckets at once: their data landed
+    // but the atomic manifest rename never happened
+    val crashed = Seq(1, 3)
+    // plant a stale marker inside each bucket dir: mode("overwrite") must
     // clear the whole directory, proving the rewrite is exactly-once (no
     // stale part-files from the crashed attempt can survive)
-    val stale = new java.io.File(s"$dir/bucket-1/STALE_FROM_CRASHED_ATTEMPT")
-    java.nio.file.Files.writeString(stale.toPath, "junk")
+    val stale = crashed.map { b =>
+      assert(new java.io.File(s"$dir/_commits/bucket-$b.json").delete())
+      val f = new java.io.File(s"$dir/bucket-$b/STALE_FROM_CRASHED_ATTEMPT")
+      java.nio.file.Files.writeString(f.toPath, "junk")
+      f
+    }
+    // both buckets rewrite concurrently, each once, reported in bucket order
     val rewritten = ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4)
-    assert(rewritten == Seq(s"$dir/bucket-1"), rewritten)
-    assert(!stale.exists(), "overwrite did not clear the crashed attempt's files")
-    assert(new java.io.File(s"$dir/_commits/bucket-1.json").exists())
+    assert(rewritten == crashed.map(b => s"$dir/bucket-$b"), rewritten)
+    stale.foreach(f => assert(!f.exists(), s"overwrite did not clear $f"))
+    crashed.foreach(b => assert(new java.io.File(s"$dir/_commits/bucket-$b.json").exists()))
     // exactly-once: total output equals input, no duplicated bucket rows
     assert(spark.read.parquet(s"$dir/bucket-*").count() == input.count())
     assert(spark.read.parquet(s"$dir/bucket-*").select("doc_id").distinct().count() == input.count())
+  }
+
+  test("commit log: manifest metrics equal the committed bucket data") {
+    import org.apache.spark.sql.functions._
+    val input = DocsTables.docsTable(spark, sf)
+    // 128 buckets leave some empty on sf0.001: those must commit docs 0,
+    // on the skew-routed path the runbook uses too
+    Seq((4, 0), (128, 1 << 20)).foreach { case (buckets, skewBytes) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-metrics-$buckets").toString
+      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = buckets,
+        skewThresholdBytes = skewBytes)
+      val manifests = (0 until buckets).map { b =>
+        val m = ExtractPipeline.manifestMetrics(dir, b)
+        assert(m.isDefined, s"bucket $b of $buckets has no manifest")
+        val r = spark.read.parquet(s"$dir/bucket-$b")
+          .agg(count(lit(1)), coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
+            coalesce(sum(size(col("spans"))), lit(0L)), coalesce(sum(col("kernel_us")), lit(0L)))
+          .collect()(0)
+        val want = Map("docs" -> r.getLong(0), "ok" -> r.getLong(1), "spans" -> r.getLong(2),
+          "kernel_us" -> r.getLong(3))
+        assert(m.get.view.filterKeys(want.contains).toMap == want, s"bucket $b of $buckets")
+        m.get
+      }
+      assert(manifests.map(_("docs")).sum == input.count())
+      if (buckets == 128) assert(manifests.exists(_("docs") == 0), "no empty bucket at 128")
+    }
+  }
+
+  test("commit log: a failed bucket pass rethrows its own exception; resume reruns the rest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fail").toString
+    val input = DocsTables.docsTable(spark, sf)
+    // a directory where bucket 2's manifest temp file goes: its write throws
+    // after the bucket's data landed
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/_commits/.bucket-2.json.tmp"))
+    val e = intercept[java.io.IOException] {
+      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 16)
+    }
+    assert(e.getMessage.contains(".bucket-2.json.tmp"), e)
+    val uncommitted = (0 until 16).filter(b => ExtractPipeline.manifestMetrics(dir, b).isEmpty)
+    assert(uncommitted.contains(2))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/_commits/.bucket-2.json.tmp"))
+    val resumed = ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 16)
+    assert(resumed == uncommitted.map(b => s"$dir/bucket-$b"))
+    assert(spark.read.parquet(s"$dir/bucket-*").select("doc_id").distinct().count() == input.count())
+  }
+
+  test("commit log: every job of a run carries the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val input = DocsTables.docsTable(spark, sf)
+    val sc = spark.sparkContext
+    // a listener sees events in order: the jobs between the two marker jobs
+    // are exactly the run's, whatever earlier events are still queued
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name, interruptOnCancel = false)
+      sc.parallelize(1 to 1).count()
+    }
+    def jobGroups(group: String): Seq[String] = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-group").toString
+      marker("before")
+      sc.setJobGroup(group, "runWithCommitLog", interruptOnCancel = false)
+      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 8, htmlBackup = true)
+      marker("after")
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (!seen.lastOption.contains("after"))
+        seen += Option(groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail(s"listener saw no 'after' marker job: $seen"))
+      seen.drop(seen.lastIndexOf("before") + 1).dropRight(1).toSeq
+    }
+    sc.addSparkListener(listener)
+    // two runs with different groups: threads kept from the first run would
+    // carry its group into the second
+    try Seq("commit-log-run-1", "commit-log-run-2").foreach { group =>
+      val run = jobGroups(group)
+      assert(run.nonEmpty && run.forall(_ == group), run)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("commit log: HTML backup sink persists raw payloads bucket-aligned") {
