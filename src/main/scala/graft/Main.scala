@@ -22,8 +22,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * On a cluster the master/parallelism come from spark-submit; local runs
   * default to local[*]. RESUME is automatic and implicit: re-running with
   * the same output dir skips committed buckets (per-bucket manifests carry
-  * lineage, metrics and scan evidence); a changed --buckets/--html-backup
-  * against an existing output dir fails loudly instead of mis-bucketing.
+  * lineage, metrics and scan evidence); a changed --buckets, --html-backup
+  * or --skew-bytes against an existing output dir fails loudly instead of
+  * mis-bucketing (heavy docs are routed once, when the input is staged).
   */
 object Main {
 
@@ -79,7 +80,8 @@ object Main {
       f"docs_this_run=$nRun ok_this_run=${total(run, "ok")} " +
       f"docs_already_committed=${total(before, "docs")} " +
       f"wall=$secs%.1fs tput=${nRun / math.max(secs, 1e-9)}%.0f docs/s " +
-      s"output=$output (skew threshold ${skewBytes}B, mode $mode, htmlBackup=$htmlBackup)")
+      s"output=$output (skew threshold ${if (skewBytes > 0) s"${skewBytes}B" else "off"}, " +
+      s"mode $mode, htmlBackup=$htmlBackup)")
     spark.stop()
   }
 }

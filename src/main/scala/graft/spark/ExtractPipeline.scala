@@ -25,16 +25,17 @@ final case class ResultRow(
 
 /** The Spark-native extraction pipeline: a typed `mapPartitions` transform
   * over `Dataset[DocRow]` (SURVEY §3.1 — the whole reference cascade is the
-  * per-row kernel; the only cross-boundary points are the scan, the
-  * doc_id-hash repartition, and the sink).
+  * per-row kernel; the only cross-boundary points are the scan and the sink).
   *
   * Scale design (1000-executor story):
-  *  - the kernel is per-row pure Scala — embarrassingly parallel, no shuffle
-  *    besides the explicit doc_id repartition for balanced task sizes;
-  *  - mega-document skew (north rule) is routed explicitly: rows heavier than
-  *    `skewThreshold` bytes are split into their own single-doc partitions so
-  *    one 100 MB page cannot stall a 128 MB-input task (AQE cannot re-plan a
-  *    map-only stage);
+  *  - the kernel is per-row pure Scala — embarrassingly parallel, no shuffle;
+  *    `runWithCommitLog` lays the input out by doc_id hash once, at staging,
+  *    so a bucket pass is one map-only scan -> kernel -> write job;
+  *  - mega-document skew (north rule) is routed once, at staging: rows
+  *    heavier than the skew threshold land in their bucket's heavy directory,
+  *    and only a pass that finds one spreads those rows round-robin over
+  *    their own partitions, so one 100 MB page cannot stall a 128 MB-input
+  *    task (AQE cannot re-plan a map-only stage);
   *  - per-partition LRU dedup state lives inside the partition iterator,
   *    matching the reference's per-process cache semantics (SURVEY §7.4.3).
   */
@@ -86,35 +87,8 @@ object ExtractPipeline {
       val opts =
         if (options.dedup) options.copy(dedupCache = new Deduplicator())
         else options
-      iter.map { row => ExtractPipeline.kernelDocCount.increment(); extractRow(row, opts) }
+      iter.map(extractRow(_, opts))
     }
-  }
-
-  /** DIAGNOSTIC (meaningful in local mode only): docs processed by
-    * extractDocs since JVM start — lets probes count kernel executions
-    * (ProbePipe used it to prove the pipeline cache is hit: 5000 docs on
-    * build, 0 on every action). LongAdder: no shared-cache-line contention
-    * in the kernel hot path (~ns per doc vs ~60 µs of kernel work). */
-  val kernelDocCount = new java.util.concurrent.atomic.LongAdder
-
-  /** Skew-aware variant: docs whose html payload exceeds `skewThresholdBytes`
-    * are pulled into a salted, per-doc-balanced set of partitions; the bulk
-    * path stays on the doc_id-hash layout. Both paths are one map stage. */
-  def extractDocsSkewAware(ds: Dataset[DocRow], options: ExtractorOptions,
-      skewThresholdBytes: Int = 1 << 20, bulkPartitions: Int = 0): Dataset[ResultRow] = {
-    import ds.sparkSession.implicits._
-    val spark = ds.sparkSession
-    val shufflePartitions = if (bulkPartitions > 0) bulkPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val weighted = ds.withColumn("_w",
-      aggregate(col("spans"), lit(0L), (acc, s) => acc + coalesce(length(s.getField("text")), lit(0))))
-    val small = weighted.filter(col("_w") <= skewThresholdBytes).drop("_w").as[DocRow]
-    val big = weighted.filter(col("_w") > skewThresholdBytes).drop("_w").as[DocRow]
-    val smallOut = extractDocs(
-      small.repartition(shufflePartitions, col("doc_id")), options)
-    // round-robin the heavy docs so each lands in its own task
-    val bigOut = extractDocs(big.repartition(shufflePartitions), options)
-    smallOut.unionAll(bigOut)
   }
 
   // ------------------------------------------------------------- commit log
@@ -125,15 +99,25 @@ object ExtractPipeline {
     * extraction metrics. A restarted run skips committed buckets — the north
     * rule's per-partition checkpointed resume.
     *
-    * Scan economics: the raw input is staged ONCE as a bucket-partitioned
-    * parquet table (the emulated `bucket(doc_id)` Iceberg layout). Every
-    * bucket pass — including resume passes in a later process — reads only
-    * its own `_bucket=N` partition directory, so total input scan volume is
-    * 1x (the staging write) + 1/buckets per pass, never buckets× the raw
-    * table. `htmlBackup=true` adds a SECOND read of the bucket for the
-    * backup write (2/buckets per pass): re-reading the pruned parquet keeps
-    * the memory profile flat, vs. caching a whole bucket of raw pages to
-    * save a scan. Each manifest records the pruned path + files read.
+    * Scan economics: the raw input is staged ONCE as a parquet table
+    * partitioned by `_bucket` (the emulated `bucket(doc_id)` Iceberg layout)
+    * and `_heavy`, which marks the docs whose payload (the text length
+    * summed over all spans) exceeds `skewThresholdBytes`; `<= 0` routes no
+    * doc as heavy.
+    * Routing is decided there and never again. Every bucket pass — including
+    * resume passes in a later process — reads only its own `_bucket=N`
+    * directories: the bulk one goes straight from the scan through the
+    * kernel to the write, one map-only job with no exchange; a heavy one
+    * exists only if staging routed a doc there, and only then does the pass
+    * spread those rows round-robin over their own partitions. Total input
+    * scan volume is 1x (the staging write) + 1/buckets per pass, never
+    * buckets× the raw table. `htmlBackup=true` adds a SECOND read of the
+    * bucket for the backup write (2/buckets per pass): re-reading the pruned
+    * parquet keeps the memory profile flat, vs. caching a whole bucket of
+    * raw pages to save a scan. Each manifest records the directories
+    * (`scan_path`) and files it read. The staged layout is part of the run:
+    * `_commits/_buckets` records the bucket count, `htmlBackup`, the layout
+    * and the threshold, and a resume that differs in any of them fails.
     *
     * Concurrency: the uncommitted buckets run on a pool of at most
     * `defaultParallelism` passes that pull from one queue, so driver-side
@@ -159,23 +143,33 @@ object ExtractPipeline {
     val fs = new java.io.File(outDir)
     fs.mkdirs()
     new java.io.File(s"$outDir/_commits").mkdirs()
+    val heavyBytes = math.max(0, skewThresholdBytes)
     // stage once: bucket-partitioned table, skipped when already committed.
     // The bucket count is part of the layout: a resume with a different
     // `buckets` against the same outDir must fail loudly, not mis-bucket.
     val stagedDir = s"$outDir/_staged"
     val bucketsMarker = java.nio.file.Paths.get(s"$outDir/_commits/_buckets")
     if (!new java.io.File(s"$stagedDir/_SUCCESS").exists()) {
+      val heavy =
+        if (heavyBytes == 0) lit(false)
+        else aggregate(col("spans"), lit(0L),
+          (acc, s) => acc + coalesce(length(s.getField("text")), lit(0))) > heavyBytes
       input.withColumn("_bucket", pmod(hash(col("doc_id")), lit(buckets)))
-        .write.mode("overwrite").partitionBy("_bucket").parquet(stagedDir)
+        .withColumn("_heavy", heavy)
+        .write.mode("overwrite").partitionBy("_bucket", "_heavy").parquet(stagedDir)
       // tmp + atomic rename: a crash between the staging write and a plain
       // marker write would leave a resumable staged table whose next run
       // throws NoSuchFileException instead of a diagnosable error
       val tmpMarker = java.nio.file.Paths.get(s"$outDir/_commits/._buckets.tmp")
-      // the marker records the run LAYOUT: bucket count + whether the html
-      // backup sink is part of each bucket's committed unit — a resume with
-      // either changed must fail loudly (a flipped htmlBackup would silently
-      // skip the backup for already-committed buckets)
-      java.nio.file.Files.writeString(tmpMarker, s"$buckets\n$htmlBackup")
+      // the marker records the run LAYOUT: bucket count, whether the html
+      // backup sink is part of each bucket's committed unit, the staged
+      // directory layout and the heavy-doc threshold it was routed by — a
+      // resume with any of them changed must fail loudly (a flipped
+      // htmlBackup would silently skip the backup for already-committed
+      // buckets; a table staged without the heavy/bulk split has no bulk
+      // directory, so its passes would commit empty buckets)
+      java.nio.file.Files.writeString(tmpMarker,
+        s"$buckets\n$htmlBackup\n$StagedLayout\n$heavyBytes")
       java.nio.file.Files.move(tmpMarker, bucketsMarker,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -195,8 +189,18 @@ object ExtractPipeline {
         s"commit log at $outDir was staged with htmlBackup=$stagedBackup, " +
           s"got htmlBackup=$htmlBackup — committed buckets would be missing " +
           "(or carrying stale) html-bucket-N data")
+      require(markerLines.length > 3 && markerLines(2) == StagedLayout,
+        s"commit log at $outDir was staged without the $StagedLayout layout " +
+          s"(no heavy/bulk split) — delete $stagedDir to restage; committed " +
+          "buckets are kept")
+      val stagedHeavy = markerLines(3).toInt
+      require(stagedHeavy == heavyBytes,
+        s"commit log at $outDir was staged with skewThresholdBytes=$stagedHeavy, " +
+          s"got $heavyBytes — heavy docs are routed at staging; delete " +
+          s"$stagedDir to restage with the new threshold")
     }
     val rowSchema = org.apache.spark.sql.Encoders.product[DocRow].schema
+    val heavyPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     /** One bucket pass: pruned scan -> extract -> parquet write (+ html
       * backup) -> atomic manifest. The manifest metrics are observed on the
@@ -204,15 +208,21 @@ object ExtractPipeline {
     def commitBucket(b: Int): String = {
       val t0 = System.nanoTime()
       // path-level partition pruning: only this bucket's files are read
-      val bucketPath = s"$stagedDir/_bucket=$b"
-      val part =
-        if (new java.io.File(bucketPath).exists())
-          spark.read.schema(rowSchema).parquet(bucketPath).as[DocRow]
-        else spark.emptyDataset[DocRow]
+      def scan(heavy: Boolean): Option[(String, Dataset[DocRow])] = {
+        val path = s"$stagedDir/_bucket=$b/_heavy=$heavy"
+        Option.when(new java.io.File(path).exists())(
+          path -> spark.read.schema(rowSchema).parquet(path).as[DocRow])
+      }
+      val (bulk, heavy) = (scan(heavy = false), scan(heavy = true))
+      val scans = bulk.toSeq ++ heavy
+      val part = scans.map(_._2).reduceOption(_ unionAll _).getOrElse(spark.emptyDataset[DocRow])
       val scannedFiles = part.inputFiles.length
-      val out =
-        if (skewThresholdBytes > 0) extractDocsSkewAware(part, options, skewThresholdBytes)
-        else extractDocs(part, options)
+      val scanPaths = scans.map(s => "\"" + s._1 + "\"").mkString("[", ",", "]")
+      val bulkOut = extractDocs(bulk.fold(spark.emptyDataset[DocRow])(_._2), options)
+      // round-robin the heavy docs so each lands in its own task
+      val out = heavy.fold(bulkOut) { case (_, h) =>
+        bulkOut.unionAll(extractDocs(h.repartition(heavyPartitions), options))
+      }
       val target = s"$outDir/bucket-$b"
       val metrics = Observation(s"commit-log-bucket-$b")
       out.observe(metrics, count(lit(1)).as("docs"),
@@ -230,7 +240,7 @@ object ExtractPipeline {
         s"""{"bucket":$b,"docs":${stats("docs")},"ok":${stats("ok")},""" +
           s""""spans":${stats("spans")},"kernel_us":${stats("kernel_us")},""" +
           s""""wall_ms":$durMs,"input":"hash(doc_id) % $buckets == $b",""" +
-          s""""scan_path":"$bucketPath","scanned_files":$scannedFiles}"""
+          s""""scan_path":$scanPaths,"scanned_files":$scannedFiles}"""
       val tmp = java.nio.file.Paths.get(s"$outDir/_commits/.bucket-$b.json.tmp")
       java.nio.file.Files.writeString(tmp, json)
       // atomic commit; a failed rename throws instead of reporting the
@@ -267,6 +277,9 @@ object ExtractPipeline {
     if (failure.get != null) throw failure.get
     done.toSeq.filter(_ != null)
   }
+
+  /** The staged table's directory layout, recorded in `_commits/_buckets`. */
+  private val StagedLayout = "_bucket/_heavy"
 
   private def manifestPath(outDir: String, bucket: Int): java.nio.file.Path =
     java.nio.file.Paths.get(s"$outDir/_commits/bucket-$bucket.json")

@@ -253,9 +253,8 @@ object TextOps {
     // EAGER materialization: builds the cache in one dedicated simple job
     // instead of as a side effect of whatever dependent subtree executes
     // first (the dedup corpus count, whose own cache build then stacks on
-    // the kernel's in one stage chain). A kernel doc counter (ProbePipe +
-    // ExtractPipeline.kernelDocCount) proves extraction runs exactly ONCE
-    // per invocation either way — the paired A/B win (pipeline_dedup
+    // the kernel's in one stage chain). Extraction runs exactly ONCE per
+    // invocation either way — the paired A/B win (pipeline_dedup
     // 1.96-2.20 -> 1.85-1.90 s, with the explode labeling below) comes
     // from the leaner stage structure, not from avoided kernel work.
     p.count()

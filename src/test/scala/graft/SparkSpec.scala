@@ -54,13 +54,45 @@ class SparkSpec extends AnyFunSuite {
 
   test("skew-aware routing preserves results") {
     import spark.implicits._
+    import org.apache.spark.sql.functions._
     val docs = DocsTables.docsTableSkewed(spark, sf, factor = 1, k = 2, sectionsPerMega = 300)
-    val plain = ExtractPipeline.extractDocs(docs, opts)
-      .select("doc_id", "text").collect().map(r => (r.getString(0), r.getString(1))).toMap
-    val routed = ExtractPipeline.extractDocsSkewAware(docs, opts, skewThresholdBytes = 50000)
-      .select("doc_id", "text").collect().map(r => (r.getString(0), r.getString(1))).toMap
+    def texts(ds: org.apache.spark.sql.DataFrame) =
+      ds.select("doc_id", "text").collect().map(r => (r.getString(0), r.getString(1))).toMap
+    val plain = texts(ExtractPipeline.extractDocs(docs, opts).toDF())
+    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val buckets = 4
+    ExtractPipeline.runWithCommitLog(spark, docs, dir, opts, buckets = buckets,
+      skewThresholdBytes = 50000)
+    val routed = texts(spark.read.parquet(s"$dir/bucket-*"))
     assert(plain == routed)
-    assert(routed.keys.exists(_.startsWith("mega-")))
+    // staging routed exactly the docs above the threshold, all of them mega
+    // docs: a heavy directory exists only for the buckets that hold one
+    val heavy = docs.select(col("doc_id"), pmod(hash(col("doc_id")), lit(buckets)), col("spans"))
+      .as[(String, Int, Seq[graft.out.Serializers.Span])].collect()
+      .filter(_._3.map(s => Option(s.text).fold(0)(t => t.codePointCount(0, t.length))).sum > 50000)
+    assert(heavy.nonEmpty && heavy.forall(_._1.startsWith("mega-")), heavy.map(_._1).toSeq)
+    val heavyDirs = (0 until buckets).map(b => s"$dir/_staged/_bucket=$b/_heavy=true")
+      .filter(new java.io.File(_).exists())
+    assert(heavyDirs.toSet == heavy.map(h => s"$dir/_staged/_bucket=${h._2}/_heavy=true").toSet)
+    assert(spark.read.parquet(heavyDirs: _*).select("doc_id").as[String].collect().toSet ==
+      heavy.map(_._1).toSet)
+    (0 until buckets).foreach(assertScanCovered(dir, _))
+    assert((0 until buckets).map(ExtractPipeline.manifestMetrics(dir, _).get("docs")).sum ==
+      docs.count())
+  }
+
+  /** Bucket `b`'s manifest names every staged directory of the bucket and
+    * counts every parquet file in them: what the pass read. */
+  private def assertScanCovered(dir: String, b: Int): Unit = {
+    val staged = Option(new java.io.File(s"$dir/_staged/_bucket=$b").listFiles()).toSeq.flatten
+      .filter(_.isDirectory)
+    val files = staged.flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/_commits/bucket-$b.json"))
+    val listed = """"scan_path":\[([^\]]*)\]""".r.findFirstMatchIn(json)
+      .map(m => """"([^"]+)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSet)
+      .getOrElse(fail(s"bucket $b manifest has no scan_path list: $json"))
+    assert(listed.map(new java.io.File(_).getCanonicalPath) == staged.map(_.getCanonicalPath).toSet, json)
+    assert(ExtractPipeline.manifestMetrics(dir, b).get("scanned_files") == files.length, json)
   }
 
   test("commit log: second run skips committed buckets, output complete") {
@@ -120,7 +152,7 @@ class SparkSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val input = DocsTables.docsTable(spark, sf)
     // 128 buckets leave some empty on sf0.001: those must commit docs 0,
-    // on the skew-routed path the runbook uses too
+    // with the runbook's 1 MiB skew threshold too
     Seq((4, 0), (128, 1 << 20)).foreach { case (buckets, skewBytes) =>
       val dir = java.nio.file.Files.createTempDirectory(s"graft-metrics-$buckets").toString
       ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = buckets,
@@ -160,42 +192,69 @@ class SparkSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/bucket-*").select("doc_id").distinct().count() == input.count())
   }
 
-  test("commit log: every job of a run carries the caller's job group") {
+  /** The job group of every job `body` issues, in start order. A listener
+    * sees events in order: the jobs between the two marker jobs are exactly
+    * body's, whatever earlier events are still queued. */
+  private def jobGroupsOf(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
     }
-    val input = DocsTables.docsTable(spark, sf)
     val sc = spark.sparkContext
-    // a listener sees events in order: the jobs between the two marker jobs
-    // are exactly the run's, whatever earlier events are still queued
     def marker(name: String): Unit = {
       sc.setJobGroup(name, name, interruptOnCancel = false)
       sc.parallelize(1 to 1).count()
     }
-    def jobGroups(group: String): Seq[String] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-group").toString
+    sc.addSparkListener(listener)
+    try {
       marker("before")
-      sc.setJobGroup(group, "runWithCommitLog", interruptOnCancel = false)
-      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 8, htmlBackup = true)
+      sc.clearJobGroup()
+      body
       marker("after")
       val seen = scala.collection.mutable.ArrayBuffer.empty[String]
       while (!seen.lastOption.contains("after"))
         seen += Option(groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
           .getOrElse(fail(s"listener saw no 'after' marker job: $seen"))
       seen.drop(seen.lastIndexOf("before") + 1).dropRight(1).toSeq
-    }
-    sc.addSparkListener(listener)
-    // two runs with different groups: threads kept from the first run would
-    // carry its group into the second
-    try Seq("commit-log-run-1", "commit-log-run-2").foreach { group =>
-      val run = jobGroups(group)
-      assert(run.nonEmpty && run.forall(_ == group), run)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
+    }
+  }
+
+  test("commit log: every job of a run carries the caller's job group") {
+    val input = DocsTables.docsTable(spark, sf)
+    // two runs with different groups: threads kept from the first run would
+    // carry its group into the second
+    Seq("commit-log-run-1", "commit-log-run-2").foreach { group =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-group").toString
+      val run = jobGroupsOf {
+        spark.sparkContext.setJobGroup(group, "runWithCommitLog", interruptOnCancel = false)
+        ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 8, htmlBackup = true)
+      }
+      assert(run.nonEmpty && run.forall(_ == group), run)
+    }
+  }
+
+  test("commit log: a heavy-free bucket pass is one map-only job") {
+    val input = DocsTables.docsTable(spark, sf)
+    Seq(false, true).foreach { backup =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-shape").toString
+      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4,
+        skewThresholdBytes = 1 << 20, htmlBackup = backup)
+      // rerun every pass on the staged table: the jobs are the passes' alone
+      (0 until 4).foreach(b => assert(new java.io.File(s"$dir/_commits/bucket-$b.json").delete()))
+      val jobs = jobGroupsOf {
+        ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4,
+          skewThresholdBytes = 1 << 20, htmlBackup = backup)
+      }
+      assert(jobs.length == 4 * (if (backup) 2 else 1), s"htmlBackup=$backup: ${jobs.length} jobs")
+      (0 until 4).foreach { b =>
+        assert(!new java.io.File(s"$dir/_staged/_bucket=$b/_heavy=true").exists())
+        assertScanCovered(dir, b)
+      }
     }
   }
 
@@ -216,6 +275,64 @@ class SparkSpec extends AnyFunSuite {
       ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2)
     }
     assert(e.getMessage.contains("htmlBackup"))
+  }
+
+  test("commit log: a table staged without the heavy/bulk split fails loudly, then restages") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val input = DocsTables.docsTable(spark, sf)
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2)
+    // the marker an older layout wrote: bucket count and htmlBackup only
+    val marker = java.nio.file.Paths.get(s"$dir/_commits/_buckets")
+    java.nio.file.Files.writeString(marker, "2\nfalse")
+    assert(new java.io.File(s"$dir/_commits/bucket-1.json").delete())
+    val e = intercept[IllegalArgumentException] {
+      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2)
+    }
+    assert(e.getMessage.contains("restage"), e)
+    assert(ExtractPipeline.manifestMetrics(dir, 1).isEmpty)
+    // following the message: restaging resumes exactly the uncommitted bucket
+    assert(org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$dir/_staged")))
+    assert(ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2) == Seq(s"$dir/bucket-1"))
+    assert(spark.read.parquet(s"$dir/bucket-*").select("doc_id").distinct().count() == input.count())
+  }
+
+  test("commit log: a resume with a different skew threshold fails loudly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-skew-resume").toString
+    val input = DocsTables.docsTable(spark, sf)
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2, skewThresholdBytes = 1 << 20)
+    Seq(0, 50000).foreach { other =>
+      val e = intercept[IllegalArgumentException] {
+        ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2, skewThresholdBytes = other)
+      }
+      assert(e.getMessage.contains("skewThresholdBytes=1048576"), e)
+    }
+    // the threshold it was staged with resumes
+    assert(ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2,
+      skewThresholdBytes = 1 << 20).isEmpty)
+  }
+
+  test("graft.Main: the closing line names the skew threshold; a changed --skew-bytes fails the resume") {
+    import scala.jdk.CollectionConverters._
+    val out = java.nio.file.Files.createTempDirectory("graft-main").toString
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+    val opens = jvm.sliding(2).collect { case Seq(a @ "--add-opens", p) => Seq(a, p) }.flatten.toSeq ++
+      jvm.filter(_.startsWith("--add-opens="))
+    // a child JVM: Main stops its session, which would stop this suite's
+    def main(args: String*): (Int, String) = {
+      val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++ opens ++
+        Seq("-Xmx1g", "-Dspark.master=local[2]", "-Dspark.ui.enabled=false",
+          "-cp", System.getProperty("java.class.path"), "graft.Main",
+          "--input", sf, "--output", out, "--buckets", "2", "--mode", "fast") ++ args
+      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+      val log = new String(p.getInputStream.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        .linesIterator.filterNot(_.contains(" INFO ")).mkString("\n")
+      assert(p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS), log)
+      (p.exitValue(), log)
+    }
+    val (staged, log) = main("--skew-bytes", "0")
+    assert(staged == 0 && log.contains("buckets_written=2/2") && log.contains("skew threshold off"), log)
+    val (resumed, err) = main() // the default 1 MiB threshold
+    assert(resumed != 0 && err.contains("skewThresholdBytes=0, got 1048576"), err)
   }
 
   test("commit log: staged table without _buckets marker fails diagnosably") {
