@@ -17,10 +17,15 @@ import scala.collection.mutable.ArrayBuffer
   * elements carry 0-3 attributes, so a LinkedHashMap (entry table + linked
   * entries) per attributed node was a top GC-traffic source (AllocProf).
   * Semantics match lxml attrib / LinkedHashMap: put keeps the original
-  * position on update, iteration is insertion order. */
+  * position on update, iteration is insertion order.
+  *
+  * `class` and `id` values are also held in fields, kept in step by `put`
+  * and `remove`: the selector and readability rules read them dozens of
+  * times per node, and a call site passing the literal gets them without
+  * a scan. */
 final class AttrMap private (private var ks: Array[String], private var vs: Array[String],
-    private var n: Int) {
-  def this() = this(new Array[String](4), new Array[String](4), 0)
+    private var n: Int, private var classV: String, private var idV: String) {
+  def this() = this(new Array[String](4), new Array[String](4), 0, null, null)
   def size: Int = n
   def nonEmpty: Boolean = n > 0
   private def indexOf(k: String): Int = {
@@ -30,16 +35,25 @@ final class AttrMap private (private var ks: Array[String], private var vs: Arra
   }
   def put(k: String, v: String): Unit = {
     val i = indexOf(k)
-    if (i >= 0) vs(i) = v
-    else {
-      if (n == ks.length) {
-        ks = java.util.Arrays.copyOf(ks, n * 2)
-        vs = java.util.Arrays.copyOf(vs, n * 2)
-      }
-      ks(n) = k; vs(n) = v; n += 1
-    }
+    if (i >= 0) { vs(i) = v; remember(k, v) }
+    else add(k, v)
   }
-  def getOrNull(k: String): String = { val i = indexOf(k); if (i >= 0) vs(i) else null }
+  /** put, unless `k` is already present (the first duplicate attribute wins). */
+  def putIfAbsent(k: String, v: String): Unit = if (indexOf(k) < 0) add(k, v)
+  private def add(k: String, v: String): Unit = {
+    if (n == ks.length) {
+      ks = java.util.Arrays.copyOf(ks, n * 2)
+      vs = java.util.Arrays.copyOf(vs, n * 2)
+    }
+    ks(n) = k; vs(n) = v; n += 1
+    remember(k, v)
+  }
+  private def remember(k: String, v: String): Unit =
+    if (k == "class") classV = v else if (k == "id") idV = v
+  def getOrNull(k: String): String =
+    if (k eq "class") classV
+    else if (k eq "id") idV
+    else { val i = indexOf(k); if (i >= 0) vs(i) else null }
   def contains(k: String): Boolean = indexOf(k) >= 0
   def remove(k: String): Unit = {
     val i = indexOf(k)
@@ -48,6 +62,7 @@ final class AttrMap private (private var ks: Array[String], private var vs: Arra
       System.arraycopy(vs, i + 1, vs, i, n - i - 1)
       n -= 1
       ks(n) = null; vs(n) = null
+      if (k == "class") classV = null else if (k == "id") idV = null
     }
   }
   def foreachKV(f: (String, String) => Unit): Unit = {
@@ -60,7 +75,7 @@ final class AttrMap private (private var ks: Array[String], private var vs: Arra
     while (i >= 0) { out = ks(i) :: out; i -= 1 }
     out
   }
-  def copyAttrs(): AttrMap = new AttrMap(ks.clone(), vs.clone(), n)
+  def copyAttrs(): AttrMap = new AttrMap(ks.clone(), vs.clone(), n, classV, idV)
 }
 
 object Node {
@@ -92,6 +107,7 @@ final class Node(var tag: String) {
     if (v == null && !attrs0.contains(name)) default else v
   }
   def set(name: String, value: String): Unit = attrs.put(name, value)
+  def setIfAbsent(name: String, value: String): Unit = attrs.putIfAbsent(name, value)
   def has(name: String): Boolean = attrs0 != null && attrs0.contains(name)
   def hasAttrs: Boolean = attrs0 != null && attrs0.nonEmpty
   def clearAttrs(): Unit = attrs0 = null
@@ -262,8 +278,11 @@ final class Node(var tag: String) {
     val buf = Node.scratch.get()
     buf.clear() // defensive: also cleared on exit; a mid-walk throw (OOM,
     // stack overflow) must not leak stale nodes into the next call
+    // a one-tag filter, the common case, compares Strings directly instead
+    // of through Set1's generic equality
+    val one = if (tags != null && tags.size == 1) tags.head else null
     def walk(n: Node): Unit = {
-      if (tags == null || tags.contains(n.tag)) buf += n
+      if (tags == null || (if (one != null) one == n.tag else tags.contains(n.tag))) buf += n
       val cs = n.children
       var i = 0
       while (i < cs.length) { walk(cs(i)); i += 1 }

@@ -1,7 +1,6 @@
 package graft.extract
 
 import graft.dom.{Dom, Node}
-import graft.text.TextUtils.trim
 
 import java.util.regex.Pattern
 import scala.collection.mutable
@@ -14,13 +13,8 @@ import scala.collection.mutable
   * div-to-p test matches tag *prefixes* (readability_lxml.py:82-84). */
 final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int = 250) {
 
-  private val UnlikelyCandidates = Pattern.compile(
-    "(?i)combx|comment|community|disqus|extra|foot|header|menu|remark|rss|shoutbox|sidebar|sponsor|ad-break|agegate|pagination|pager|popup|tweet|twitter")
-  private val OkMaybeCandidate = Pattern.compile("(?i)and|article|body|column|main|shadow")
-  private val PositiveRe = Pattern.compile(
-    "(?i)article|body|content|entry|hentry|main|page|pagination|post|text|blog|story")
-  private val NegativeRe = Pattern.compile(
-    "(?i)combx|comment|com-|contact|foot|footer|footnote|masthead|media|meta|outbrain|promo|related|scroll|shoutbox|sidebar|sponsor|shopping|tags|tool|widget")
+  import Readability.{NegativeWords, OkMaybeCandidate, PositiveWords, UnlikelyCandidates}
+
   private val VideoRe = Pattern.compile("(?i)https?://(www\\.)?(youtube|vimeo)\\.com")
   private val DotSpace = Pattern.compile("\\.( |$)")
 
@@ -31,7 +25,6 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
   private val FrameTags = Set("body", "html")
   private val ListTags = Set("ol", "ul")
   private val TagA = Set("a")
-  private val TagInput = Set("input")
   // the regex '<(a|blockquote|dl|div|img|ol|p|pre|table|ul)' matches prefixes
   private val DivToPPrefix = List("a", "blockquote", "dl", "div", "img", "ol", "p", "table", "ul")
 
@@ -41,17 +34,30 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
     elem.trimmedTextLength
   }
 
-  private def tags(node: Node, tagNames: String*): List[Node] =
-    tagNames.toList.flatMap(t => node.descendants(Set(t)))
-
-  private def classWeight(elem: Node): Double = {
-    var weight = 0.0
-    List(elem.get("class"), elem.get("id")).filter(a => a != null && a.nonEmpty).foreach { attribute =>
-      if (NegativeRe.matcher(attribute).find()) weight -= 25
-      if (PositiveRe.matcher(attribute).find()) weight += 25
+  /** The descendants tagged tagNames(0) in document order, then those tagged
+    * tagNames(1), and so on: lxml's per-tag `iter` calls, in one walk. */
+  private def tags(node: Node, tagNames: String*): List[Node] = {
+    val names = tagNames.toArray
+    val found = Array.fill(names.length)(List.newBuilder[Node])
+    node.foreachNode { n =>
+      if (n ne node) {
+        var i = 0
+        while (i < names.length && names(i) != n.tag) i += 1
+        if (i < names.length) found(i) += n
+      }
     }
-    weight
+    found.iterator.flatMap(_.result()).toList
   }
+
+  private def classWeight(elem: Node): Double =
+    attributeWeight(elem.get("class")) + attributeWeight(elem.get("id"))
+
+  private def attributeWeight(attribute: String): Double =
+    if (attribute == null || attribute.isEmpty) 0.0
+    else {
+      val lower = AsciiWords.lower(attribute)
+      (if (NegativeWords.in(lower)) -25.0 else 0.0) + (if (PositiveWords.in(lower)) 25.0 else 0.0)
+    }
 
   private def scoreNode(elem: Node): Candidate = {
     var score = classWeight(elem)
@@ -69,14 +75,60 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
     linkLength.toDouble / total
   }
 
+  /** [[TextRun]]s and `<a>` text lengths of nodes, each computed once from
+    * its children's: only valid while the tree does not change. */
+  private final class TextStats {
+    private val runs = new java.util.IdentityHashMap[Node, TextRun]()
+    private val links = new java.util.IdentityHashMap[Node, Integer]()
+
+    /** The run of `n.textContent`; its length is `textLength(n)`. */
+    def run(n: Node): TextRun = {
+      var r = runs.get(n)
+      if (r == null) {
+        r = TextRun.of(n.text)
+        val cs = n.children
+        var i = 0
+        while (i < cs.length) { val c = cs(i); r = r ++ run(c) ++ TextRun.of(c.tail); i += 1 }
+        runs.put(n, r)
+      }
+      r
+    }
+
+    /** Sum of textLength over the strict `<a>` descendants of `n`. */
+    private def linkLength(n: Node): Int = {
+      val m = links.get(n)
+      if (m != null) return m
+      var sum = 0
+      val cs = n.children
+      var i = 0
+      while (i < cs.length) {
+        val c = cs(i)
+        if (c.tag == "a") sum += run(c).length
+        sum += linkLength(c)
+        i += 1
+      }
+      links.put(n, sum)
+      sum
+    }
+
+    /** getLinkDensity(elem). */
+    def linkDensity(elem: Node): Double = linkLength(elem).toDouble / math.max(run(elem).length, 1)
+  }
+
   private def removeUnlikelyCandidates(): Unit = {
     doc.descendants(null).foreach { elem =>
-      if (elem.parent != null && elem.attachedTo(doc)) {
-        val attrs = List(elem.get("class"), elem.get("id"))
-          .filter(a => a != null && a.nonEmpty).mkString(" ")
-        if (attrs.length >= 2 && !FrameTags.contains(elem.tag) &&
-          UnlikelyCandidates.matcher(attrs).find() &&
-          !OkMaybeCandidate.matcher(attrs).find())
+      // the reference matches "class id" joined by a space; no word contains
+      // a space, so matching each part separately is the same test
+      val cls = elem.get("class")
+      val id = elem.get("id")
+      val cLen = if (cls == null) 0 else cls.length
+      val iLen = if (id == null) 0 else id.length
+      if (cLen + iLen + (if (cLen > 0 && iLen > 0) 1 else 0) >= 2 && !FrameTags.contains(elem.tag)) {
+        val c = if (cLen > 0) AsciiWords.lower(cls) else ""
+        val i = if (iLen > 0) AsciiWords.lower(id) else ""
+        if ((UnlikelyCandidates.in(c) || UnlikelyCandidates.in(i)) &&
+          !OkMaybeCandidate.in(c) && !OkMaybeCandidate.in(i) &&
+          elem.parent != null && elem.attachedTo(doc))
           Dom.dropTree(elem)
       }
     }
@@ -113,11 +165,14 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
   private def scoreParagraphs(): (java.util.IdentityHashMap[Node, Candidate], List[Node]) = {
     val candidates = new java.util.IdentityHashMap[Node, Candidate]()
     val ordered = mutable.ListBuffer.empty[Node]
+    // nothing mutates the tree while the pass scores it
+    val texts = new TextStats
     tags(doc, "p", "pre", "td").foreach { elem =>
       val parentNode = elem.getparent
       if (parentNode != null) {
         val grandParent = parentNode.getparent
-        val elemText = Option(trim(elem.textContent)).getOrElse("")
+        // length and commas of trim(text_content()), which only touches whitespace
+        val elemText = texts.run(elem)
         val elemTextLen = elemText.length
         if (elemTextLen >= minTextLength) {
           if (!candidates.containsKey(parentNode)) {
@@ -128,7 +183,8 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
             candidates.put(grandParent, scoreNode(grandParent))
             ordered += grandParent
           }
-          val score = 1 + elemText.split(",", -1).length + math.min(elemTextLen / 100.0, 3.0)
+          // split(",").length == commas + 1
+          val score = 1 + (elemText.commas + 1) + math.min(elemTextLen / 100.0, 3.0)
           candidates.get(parentNode).score += score
           if (grandParent != null) candidates.get(grandParent).score += score / 2
         }
@@ -136,7 +192,7 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
     }
     ordered.foreach { elem =>
       val c = candidates.get(elem)
-      c.score *= (1 - getLinkDensity(elem))
+      c.score *= (1 - texts.linkDensity(elem))
     }
     (candidates, ordered.toList)
   }
@@ -168,18 +224,6 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
       if (append) output.append(sibling)
     }
     output
-  }
-
-  /** Debug: one ruthless scoring pass, print top candidates. */
-  def debugDump(): Unit = {
-    tags(doc, "script", "style").foreach(i => if (i.parent != null) Dom.dropTree(i))
-    removeUnlikelyCandidates()
-    transformMisusedDivs()
-    val (candidates, ordered) = scoreParagraphs()
-    println(s"DBG candidates=${ordered.length}")
-    ordered.map(candidates.get).sortBy(c => -c.score).take(8).foreach { c =>
-      println(f"DBG  cand <${c.elem.tag} class=${c.elem.get("class","")} id=${c.elem.get("id","")}> score=${c.score}%.1f textLen=${textLength(c.elem)}")
-    }
   }
 
   /** summary() (readability_lxml.py:133-173): returns the cleaned article
@@ -215,8 +259,6 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
     null // unreachable
   }
 
-  private val TextCleanElems = Set("p", "img", "li", "a", "embed", "input")
-
   private def sanitize(node: Node,
       candidates: java.util.IdentityHashMap[Node, Candidate]): Node = {
     tags(node, "h1", "h2", "h3", "h4", "h5", "h6").foreach { header =>
@@ -234,27 +276,37 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
         if (!allowed.contains(elem) && (elem.attachedTo(node))) {
           val weight = classWeight(elem)
           var score = if (candidates.containsKey(elem)) candidates.get(elem).score else 0.0
+          // fresh per element: the judgement before may have dropped nodes
+          val texts = new TextStats
           if (weight + score < 0) {
             Dom.dropTree(elem)
-          } else if (elem.textContent.count(_ == ',') < 10) {
+          } else if (texts.run(elem).commas < 10) {
             var toRemove = false
-            val counts = mutable.Map.empty[String, Int]
-            TextCleanElems.foreach(k => counts(k) = elem.descendants(Set(k)).length)
-            counts("li") -= 100
-            counts("input") -= elem.descendants(TagInput).count(_.get("type") == "hidden")
-            val contentLength = textLength(elem)
-            val linkDensity = getLinkDensity(elem)
+            var (p, img, li, input, embed) = (0, 0, 0, 0, 0)
+            elem.foreachNode { d =>
+              if (d ne elem) d.tag match {
+                case "p" => p += 1
+                case "img" => img += 1
+                case "li" => li += 1
+                case "embed" => embed += 1
+                case "input" => if (d.get("type") != "hidden") input += 1
+                case _ =>
+              }
+            }
+            li -= 100
+            val contentLength = texts.run(elem).length
+            val linkDensity = texts.linkDensity(elem)
             val parentNode = elem.getparent
             if (parentNode != null)
               score = if (candidates.containsKey(parentNode)) candidates.get(parentNode).score else 0.0
-            if (counts("p") > 0 && counts("img") > 1 + counts("p") * 1.3) toRemove = true
-            else if (counts("li") > counts("p") && !ListTags.contains(elem.tag)) toRemove = true
-            else if (counts("input") > counts("p") / 3.0) toRemove = true
-            else if (contentLength < minTextLength && counts("img") == 0) toRemove = true
-            else if (contentLength < minTextLength && counts("img") > 2) toRemove = true
+            if (p > 0 && img > 1 + p * 1.3) toRemove = true
+            else if (li > p && !ListTags.contains(elem.tag)) toRemove = true
+            else if (input > p / 3.0) toRemove = true
+            else if (contentLength < minTextLength && img == 0) toRemove = true
+            else if (contentLength < minTextLength && img > 2) toRemove = true
             else if (weight < 25 && linkDensity > 0.2) toRemove = true
             else if (weight >= 25 && linkDensity > 0.5) toRemove = true
-            else if ((counts("embed") == 1 && contentLength < 75) || counts("embed") > 1) toRemove = true
+            else if ((embed == 1 && contentLength < 75) || embed > 1) toRemove = true
             else if (contentLength == 0) {
               toRemove = true
               // sibling rescue (readability_lxml.py:423-441)
@@ -292,7 +344,97 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
   }
 }
 
+/** What `trim` (collapse whitespace runs to one space, strip the ends) leaves
+  * of a string, as counts: `length` is `trim(s).length` and `commas` counts
+  * ','. Runs concatenate (`++`), so a node's run is built from its
+  * children's, and `length` over a node's text content equals
+  * `Node.trimmedTextLength`. */
+private[graft] final case class TextRun(nonWs: Int, gaps: Int, lead: Boolean, trail: Boolean,
+    commas: Int) {
+  // nonWs: non-whitespace chars; gaps: whitespace runs with text on both
+  // sides; lead/trail: whitespace before the first / after the last
+  // non-whitespace char (for an all-whitespace string: whether it has any)
+  def length: Int = nonWs + gaps
+
+  def ++(b: TextRun): TextRun =
+    if (nonWs == 0) TextRun(b.nonWs, b.gaps, lead || b.lead, if (b.nonWs == 0) trail || b.trail else b.trail,
+      commas + b.commas)
+    else if (b.nonWs == 0) TextRun(nonWs, gaps, lead, trail || b.trail, commas + b.commas)
+    else TextRun(nonWs + b.nonWs, gaps + b.gaps + (if (trail || b.lead) 1 else 0), lead, b.trail,
+      commas + b.commas)
+}
+
+private[graft] object TextRun {
+  val Empty: TextRun = TextRun(0, 0, lead = false, trail = false, 0)
+
+  def of(s: String): TextRun = {
+    if (s == null || s.isEmpty) return Empty
+    var nonWs = 0
+    var gaps = 0
+    var lead = false
+    var pending = false
+    var commas = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (graft.text.TextUtils.isPyWhitespace(c)) {
+        if (nonWs == 0) lead = true
+        pending = true
+      } else {
+        if (pending && nonWs > 0) gaps += 1
+        pending = false
+        nonWs += 1
+        if (c == ',') commas += 1
+      }
+      i += 1
+    }
+    TextRun(nonWs, gaps, lead, pending, commas)
+  }
+}
+
+/** A `(?i)w1|w2|…` find() over literal lower-case ASCII words. Without
+  * UNICODE_CASE, Java's `(?i)` folds only US-ASCII letters, so the pattern
+  * matches exactly where the ASCII-lower-cased input contains one of the
+  * words: U+212A, U+017F, U+0130 and U+0131 stay distinct from k, s and i. */
+private[graft] final class AsciiWords(words: String*) {
+  private val ws = words.toArray
+  /** True iff `lower` (already [[AsciiWords.lower]]-ed) contains a word. */
+  def in(lower: String): Boolean = {
+    var i = 0
+    while (i < ws.length) { if (lower.indexOf(ws(i)) >= 0) return true; i += 1 }
+    false
+  }
+  def find(s: String): Boolean = in(AsciiWords.lower(s))
+}
+
+private[graft] object AsciiWords {
+  /** `s` with A-Z mapped to a-z and every other char kept; `s` itself when
+    * it has no upper-case ASCII letter. */
+  def lower(s: String): String = {
+    var i = 0
+    while (i < s.length && !(s.charAt(i) >= 'A' && s.charAt(i) <= 'Z')) i += 1
+    if (i == s.length) s
+    else {
+      val cs = s.toCharArray
+      while (i < cs.length) { if (cs(i) >= 'A' && cs(i) <= 'Z') cs(i) = (cs(i) + 32).toChar; i += 1 }
+      new String(cs)
+    }
+  }
+}
+
 object Readability {
+  // the REGEXES table of the reference's readability fork
+  private[graft] val UnlikelyCandidates = new AsciiWords("combx", "comment", "community",
+    "disqus", "extra", "foot", "header", "menu", "remark", "rss", "shoutbox", "sidebar",
+    "sponsor", "ad-break", "agegate", "pagination", "pager", "popup", "tweet", "twitter")
+  private[graft] val OkMaybeCandidate = new AsciiWords("and", "article", "body", "column",
+    "main", "shadow")
+  private[graft] val PositiveWords = new AsciiWords("article", "body", "content", "entry",
+    "hentry", "main", "page", "pagination", "post", "text", "blog", "story")
+  private[graft] val NegativeWords = new AsciiWords("combx", "comment", "com-", "contact",
+    "foot", "footer", "footnote", "masthead", "media", "meta", "outbrain", "promo", "related",
+    "scroll", "shoutbox", "sidebar", "sponsor", "shopping", "tags", "tool", "widget")
+
   /** try_readability (external.py:37-46). */
   def tryReadability(htmlTree: Node): Node = {
     try {

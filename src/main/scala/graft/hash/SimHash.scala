@@ -6,7 +6,13 @@ import graft.text.TextUtils
 object SimHash {
 
   /** Python string.punctuation. */
-  private val Punct = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~".toSet
+  // string.punctuation, as a table over ASCII (a Set[Char] boxes per lookup)
+  private val Punct: Array[Boolean] = {
+    val t = new Array[Boolean](128)
+    "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~".foreach(c => t(c) = true)
+    t
+  }
+  @inline private def isPunct(c: Char): Boolean = c < 128 && Punct(c)
 
   /** Python str.split() whitespace: Java's class plus the no-break spaces
     * Java excludes (see sampleTokens scaladoc) and U+0085 NEL, which Python
@@ -59,8 +65,8 @@ object SimHash {
         // strip leading/trailing ASCII punctuation (string.punctuation)
         var a = i
         var b = j
-        while (a < b && Punct.contains(input.charAt(a))) a += 1
-        while (b > a && Punct.contains(input.charAt(b - 1))) b -= 1
+        while (a < b && isPunct(input.charAt(a))) a += 1
+        while (b > a && isPunct(input.charAt(b - 1))) b -= 1
         if (b > a) {
           var k = a
           var alnum = true
@@ -138,9 +144,10 @@ object SimHash {
       val token = toks(ti)
       ti += 1
       val th = tokenHashMemo(token)
+      // +1 for a set bit, -1 for a clear one, without a branch per bit
       var i = 0
       while (i < 64) {
-        if ((th & (1L << i)) != 0) vector(i) += 1 else vector(i) -= 1
+        vector(i) += (((th >>> i).toInt & 1) << 1) - 1
         i += 1
       }
     }

@@ -24,6 +24,7 @@ final case class DocMeta(
 object Metadata {
   private val TagMeta = Set("meta")
   private val TagLink = Set("link")
+  private val TagScript = Set("script")
 
   private val MetanameAuthor = Set(
     "article:author", "atc-metaauthor", "author", "authors", "byl", "citation_author",
@@ -144,9 +145,11 @@ object Metadata {
       Selectors.ac(n, "class", "title") || Selectors.ac(n, "id", "title"))
   )
 
+  private val AuthorTags = Set("a", "address", "div", "link", "p", "span", "strong")
+
   private val authorRules: List[Rule] = List(
     Rule(null, n =>
-      (Set("a", "address", "div", "link", "p", "span", "strong").contains(n.tag) &&
+      (AuthorTags.contains(n.tag) &&
         (Selectors.aeq(n, "rel", "author") || Selectors.aeq(n, "id", "author") ||
           Selectors.aeq(n, "class", "author") || Selectors.aeq(n, "itemprop", "author name") ||
           Selectors.ac(n, "class", "author-name") || Selectors.ac(n, "class", "AuthorName") ||
@@ -185,9 +188,12 @@ object Metadata {
     Rule(Set("time", "figure"), _ => true)
   )
 
-  private val categoriesRules: List[Rule] = List(
-    Rule(Set("div"), n => List("post-info", "postinfo", "post-meta", "postmeta", "meta",
-      "entry-meta", "entry-info", "entry-utility").exists(p => Selectors.asw(n, "class", p)) ||
+  private val CategoryClassPrefixes = Array("post-info", "postinfo", "post-meta", "postmeta",
+    "meta", "entry-meta", "entry-info", "entry-utility")
+
+  // arrays: extractCatstags tests every rule on every node by index
+  private val categoriesRules: Array[Rule] = Array(
+    Rule(Set("div"), n => CategoryClassPrefixes.exists(p => Selectors.asw(n, "class", p)) ||
       Selectors.asw(n, "id", "postpath")),
     Rule(Set("p"), n => Selectors.asw(n, "class", "postmeta") || Selectors.asw(n, "class", "entry-categories") ||
       Selectors.aeq(n, "class", "postinfo") || Selectors.aeq(n, "id", "filedunder")),
@@ -198,7 +204,7 @@ object Metadata {
     Rule(Set("div"), n => Selectors.aeq(n, "class", "row") || Selectors.aeq(n, "class", "tags"))
   )
 
-  private val tagsRules: List[Rule] = List(
+  private val tagsRules: Array[Rule] = Array(
     Rule(Set("div"), n => Selectors.aeq(n, "class", "tags")),
     Rule(Set("p"), n => Selectors.asw(n, "class", "entry-tags")),
     Rule(Set("div"), n => Selectors.aeq(n, "class", "row") || Selectors.aeq(n, "class", "jp-relatedposts") ||
@@ -622,7 +628,7 @@ object Metadata {
     var m = examineMeta(tree)
     if (m.author != null && !m.author.contains(" ")) m = m.copy(author = null)
     // JSON-LD overrides (metadata.py:500-505)
-    tree.iterList(Set("script")).foreach { elem =>
+    tree.iterList(TagScript).foreach { elem =>
       val t = elem.get("type")
       if ((t == "application/ld+json" || t == "application/settings+json") &&
         elem.text != null && elem.text.nonEmpty) {

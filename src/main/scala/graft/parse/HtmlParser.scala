@@ -28,6 +28,8 @@ object HtmlParser {
 
   private val HeadOnlyElems = Set("title", "base", "link", "meta", "style")
 
+  private val TableSections = Set("thead", "tbody", "tfoot", "tr", "td", "th")
+
   // ------------------------------------------------------------------ public
 
   /** lxml.html.fromstring equivalent: full documents return the <html> root;
@@ -255,7 +257,7 @@ object HtmlParser {
   private def setAttrs(n: Node, attrs: scala.collection.Seq[(String, String)]): Unit = {
     if (attrs.nonEmpty) {
       val it = attrs.iterator
-      while (it.hasNext) { val kv = it.next(); if (!n.has(kv._1)) n.set(kv._1, kv._2) }
+      while (it.hasNext) { val kv = it.next(); n.setIfAbsent(kv._1, kv._2) }
     }
   }
 
@@ -269,6 +271,28 @@ object HtmlParser {
     private var headClosed = false
 
     private def cur: Node = stack.last
+
+    // head is only ever pushed onto a root-level stack, so when open it sits
+    // at index 1 (this replaces a linear stack.contains(head) per start tag)
+    private def headOpen: Boolean = head != null && stack.length > 1 && (stack(1) eq head)
+
+    /** Index of the topmost open element tagged `tag`, or -1. */
+    private def lastOpen(tag: String): Int = {
+      var i = stack.length - 1
+      while (i >= 0 && stack(i).tag != tag) i -= 1
+      i
+    }
+
+    /** True if an element above stack index `i` is tagged t1, t2 or t3. */
+    private def openAbove(i: Int, t1: String, t2: String, t3: String): Boolean = {
+      var j = i + 1
+      while (j < stack.length) {
+        val t = stack(j).tag
+        if (t == t1 || t == t2 || t == t3) return true
+        j += 1
+      }
+      false
+    }
 
     private def ensureBody(): Unit = {
       if (body == null) {
@@ -290,7 +314,7 @@ object HtmlParser {
           return
         case "head" =>
           ensureHead()
-          if (head != null && !stack.contains(head)) { popToRootLevel(); stack += head }
+          if (head != null && !headOpen) { popToRootLevel(); stack += head }
           if (head != null) setAttrs(head, attrs)
           return
         case "body" =>
@@ -298,7 +322,7 @@ object HtmlParser {
           if (body == null) { body = new Node("body"); root.append(body) }
           popToRootLevel()
           stack += body
-          attrs.foreach { case (k, v) => if (!body.has(k)) body.set(k, v) }
+          setAttrs(body, attrs)
           return
         case _ =>
       }
@@ -313,7 +337,7 @@ object HtmlParser {
         } else {
           ensureBody()
         }
-      } else if (head != null && stack.contains(head) && !HeadOnlyElems.contains(name) &&
+      } else if (headOpen && !HeadOnlyElems.contains(name) &&
         !RawTextElems.contains(name) && name != "noscript") {
         // non-head content while head open -> close head, open body
         closeHead()
@@ -337,14 +361,14 @@ object HtmlParser {
     private def autoClose(name: String): Unit = {
       // p closed by block elements
       if (ClosesP.contains(name)) {
-        val i = stack.lastIndexWhere(_.tag == "p")
-        if (i > 0 && !stack.drop(i + 1).exists(n => n.tag == "table" || n.tag == "td" || n.tag == "th"))
+        val i = lastOpen("p")
+        if (i > 0 && !openAbove(i, "table", "td", "th"))
           stack.remove(i, stack.length - i)
       }
       name match {
         case "li" =>
-          val i = stack.lastIndexWhere(_.tag == "li")
-          if (i > 0 && !stack.drop(i + 1).exists(n => n.tag == "ol" || n.tag == "ul"))
+          val i = lastOpen("li")
+          if (i > 0 && !openAbove(i, "ol", "ul", null))
             stack.remove(i, stack.length - i)
         case "dt" | "dd" =>
           val i = stack.lastIndexWhere(n => n.tag == "dt" || n.tag == "dd")
@@ -362,10 +386,10 @@ object HtmlParser {
             if (anchor < i) stack.remove(i, stack.length - i)
           }
         case "thead" | "tbody" | "tfoot" =>
-          val i = stack.lastIndexWhere(n => Set("thead", "tbody", "tfoot", "tr", "td", "th").contains(n.tag))
+          val i = stack.lastIndexWhere(n => TableSections.contains(n.tag))
           if (i > 0) stack.remove(i, stack.length - i)
         case "option" =>
-          val i = stack.lastIndexWhere(_.tag == "option")
+          val i = lastOpen("option")
           if (i > 0) stack.remove(i, stack.length - i)
         case _ =>
       }
@@ -387,7 +411,7 @@ object HtmlParser {
         case "body" => popToRootLevel(); return
         case _ =>
       }
-      val i = stack.lastIndexWhere(_.tag == name)
+      val i = lastOpen(name)
       if (i > 0) stack.remove(i, stack.length - i)
       // unmatched end tag: ignored (libxml2 recovery)
     }
@@ -423,11 +447,12 @@ object HtmlParser {
   private def tokenize(s: String, b: Builder): Unit = tokenizeTo(s, b)
 
 
-  /** Canonical lowercase strings for common tag/attr names, indexed by
-    * length: a case-insensitive region match returns the shared instance,
-    * skipping the substring + toLowerCase per tag (AllocProf). Non-ASCII /
-    * uncommon names fall through to the allocating path. */
-  private val InternByLen: Array[Array[String]] = {
+  /** Canonical lowercase strings for common tag/attr names in an
+    * open-addressing table keyed by the ASCII-lower-cased name: an ASCII name
+    * costs one hash and one compare and returns the shared instance, skipping
+    * the substring + toLowerCase per tag (AllocProf). Non-ASCII / uncommon
+    * names fall through to the allocating path. */
+  private val InternNames: Array[String] = {
     val names = Array(
       "a", "b", "i", "p", "q", "u", "s",
       "br", "dd", "dl", "dt", "em", "h1", "h2", "h3", "h4", "h5", "h6", "hr",
@@ -444,30 +469,45 @@ object HtmlParser {
       "datalist", "details", "noscript", "picture", "property", "section",
       "summary", "template", "textarea", "blockquote", "fieldset", "figcaption",
       "datetime", "itemprop", "optgroup", "progress")
-    val maxLen = names.map(_.length).max
-    val byLen = new Array[Array[String]](maxLen + 1)
-    names.groupBy(_.length).foreach { case (l, ns) => byLen(l) = ns }
-    byLen
+    val table = new Array[String](512)
+    names.foreach { nm =>
+      var slot = internSlot(nm, 0, nm.length)
+      while (table(slot) != null) slot = (slot + 1) & (table.length - 1)
+      table(slot) = nm
+    }
+    table
+  }
+
+  @inline private def asciiLower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  /** Slot of the ASCII-lower-cased name s[from, to) in [[InternNames]]. */
+  private def internSlot(s: String, from: Int, to: Int): Int = {
+    var h = 0
+    var j = from
+    while (j < to) { h = 31 * h + asciiLower(s.charAt(j)); j += 1 }
+    (h ^ (h >>> 9)) & 511
   }
 
   private def internToken(s: String, from: Int, to: Int): String = {
-    val len = to - from
-    if (len > 0 && len < InternByLen.length) {
-      // ASCII-only fast path: regionMatches(ignoreCase) folds per-char via
-      // toUpper/toLower, which canonicalizes Unicode lookalikes (U+0131
-      // dotless i, U+0130 dotted I) onto ASCII names that String.toLowerCase
-      // keeps distinct — any non-ASCII char falls through to the slow path
-      var ascii = true
-      var j = from
-      while (ascii && j < to) { if (s.charAt(j) >= 0x80) ascii = false; j += 1 }
-      val cands = if (ascii) InternByLen(len) else null
-      if (cands != null) {
-        var i = 0
-        while (i < cands.length) {
-          val c = cands(i)
-          if (s.regionMatches(true, from, c, 0, len)) return c
-          i += 1
+    // ASCII-only fast path: a case-insensitive match against the table would
+    // also fold Unicode lookalikes (U+0131 dotless i, U+0130 dotted I) onto
+    // ASCII names that String.toLowerCase keeps distinct, so any non-ASCII
+    // char takes the slow path
+    var ascii = true
+    var j = from
+    while (ascii && j < to) { if (s.charAt(j) >= 0x80) ascii = false; j += 1 }
+    if (ascii && to > from) {
+      val len = to - from
+      var slot = internSlot(s, from, to)
+      var c = InternNames(slot)
+      while (c != null) {
+        if (c.length == len) {
+          var k = 0
+          while (k < len && asciiLower(s.charAt(from + k)) == c.charAt(k)) k += 1
+          if (k == len) return c
         }
+        slot = (slot + 1) & (InternNames.length - 1)
+        c = InternNames(slot)
       }
     }
     s.substring(from, to).toLowerCase
@@ -502,8 +542,8 @@ object HtmlParser {
           val j = i + 2
           if (j < n && Character.isLetter(s.charAt(j))) {
             flushText()
-            var k = j
-            while (k < n && s.charAt(k) != '>') k += 1
+            val gt = s.indexOf('>', j)
+            val k = if (gt < 0) n else gt
             // trim + first-whitespace-run cut via indices (was 3 copies)
             var a0 = j
             while (a0 < k && Character.isWhitespace(s.charAt(a0))) a0 += 1
@@ -531,7 +571,13 @@ object HtmlParser {
         val dec = Entities.decodeRef(s, i)
         if (dec != null) { text.append(dec._1); i = dec._2 }
         else { text.append(c); i += 1 }
-      } else { text.append(c); i += 1 }
+      } else {
+        // a run of plain text up to the next markup or reference
+        var j = i + 1
+        while (j < n && s.charAt(j) != '<' && s.charAt(j) != '&') j += 1
+        text.append(s, i, j)
+        i = j
+      }
     }
     flushText()
   }
@@ -540,21 +586,17 @@ object HtmlParser {
     val n = s.length
     val target = "</" + name
     val tLen = target.length
-    var i = from
-    while (i + tLen <= n) {
-      var k = 0
-      var ok = true
-      while (ok && k < tLen) {
-        val a = Character.toLowerCase(s.charAt(i + k))
-        if (a != target.charAt(k)) ok = false
-        k += 1
-      }
-      if (ok) {
+    // only '<' lower-cases to '<', so a match can start only at a '<'
+    var i = s.indexOf('<', from)
+    while (i >= 0 && i + tLen <= n) {
+      var k = 1
+      while (k < tLen && Character.toLowerCase(s.charAt(i + k)) == target.charAt(k)) k += 1
+      if (k == tLen) {
         val after = i + tLen
         if (after >= n || s.charAt(after) == '>' || TextUtils.isPyWhitespace(s.charAt(after)))
           return i
       }
-      i += 1
+      i = s.indexOf('<', i + 1)
     }
     n
   }
@@ -600,8 +642,8 @@ object HtmlParser {
             if (j < n && (s.charAt(j) == '"' || s.charAt(j) == '\'')) {
               val q = s.charAt(j)
               val vStart = j + 1
-              var k = vStart
-              while (k < n && s.charAt(k) != q) k += 1
+              val close = s.indexOf(q, vStart)
+              val k = if (close < 0) n else close
               aValue = Entities.unescape(s.substring(vStart, math.min(k, n)))
               i = if (k < n) k + 1 else n
             } else {

@@ -13,7 +13,11 @@ object Selectors {
 
   /** One XPath expression: optional tag restriction + attribute predicate. */
   final case class Rule(tags: Set[String], pred: Pred) {
-    def matches(n: Node): Boolean = (tags == null || tags.contains(n.tag)) && pred(n)
+    // a String-typed hash set: Set1..Set4 compare through BoxesRunTime.equals,
+    // and every rule runs on every node
+    private val tagSet: java.util.Set[String] =
+      if (tags == null) null else { val s = new java.util.HashSet[String]; tags.foreach(s.add); s }
+    def matches(n: Node): Boolean = (tagSet == null || tagSet.contains(n.tag)) && pred(n)
   }
 
   @inline private def a(n: Node, attr: String): String = n.get(attr)
@@ -32,12 +36,12 @@ object Selectors {
   /** contains(translate(@attr, FROM, to), s): per-char mapping then contains. */
   @inline def acT(n: Node, attr: String, from: String, to: String, s: String): Boolean = {
     val v = a(n, attr)
-    v != null && translate(v, from, to).contains(s)
+    v != null && translatedIndexOf(v, from, to, s, v.length) >= 0
   }
   /** starts-with(translate(@attr, FROM, to), s). */
   @inline def aswT(n: Node, attr: String, from: String, to: String, s: String): Boolean = {
     val v = a(n, attr)
-    v != null && translate(v, from, to).startsWith(s)
+    v != null && translatedIndexOf(v, from, to, s, 0) == 0
   }
   def translate(v: String, from: String, to: String): String = {
     val sb = new java.lang.StringBuilder(v.length)
@@ -50,6 +54,33 @@ object Selectors {
       i += 1
     }
     sb.toString
+  }
+
+  /** `translate(v, from, to).indexOf(s)` if that is at most `maxStart`,
+    * else -1, without building the translated string. A `to` shorter than
+    * `from` deletes characters and shifts positions, so that case
+    * translates first. */
+  private[select] def translatedIndexOf(v: String, from: String, to: String, s: String,
+      maxStart: Int): Int = {
+    if (from.length > to.length) {
+      val i = translate(v, from, to).indexOf(s)
+      return if (i <= maxStart) i else -1
+    }
+    val last = math.min(maxStart, v.length - s.length)
+    var i = 0
+    while (i <= last) {
+      var k = 0
+      while (k < s.length && translated(v.charAt(i + k), from, to) == s.charAt(k)) k += 1
+      if (k == s.length) return i
+      i += 1
+    }
+    -1
+  }
+
+  /** One character through a non-deleting translate(…, from, to). */
+  @inline private def translated(c: Char, from: String, to: String): Char = {
+    val idx = from.indexOf(c)
+    if (idx >= 0) to.charAt(idx) else c
   }
 
   /** All strict descendants matching the rule, document order (`.//…`). */
