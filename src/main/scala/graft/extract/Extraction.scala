@@ -285,6 +285,8 @@ object Extraction {
   * sanitize_tree post-processing. */
 object Fallbacks {
   private val TagCells = Set("td", "th", "tr")
+  private val TeiValidTags = Set("ab", "body", "cell", "code", "del", "div", "graphic", "head",
+    "hi", "item", "lb", "list", "p", "quote", "ref", "row", "table")
   /** try_readability (external.py:37-46). */
   def tryReadability(backupTree: Node): Node = Readability.tryReadability(backupTree)
 
@@ -316,8 +318,6 @@ object Fallbacks {
         case _ =>
       }
     }
-    val TeiValidTags = Set("ab", "body", "cell", "code", "del", "div", "graphic", "head",
-      "hi", "item", "lb", "list", "p", "quote", "ref", "row", "table")
     val sanitizationList = tree.iterList(null).map(_.tag).distinct.filterNot(TeiValidTags.contains)
     Dom.stripTags(tree, sanitizationList: _*)
     val text = Option(TextUtils.trim(tree.itertext.mkString(" "))).getOrElse("")

@@ -24,7 +24,6 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
   private val StructureScores = Set("h1", "h2", "h3", "h4", "h5", "h6", "th", "header", "footer", "nav")
   private val FrameTags = Set("body", "html")
   private val ListTags = Set("ol", "ul")
-  private val TagA = Set("a")
   // the regex '<(a|blockquote|dl|div|img|ol|p|pre|table|ul)' matches prefixes
   private val DivToPPrefix = List("a", "blockquote", "dl", "div", "img", "ol", "p", "table", "ul")
 
@@ -69,11 +68,7 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
     new Candidate(score, elem)
   }
 
-  private def getLinkDensity(elem: Node): Double = {
-    val total = math.max(textLength(elem), 1)
-    val linkLength = elem.descendants(TagA).map(textLength).sum
-    linkLength.toDouble / total
-  }
+  private def getLinkDensity(elem: Node): Double = new TextStats().linkDensity(elem)
 
   /** [[TextRun]]s and `<a>` text lengths of nodes, each computed once from
     * its children's: only valid while the tree does not change. */
@@ -111,7 +106,7 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
       sum
     }
 
-    /** getLinkDensity(elem). */
+    /** `<a>` text length over text length (the fork's get_link_density). */
     def linkDensity(elem: Node): Double = linkLength(elem).toDouble / math.max(run(elem).length, 1)
   }
 
@@ -404,7 +399,6 @@ private[graft] final class AsciiWords(words: String*) {
     while (i < ws.length) { if (lower.indexOf(ws(i)) >= 0) return true; i += 1 }
     false
   }
-  def find(s: String): Boolean = in(AsciiWords.lower(s))
 }
 
 private[graft] object AsciiWords {

@@ -471,7 +471,7 @@ object HtmlParser {
       "datetime", "itemprop", "optgroup", "progress")
     val table = new Array[String](512)
     names.foreach { nm =>
-      var slot = internSlot(nm, 0, nm.length)
+      var slot = internSlot(nm.hashCode)
       while (table(slot) != null) slot = (slot + 1) & (table.length - 1)
       table(slot) = nm
     }
@@ -480,13 +480,8 @@ object HtmlParser {
 
   @inline private def asciiLower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
 
-  /** Slot of the ASCII-lower-cased name s[from, to) in [[InternNames]]. */
-  private def internSlot(s: String, from: Int, to: Int): Int = {
-    var h = 0
-    var j = from
-    while (j < to) { h = 31 * h + asciiLower(s.charAt(j)); j += 1 }
-    (h ^ (h >>> 9)) & 511
-  }
+  /** Slot in [[InternNames]] of a lower-case name with String hash `h`. */
+  private def internSlot(h: Int): Int = (h ^ (h >>> 9)) & 511
 
   private def internToken(s: String, from: Int, to: Int): String = {
     // ASCII-only fast path: a case-insensitive match against the table would
@@ -494,11 +489,16 @@ object HtmlParser {
     // ASCII names that String.toLowerCase keeps distinct, so any non-ASCII
     // char takes the slow path
     var ascii = true
+    var h = 0
     var j = from
-    while (ascii && j < to) { if (s.charAt(j) >= 0x80) ascii = false; j += 1 }
+    while (ascii && j < to) {
+      val ch = s.charAt(j)
+      if (ch >= 0x80) ascii = false else h = 31 * h + asciiLower(ch)
+      j += 1
+    }
     if (ascii && to > from) {
       val len = to - from
-      var slot = internSlot(s, from, to)
+      var slot = internSlot(h)
       var c = InternNames(slot)
       while (c != null) {
         if (c.length == len) {
@@ -607,12 +607,16 @@ object HtmlParser {
     if (gt < 0) s.length else gt + 1
   }
 
+  private def isTagNameChar(c: Char): Boolean =
+    if (c < 0x80) (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '-' || c == ':'
+    else Character.isLetterOrDigit(c)
+
   /** Parse a start tag beginning after '<'. Returns (name, attrs, selfClosing, nextIndex). */
   private def parseTag(s: String, from: Int): (String, scala.collection.Seq[(String, String)], Boolean, Int) = {
     val n = s.length
     var i = from
     val nameStart = i
-    while (i < n && (Character.isLetterOrDigit(s.charAt(i)) || s.charAt(i) == '-' || s.charAt(i) == ':')) i += 1
+    while (i < n && isTagNameChar(s.charAt(i))) i += 1
     val name = internToken(s, nameStart, i)
     // lazy: most tags carry no attributes — don't allocate the buffer for them
     var attrs: scala.collection.mutable.ArrayBuffer[(String, String)] = null

@@ -13,7 +13,10 @@ object TextUtils {
     * deliberately excludes the non-breaking spaces (U+00A0, U+2007, U+202F)
     * and U+0085, which Python includes. */
   def isPyWhitespace(c: Char): Boolean =
-    Character.isWhitespace(c) || c == '\u00a0' || c == '\u0085' || c == '\u2007' || c == '\u202f'
+    // ASCII answered inline (\t..\r, \u001c..\u001f, ' '): this runs per char
+    if (c <= ' ') c == ' ' || (c >= '\t' && c <= '\r') || c >= '\u001c'
+    else c >= 0x80 &&
+      (Character.isWhitespace(c) || c == '\u00a0' || c == '\u0085' || c == '\u2007' || c == '\u202f')
 
   def isAllWhitespace(s: String): Boolean = {
     if (s == null || s.isEmpty) return false // Python ''.isspace() is False
