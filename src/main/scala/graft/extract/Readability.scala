@@ -112,8 +112,8 @@ final class Readability(var doc: Node, minTextLength: Int = 25, retryLength: Int
 
   private def removeUnlikelyCandidates(): Unit = {
     doc.descendants(null).foreach { elem =>
-      // the reference matches "class id" joined by a space; no word contains
-      // a space, so matching each part separately is the same test
+      // the reference tests "class id" joined by a space (its length, then
+      // the regexes); no word contains a space, so each part is matched alone
       val cls = elem.get("class")
       val id = elem.get("id")
       val cLen = if (cls == null) 0 else cls.length

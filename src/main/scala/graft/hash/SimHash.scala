@@ -5,8 +5,8 @@ import graft.text.TextUtils
 /** Charikar simhash + token sampling (hashing.py:14-135). */
 object SimHash {
 
-  /** Python string.punctuation. */
-  // string.punctuation, as a table over ASCII (a Set[Char] boxes per lookup)
+  /** Python string.punctuation, as a table over ASCII (a Set[Char] boxes
+    * per lookup). */
   private val Punct: Array[Boolean] = {
     val t = new Array[Boolean](128)
     "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~".foreach(c => t(c) = true)
