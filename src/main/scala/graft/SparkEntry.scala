@@ -61,21 +61,18 @@ object SparkEntry {
     // so every planted (a, a+1M) hamming-0 pair MUST survive the band join
     // — DuckDB predicts the full set without computing simhash (the mutated-
     // corpus variant is spec-pinned against brute-force all-pairs hamming)
-    "dedup_simhash" -> ((s, dir) => {
-      val docs = DocsTables.documents(s, dir)
-      val corpus = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        .unionAll(docs.select((col("doc_id") + 1000000L).cast("long").as("doc_id"), col("text")))
-      TextOps.dedupSimhashCorpus(s, corpus, maxHamming = 3, bandCap = 0)
+    "dedup_simhash" -> ((s, dir) =>
+      TextOps.dedupSimhashCorpus(s, TextOps.duplicatedCorpus(DocsTables.documents(s, dir)),
+          maxHamming = 3, bandCap = 0)
         .filter(col("id_b") === col("id_a") + 1000000L)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-    }),
+        .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))),
     // --- end-to-end LLM-pipeline composition: extraction kernel -> near-dup
     // pairs over the EXTRACTED text -> connected components -> canonical doc
     // per cluster with member count. Proves the two halves compose; the
     // kernel's extracted text is oracle-predictable (= documents.text), so
     // DuckDB replays the whole chain with its recursive-CTE closure.
     "pipeline_dedup" -> ((s, dir) => {
-      // the kernel output is PERSISTED before fan-out: the corpus expansion
+      // the kernel output is CHECKPOINTED before fan-out: the corpus expansion
       // and final labeling otherwise re-execute extraction up to 4x (the
       // r4 scale flaw) — plan-pinned by the "pipeline_dedup runs the kernel
       // once" test

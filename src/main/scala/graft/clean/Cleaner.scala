@@ -53,7 +53,7 @@ object Cleaner {
 
   /** Cleaning configuration derived from (tables, images) — only 4 variants,
     * precomputed once per JVM: rebuilding the ~53-entry lists and their Set
-    * per document (×2 killPass calls) was measurable GC traffic (AllocProf). */
+    * per document (×2 killPass calls) was measurable GC traffic (allocation profile). */
   private final case class CleanCfg(cleaningList: List[String], cleanSet: Set[String],
       stripSet: Set[String])
   private val cleanCfgs: Map[(Boolean, Boolean), CleanCfg] = {

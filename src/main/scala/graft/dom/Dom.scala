@@ -15,7 +15,7 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Minimal insertion-ordered attribute store (parallel arrays, linear scan):
   * elements carry 0-3 attributes, so a LinkedHashMap (entry table + linked
-  * entries) per attributed node was a top GC-traffic source (AllocProf).
+  * entries) per attributed node was a top GC-traffic source (allocation profile).
   * Semantics match lxml attrib / LinkedHashMap: put keeps the original
   * position on update, iteration is insertion order.
   *
@@ -89,7 +89,7 @@ final class Node(var tag: String) {
   var tail: String = null
   var parent: Node = null
   // initial capacity 1, not the ArrayBuffer default 16: leaf nodes (half of
-  // any DOM) otherwise pay a 16-slot backing array each (AllocProf)
+  // any DOM) otherwise pay a 16-slot backing array each (allocation profile)
   val children: ArrayBuffer[Node] = new ArrayBuffer(1)
   // insertion-ordered attributes, like lxml's attrib — allocated lazily
   // (most nodes are attribute-less; an eager map table dominates GC churn)
@@ -233,7 +233,7 @@ final class Node(var tag: String) {
     * DURING the walk (one cons per match) — the old build-all-then-filter
     * shape allocated two O(n) lists per call, which dominated kernel GC
     * traffic (the extraction job is memory-bandwidth-bound at high core
-    * counts; see graft.tools.AllocProf). */
+    * counts, per the allocation profile). */
   def iterList(tags: Set[String] = null): List[Node] = collectList(tags, includeSelf = true)
 
   /** Snapshot of strict descendants (lxml descendant axis). */
@@ -274,7 +274,7 @@ final class Node(var tag: String) {
   private def collectList(tags: Set[String], includeSelf: Boolean): List[Node] = {
     // thread-local scratch: the walk itself never re-enters collectList, so
     // one growable array per thread kills the per-call buffer + growth
-    // allocations; only the result's cons cells remain (AllocProf)
+    // allocations; only the result's cons cells remain (allocation profile)
     val buf = Node.scratch.get()
     buf.clear() // defensive: also cleared on exit; a mid-walk throw (OOM,
     // stack overflow) must not leak stale nodes into the next call

@@ -8,7 +8,7 @@ import java.util.regex.Pattern
 
 /** Safety-net extractors (core.py:717-793). */
 object Baseline {
-  // hoisted tag sets: per-call Set literals were measurable GC churn (AllocProf)
+  // hoisted tag sets: per-call Set literals were measurable GC churn (allocation profile)
   private val BaselineTags = Set("blockquote", "code", "p", "pre", "q", "quote")
 
   /** JSON_SEARCH (core.py:50). */

@@ -22,7 +22,7 @@ final case class ExtractedDoc(
   * `extract`), the kernel run per row inside the Spark `mapPartitions`
   * transform. Pure Scala — no Spark types. */
 object Extraction {
-  // hoisted tag sets (per-call Set literals were GC churn — AllocProf)
+  // hoisted tag sets (per-call Set literals were GC churn — allocation profile)
   private val TagTable = Set("table")
   private val TagP = Set("p")
   private val TagHead = Set("head")

@@ -207,7 +207,7 @@ object LangId {
   /** Supported Latin-script set = WordLists keys (en de fr es it pt nl pl cs
     * tr hu sv da nb); script-range set: ru el ko ja zh ar he. Text in most
     * other languages abstains (returns null) by the margin gate above —
-    * probed: ro/fi abstain at Margin=0.15 (tools/LangProbe). The da/nb pair
+    * probed r06: ro/fi abstain at Margin=0.15. The da/nb pair
     * sits inside one dialect continuum and is resolved by the
     * disjoint-trigram tie-break rather than the margin; Nynorsk folds to nb
     * at this granularity. */
@@ -238,8 +238,8 @@ object LangId {
     counts
   }
 
-  /** Per-profile cosine scores, descending — diagnostics for profile tuning
-    * (tools/LangProbe); same pipeline as detect minus the gates. */
+  /** Per-profile cosine scores, descending — diagnostics for profile
+    * tuning; same pipeline as detect minus the gates. */
   def profileScores(text: String): Seq[(String, Double)] = {
     val counts = trigramCounts(text)
     if (counts.isEmpty) return Nil

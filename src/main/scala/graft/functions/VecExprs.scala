@@ -245,7 +245,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * N independent vec_dot calls).
   *
   * Why it exists: a projection with N separate `vec_dot(emb, lit-array)`
-  * expressions measured ~7 µs PER DOT at N=96 (r06 ProbeEmb — the
+  * expressions measured ~7 µs PER DOT at N=96 (r06 — the
   * generated projection is too large to JIT and each dot re-walks the row)
   * versus ~60 ns for the fused loop here: the input vector is read once
   * into a primitive array and all planes stream over it. */
@@ -319,7 +319,7 @@ case class VecDots(child: Expression, planesLit: Expression)
   * Spark's NaN ordering (NaN >= 0 is TRUE) and null semantics (any null
   * child element nulls every dot, hence every bucket). Exists for the same
   * reason as vec_dots: 96 separate dot expressions in one projection ran
-  * two orders of magnitude slower than this fused loop (r06 ProbeEmb). */
+  * two orders of magnitude slower than this fused loop (r06). */
 case class SrpBuckets(child: Expression, planesLit: Expression, kLit: Expression)
   extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
   with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {

@@ -35,7 +35,7 @@ object SimHash {
     * reference on common web content (ADVICE r4). Fingerprints persisted by
     * pre-r5 builds differ for NBSP-bearing docs. The fingerprint phase was
     * ~20 KB/doc of allocation, which matters because the kernel is
-    * memory-bandwidth-bound at high core counts (AllocProf). */
+    * memory-bandwidth-bound at high core counts (allocation profile). */
   def sampleTokens(input: String, length: Int = 64): List[String] = {
     val buf = sampleTokensBuf(input, length)
     var out = List.empty[String]
@@ -50,7 +50,7 @@ object SimHash {
 
   /** Internal buffer-returning variant (thread-local scratch, valid until
     * the next call on the same thread) — createHash/generateBowHash iterate
-    * it directly, skipping the per-token cons cells (AllocProf). */
+    * it directly, skipping the per-token cons cells (allocation profile). */
   private[hash] def sampleTokensBuf(input: String,
       length: Int = 64): scala.collection.mutable.ArrayBuffer[String] = {
     val toks = tokScratch.get()

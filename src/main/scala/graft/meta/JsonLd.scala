@@ -131,7 +131,6 @@ object JsonLd {
     "blog", "jobposting")
   private val PublisherSchema = Set("newsmediaorganization", "organization", "webpage", "website")
 
-  private val JsonMinify = Pattern.compile("(\"(?:\\\\\"|[^\"])*\")|\\s")
   private val JsonAuthor1 = Pattern.compile("(?s)\"author\":[^}\\[]+?\"name?\\\\?\": ?\\\\?\"([^\"\\\\]+)|\"author\"[^}\\[]+?\"names?\".+?\"([^\"]+)")
   private val JsonAuthor2 = Pattern.compile("(?s)\"[Pp]erson\"[^}]+?\"names?\".+?\"([^\"]+)")
   private val JsonAuthorRemove = Pattern.compile(",?(?:\"\\w+\":?[:|,\\[])?\\{?\"@type\":\"(?:[Ii]mageObject|[Oo]rganization|[Ww]eb[Pp]age)\",[^}\\[]+\\}[\\]|}]?")
@@ -161,16 +160,40 @@ object JsonLd {
     trim(JsonRemoveHtml.matcher(s).replaceAll(""))
   }
 
-  /** JSON_MINIFY (metadata.py:84): strip whitespace outside strings. */
+  /** JSON_MINIFY (metadata.py:84): strip whitespace outside strings. A
+    * scanner that makes exactly the matches of the reference regex
+    * `("(?:\\"|[^"])*")|\s` — whose backtracking needed one stack frame per
+    * string character and overflowed on long JSON-LD strings:
+    *  - outside strings, `[ \t\n\x0B\f\r]` is dropped;
+    *  - a `"` opens a string; inside, each `\"` pair is one unit, any other
+    *    char another, and the first bare `"` closes it (the `"` of `\\"`
+    *    is not bare: the first `\` is a unit, `\"` the next);
+    *  - an unclosed string backtracks to end at the quote of its last `\"`
+    *    pair; with no such pair the opening `"` is an ordinary char.
+    * Either way no `"` follows, so the rest of the input is outside. */
   def minify(text: String): String = {
-    val m = JsonMinify.matcher(text)
-    val sb = new StringBuffer
-    while (m.find()) {
-      if (m.group(1) != null)
-        m.appendReplacement(sb, java.util.regex.Matcher.quoteReplacement(m.group(1)))
-      else m.appendReplacement(sb, "")
+    val n = text.length
+    val sb = new java.lang.StringBuilder(n)
+    var i = 0
+    while (i < n) {
+      val c = text.charAt(i)
+      if (c == '"') {
+        var j = i + 1
+        var end = -1 // past the closing quote, else past the last \" pair
+        while (j < n && text.charAt(j) != '"') {
+          if (text.charAt(j) == '\\' && j + 1 < n && text.charAt(j + 1) == '"') {
+            j += 2; end = j
+          } else j += 1
+        }
+        if (j < n) end = j + 1
+        if (end > 0) { sb.append(text, i, end); i = end }
+        else { sb.append(c); i += 1 }
+      } else {
+        if (c != ' ' && c != '\t' && c != '\n' && c != '\u000b' && c != '\f' && c != '\r')
+          sb.append(c)
+        i += 1
+      }
     }
-    m.appendTail(sb)
     sb.toString
   }
 

@@ -253,7 +253,7 @@ object HtmlParser {
   val MaxNodes: Int = 2000000
 
   /** Closure-free attr copy (a capturing lambda per start tag was
-    * measurable allocation — AllocProf/JFR). */
+    * measurable allocation — allocation profile/JFR). */
   private def setAttrs(n: Node, attrs: scala.collection.Seq[(String, String)]): Unit = {
     if (attrs.nonEmpty) {
       val it = attrs.iterator
@@ -450,7 +450,7 @@ object HtmlParser {
   /** Canonical lowercase strings for common tag/attr names in an
     * open-addressing table keyed by the ASCII-lower-cased name: an ASCII name
     * costs one hash and one compare and returns the shared instance, skipping
-    * the substring + toLowerCase per tag (AllocProf). Non-ASCII / uncommon
+    * the substring + toLowerCase per tag (allocation profile). Non-ASCII / uncommon
     * names fall through to the allocating path. */
   private val InternNames: Array[String] = {
     val names = Array(

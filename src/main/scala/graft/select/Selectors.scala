@@ -87,7 +87,7 @@ object Selectors {
   def findAll(root: Node, rule: Rule): List[Node] = {
     // snapshot collected in one walk with a lazily-created buffer (most
     // rules match nothing on most documents) — the old full-list + filter
-    // shape allocated two O(n) lists per rule per doc (AllocProf)
+    // shape allocated two O(n) lists per rule per doc (allocation profile)
     var buf: scala.collection.mutable.ListBuffer[Node] = null
     root.foreachNode { n =>
       if ((n ne root) && rule.matches(n)) {

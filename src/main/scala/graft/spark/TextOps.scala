@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -143,6 +143,12 @@ object TextOps {
       |   array_to_string(list_slice(string_split(text,' '), 1, len(string_split(text,' ')) - 3), ' ') AS text
       | FROM documents)""".stripMargin
 
+  /** The identical-copy corpus: every doc twice, under doc_id and
+    * doc_id + 1000000, with the same text. */
+  private[graft] def duplicatedCorpus(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .unionAll(docs.select((col("doc_id") + 1000000L).cast("long").as("doc_id"), col("text")))
+
   /** Exact dedup over the duplicated corpus (documents ∪ documents).
     * 100 TB plan: the shuffle key is two INDEPENDENT 64-bit hashes of the
     * text (16 bytes/row), never the text itself — a (h1,h2) bucket equals the
@@ -153,16 +159,13 @@ object TextOps {
     * of h1 — the suffix form xxhash64(text, 1) is hashInt(1, h1), a bijection
     * of h1 that adds no entropy (collision odds would stay ~n²/2^65 at
     * 10^10 docs). Map-side partial agg still applies (one shuffle total). */
-  def dedupExact(docs: DataFrame): DataFrame = {
-    val corpus = docs.select(col("doc_id"), col("text"))
-      .unionAll(docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    corpus
+  def dedupExact(docs: DataFrame): DataFrame =
+    duplicatedCorpus(docs)
       .select(col("doc_id"),
         xxhash64(col("text")).as("h1"), xxhash64(lit(1), col("text")).as("h2"))
       .groupBy(col("h1"), col("h2"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .select(col("keep_id"), col("n_copies"))
-  }
 
   val dedupExactOracle: String =
     """SELECT min(doc_id) AS keep_id, COUNT(*) AS n_copies
@@ -197,6 +200,57 @@ object TextOps {
     array_distinct(slice(triples, lit(1), greatest(size(ws) - 2, lit(0))))
   }
 
+  /** Computes `df` once, eagerly, and returns a DataFrame that reads the
+    * result with no lineage behind it: the one materialization policy of
+    * these operators. With `spark.checkpoint.dir` set (a cluster sets it on
+    * shared storage) this is a reliable checkpoint, so a lost executor costs
+    * a re-read, not the job; otherwise a local checkpoint into executor
+    * blocks. No module state holds the result: Spark's ContextCleaner frees
+    * local blocks once the returned DataFrame is unreachable (reliable
+    * checkpoint files as `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * says). The result is also a projection barrier: the optimizer cannot
+    * see through it. */
+  private def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
+
+  /** The near-dup corpus as (doc_id, sh) with `sh` the SORTED set of hashed
+    * 3-shingles, materialized once — the MinHash and n-gram joins read it
+    * from four subtrees each (both candidate sides, both verify sides),
+    * which otherwise each re-ran the shingle scan (measured r06):
+    *  - as a projection barrier it stops CollapseProject inlining the
+    *    shingle expression both as the verify column and as minhash128's
+    *    child — two full evaluations per row (measured r06);
+    *  - sorting once at the scan turns the per-pair verify into the native
+    *    allocation-free merge count (sorted_intersect_count); minhash128
+    *    takes per-permutation MINIMA, so it is order-independent and
+    *    bit-identical over the sorted set;
+    *  - EAGER materialization stops the band subtree and the two verify-side
+    *    reads racing on first execution — independent stages of one job
+    *    each computed the not-yet-materialized partitions, running the
+    *    shingle scan up to 3x concurrently (measured r06).
+    * shingle_hashes = array_sort(array_distinct(hashed 3-shingles)) as ONE
+    * native zero-copy pass over the text bytes (each shingle is a byte slice
+    * of the original string — see the expression's scaladoc); bit-identical
+    * to the interpreted zip_with tree (VecExprsEquivalenceSpec). */
+  private def shingleCorpus(docs: DataFrame): DataFrame =
+    materialize(nearDupCorpus(docs)
+      .select(col("doc_id"), call_function("shingle_hashes", col("text")).as("sh"))
+      .filter(size(col("sh")) > 0))
+
+  /** Materializes an EXPENSIVE dedup-pipeline input (e.g. the extraction
+    * kernel's output) so every downstream consumer reads one copy. The
+    * near-dup corpus expansion and the final cluster labeling both read the
+    * source, so an un-materialized kernel input re-executes extraction up to
+    * 4x per pipeline run — invisible at bench scale where extraction is
+    * ~60 µs/doc, a scale-killer at 100 TB where extraction dominates
+    * (VERDICT r4). In the production pipeline the equivalent move is staging
+    * extracted text via the commit-log table (ExtractPipeline); this is the
+    * in-query form. Eager, so the copy is built in one dedicated simple job
+    * rather than as a side effect of whichever dependent subtree runs
+    * first. */
+  def cachePipelineInput(df: DataFrame): DataFrame = materialize(df)
+
   /** MinHash+LSH near-dup pairs with exact-Jaccard verification:
     * signatures (map-only) -> band explode -> equi-join on (band, hash) ->
     * exact 3-shingle Jaccard >= threshold. The final filter makes the output
@@ -215,97 +269,22 @@ object TextOps {
     * collided in a dropped bucket is lost — acceptable recall trade at scale
     * (a j≥0.8 pair collides in ~13 of 32 bands in expectation); keep 0 for
     * the exact oracle path. */
-  /** Previous invocation's persisted shingle corpus — released on the next
-    * call (bench loops invoke dedupMinhash repeatedly; never unpersisting
-    * leaked cached blocks across runs). Callers needing deterministic
-    * release can call releaseCaches() after their action completes. */
-  @volatile private var lastSigs: DataFrame = null
-
-  /** Previous pipeline-input cache (cachePipelineInput) — same lifecycle. */
-  @volatile private var lastInput: DataFrame = null
-
-  /** Previous ngram-join sorted-shingle corpus — same lifecycle. */
-  @volatile private var lastNgram: DataFrame = null
-
-  def releaseCaches(): Unit = synchronized {
-    if (lastSigs != null) { lastSigs.unpersist(false); lastSigs = null }
-    if (lastInput != null) { lastInput.unpersist(false); lastInput = null }
-    if (lastNgram != null) { lastNgram.unpersist(false); lastNgram = null }
-  }
-
-  /** Persist an EXPENSIVE dedup-pipeline input (e.g. the extraction kernel's
-    * output) so every downstream consumer reads one materialization. The
-    * near-dup corpus expansion reads its source once per union branch and
-    * the final cluster labeling re-derives it, so an un-persisted kernel
-    * input re-executes extraction up to 4x per pipeline run — invisible at
-    * bench scale where extraction is ~60 µs/doc, a scale-killer at 100 TB
-    * where extraction dominates (VERDICT r4). In the production pipeline the
-    * equivalent move is staging extracted text via the commit-log table
-    * (ExtractPipeline); this is the in-query form. Cache lifecycle follows
-    * lastSigs: released on the next call or via releaseCaches(). */
-  def cachePipelineInput(df: DataFrame): DataFrame = {
-    val p = synchronized {
-      if (lastInput != null) lastInput.unpersist(false)
-      val q = df.persist()
-      lastInput = q
-      q
-    }
-    // EAGER materialization: builds the cache in one dedicated simple job
-    // instead of as a side effect of whatever dependent subtree executes
-    // first (the dedup corpus count, whose own cache build then stacks on
-    // the kernel's in one stage chain). Extraction runs exactly ONCE per
-    // invocation either way — the paired A/B win (pipeline_dedup
-    // 1.96-2.20 -> 1.85-1.90 s, with the explode labeling below) comes
-    // from the leaner stage structure, not from avoided kernel work.
-    p.count()
-    p
-  }
-
   def dedupMinhash(docs: DataFrame, threshold: Double = 0.8,
       bucketCap: Int = 0): DataFrame = {
     SqlSurface.registerVecDot(docs.sparkSession)
-    // ONE cached corpus of SORTED hashed shingle sets, eagerly materialized:
-    //  - the persist is a PROJECTION BARRIER: CollapseProject otherwise
-    //    inlines the interpreted higher-order hashedShingles tree both as
-    //    the verify column and as minhash128's fallback-evaluated child —
-    //    two full interpreted evaluations per row (measured r06);
-    //  - sorting once at the scan turns the per-pair verify into the native
-    //    allocation-free merge count (sorted_intersect_count); minhash128
-    //    takes per-permutation MINIMA, so it is order-independent and
-    //    bit-identical over the sorted set;
-    //  - the EAGER count() stops the band subtree and the two verify-side
-    //    cache reads racing on first execution — independent stages of one
-    //    job each computed the not-yet-cached partitions, running the
-    //    shingle scan up to 3x concurrently (measured r06).
+    val corpus = shingleCorpus(docs)
     // Signatures stay PURE MAP-SIDE work: minhash128 computes all 128
     // permutation mins in one pass (bit-identical to the explode +
     // 128×min(xxhash64(s,i)) + groupBy form, equivalence test-pinned) with
     // NO shuffle — at 100 TB the old shape shipped |corpus shingles| rows ×
     // 128 hash columns through an aggregation exchange.
-    // unpersist the PREVIOUS corpus BEFORE persisting the new one: their
-    // logical plans are canonically identical across invocations, so the
-    // reverse order makes CacheManager's plan-matched uncache remove the
-    // JUST-REGISTERED entry too — every downstream subtree then silently
-    // recomputed the corpus raw (measured r06: runs 2+ of a bench loop lost
-    // the cache and re-ran the shingle scan 4x).
-    synchronized { if (lastSigs != null) { lastSigs.unpersist(false); lastSigs = null } }
-    // shingle_hashes = array_sort(array_distinct(hashed 3-shingles)) as ONE
-    // native zero-copy pass over the text bytes (each shingle is a byte
-    // slice of the original string — see the expression's scaladoc);
-    // replaces the interpreted zip_with tree, bit-identical output
-    // (equivalence pinned in VecExprsEquivalenceSpec)
-    val corpus = nearDupCorpus(docs)
-      .select(col("doc_id"), call_function("shingle_hashes", col("text")).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist()
-    synchronized { lastSigs = corpus }
-    corpus.count()
-    // NOT persisted — A/B-measured r06 (4 paired same-window legs): caching
-    // (doc_id, mh) flips the band self-join from broadcast to SMJ on the
-    // IMR's larger stats (two 4 MB exchanges, no stage reuse, +1 eager-count
-    // job) and regressed dedup_minhash/clusters/pipeline by 0.3-0.6 s each;
-    // recomputing the native minhash128 once per band side from the cached
-    // sorted-shingle corpus is cheaper than the extra plan machinery.
+    // NOT materialized — A/B-measured r06 (4 paired same-window legs):
+    // caching (doc_id, mh) flips the band self-join from broadcast to SMJ on
+    // the IMR's larger stats (two 4 MB exchanges, no stage reuse, +1
+    // eager-count job) and regressed dedup_minhash/clusters/pipeline by
+    // 0.3-0.6 s each; recomputing the native minhash128 once per band side
+    // from the materialized sorted-shingle corpus is cheaper than the extra
+    // plan machinery.
     val sigs = corpus.select(col("doc_id"),
       call_function("minhash128", col("sh")).as("mh"))
     // band keys: explode the band INDEX first, then slice+hash the cached
@@ -313,7 +292,7 @@ object TextOps {
     // `posexplode(transform(sequence, b => hash(slice(mh, ...))))` evaluated
     // the whole band array through the INTERPRETED higher-order-function
     // path — ~15 µs/element, 5-7 s of executor time per join side at sf0.1
-    // (measured r06, ProbeSig); `hash` and `slice` outside a lambda are
+    // (measured r06); `hash` and `slice` outside a lambda are
     // whole-stage-codegen expressions and the same values cost <1 s. bhash
     // values are bit-identical (same hash over the same slice), so the
     // candidate set and the verified output are unchanged.
@@ -392,13 +371,14 @@ object TextOps {
     *
     * Checkpointing: lineage MUST be truncated each round — the flatten
     * self-join doubles the logical plan per iteration and analysis blows up
-    * exponentially (hard-won; PLANS.md). `checkpointDir = None` uses
+    * exponentially (hard-won; PLANS.md). Every round goes through
+    * `materialize`: without a session checkpoint dir that is a
     * `localCheckpoint` (executor-block storage: fast, but a lost executor
-    * mid-iteration kills the job — fine on a single box); pass
-    * `Some(dir)` on a real cluster for RELIABLE checkpointing
-    * (sc.setCheckpointDir + .checkpoint to shared storage, e.g. HDFS/S3):
-    * a multi-hour 100 TB clustering then survives executor loss, paying one
-    * distributed write per round of the (monotonically shrinking) edge set.
+    * mid-iteration kills the job — fine on a single box); with
+    * `spark.checkpoint.dir` on shared storage (HDFS/S3) it is a RELIABLE
+    * checkpoint, so a multi-hour 100 TB clustering survives executor loss,
+    * paying one distributed write per round of the (monotonically
+    * shrinking) edge set.
     *
     * Non-convergence: if maxIters rounds leave residual edges the PARTIAL
     * labels are returned with `converged = false` instead of throwing — each
@@ -410,14 +390,9 @@ object TextOps {
     * resolve diameters ~2^20 — non-convergence in practice means a
     * pathologically low maxIters, as in the pinned test.) */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
-      checkpointDir: Option[String] = None,
       localFinishEdges: Int = 100000): (DataFrame, ClusterStats) = {
-    val ckpt: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        pairs.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
+    val spark = pairs.sparkSession
+    import spark.implicits._
     // checkpoint the pair DAG ONCE before mirroring: unionAll(p, p.swap)
     // over the raw DataFrame executes the (expensive) pair-generation
     // subtree twice — measured r06: the whole MinHash candidate+verify plan
@@ -438,30 +413,17 @@ object TextOps {
       val maxPairs = localFinishEdges / 2
       val probe = pairs.limit(maxPairs + 1).collect()
       if (probe.length <= maxPairs) {
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        probe.foreach { row =>
-          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // min-id root
-        }
-        val spark = pairs.sparkSession
-        import spark.implicits._
+        val roots = minIdRoots(probe)
         val nodes = probe.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toSet
-        val labelsLocal = nodes.iterator.map(n => (n, find(n))).toSeq
+        val labelsLocal = nodes.iterator.map(n => (n, roots.getOrElse(n, n))).toSeq
           .toDF("doc_id", "label")
         return (labelsLocal, ClusterStats(converged = true, 0, 0))
       }
     }
-    val p0 = ckpt(pairs)
+    val p0 = materialize(pairs)
     var edges = p0.unionAll(p0.select(col("b").as("a"), col("a").as("b")))
     var nEdges = edges.count()
-    var labels = ckpt(edges.select(col("a").as("doc_id")).distinct()
+    var labels = materialize(edges.select(col("a").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("label")))
     var iter = 0
     // LOCAL FINISH (the standard production tail move — Kiveris et al. end
@@ -473,22 +435,8 @@ object TextOps {
     // rounds and the tail is then free. 0 disables (pure distributed loop —
     // the spec chain tests pin that path).
     def localFinish(): Unit = {
-      val e = edges.select(col("a"), col("b")).collect()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      e.foreach { row =>
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // min-id root
-      }
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val fix = parent.keys.map(k => (k, find(k))).toSeq.toDF("label", "root")
+      val fix = minIdRoots(edges.select(col("a"), col("b")).collect())
+        .toSeq.toDF("label", "root")
       // ONE composition suffices even though mid-run labels are not yet
       // idempotent (pointer chains can survive the one-hop flatten):
       // every label value is either (a) a node of the remaining contracted
@@ -507,7 +455,7 @@ object TextOps {
     while (nEdges > localFinishEdges.max(0) && iter < maxIters) {
       // contract both endpoints to their representatives, drop self-loops
       // (round 1 skips it: labels are still the identity map there)
-      val contracted = if (iter == 0) edges else ckpt(edges
+      val contracted = if (iter == 0) edges else materialize(edges
         .join(labels.select(col("doc_id").as("a"), col("label").as("la")), Seq("a"))
         .join(labels.select(col("doc_id").as("b"), col("label").as("lb")), Seq("b"))
         .select(col("la").as("a"), col("lb").as("b"))
@@ -519,7 +467,7 @@ object TextOps {
       val stepped = labels.join(upd, Seq("label"), "left")
         .select(col("doc_id"), coalesce(col("m"), col("label")).as("label"))
       // flatten one pointer hop: L := L∘L (this is what makes rounds O(log d))
-      val next = ckpt(stepped.alias("s")
+      val next = materialize(stepped.alias("s")
         .join(stepped.select(col("doc_id").as("label"), col("label").as("ll")).alias("t"),
           Seq("label"), "left")
         .select(col("doc_id"), coalesce(col("ll"), col("label")).as("label")))
@@ -532,13 +480,30 @@ object TextOps {
     (labels, ClusterStats(nEdges == 0, iter, nEdges))
   }
 
+  /** Min-id-root union-find over (a, b) long edge rows: maps every node that
+    * is not its component's smallest id to that smallest id (roots, and
+    * nodes in no edge, are absent). */
+  private def minIdRoots(edges: Array[Row]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { row =>
+      val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // min-id root
+    }
+    parent.keys.map(k => (k, find(k))).toMap
+  }
+
   def dedupClusters(docs: DataFrame, threshold: Double = 0.8,
-      maxIters: Int = 20, checkpointDir: Option[String] = None,
-      localFinishEdges: Int = 100000): DataFrame = {
+      maxIters: Int = 20, localFinishEdges: Int = 100000): DataFrame = {
     val pairs = dedupMinhash(docs, threshold)
       .select(col("id_a").as("a"), col("id_b").as("b"))
-    val (labels, stats) = connectedComponents(pairs, maxIters, checkpointDir,
-      localFinishEdges)
+    val (labels, stats) = connectedComponents(pairs, maxIters, localFinishEdges)
     if (!stats.converged)
       Console.err.println(s"[dedupClusters] NOT CONVERGED after ${stats.rounds} " +
         s"rounds (${stats.residualEdges} residual edges) — returning partial " +
@@ -605,19 +570,7 @@ object TextOps {
   def dedupNgramJaccard(docs: DataFrame, threshold: Double = 0.8,
       tokenCap: Int = 0): DataFrame = {
     SqlSurface.registerVecDot(docs.sparkSession) // sorted_intersect_count
-    // persisted + eagerly materialized like dedupMinhash's sigs: the corpus
-    // feeds FOUR subtrees (both token-join sides, both verify sides) and was
-    // recomputed by each — the single most expensive scan of this query ran
-    // up to 4x per execution (measured r06)
-    // unpersist-old BEFORE persist-new (see dedupMinhash's note: the
-    // canonical-plan-matched uncache otherwise removes the new entry)
-    synchronized { if (lastNgram != null) { lastNgram.unpersist(false); lastNgram = null } }
-    val corpus = nearDupCorpus(docs)
-      .select(col("doc_id"), call_function("shingle_hashes", col("text")).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist()
-    synchronized { lastNgram = corpus }
-    corpus.count()
+    val corpus = shingleCorpus(docs)
     val prefixLen = (size(col("sh")) -
       ceil(size(col("sh")) * lit(threshold)).cast("int") + 1)
     val allTokens = corpus
@@ -677,11 +630,9 @@ object TextOps {
     * Map-only fingerprinting; the self-join keys on the 8-byte id. */
   def simhashPairs(spark: SparkSession, docs: DataFrame): DataFrame = {
     SqlSurface.registerVecDot(spark)
-    val corpus = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .unionAll(docs.select((col("doc_id") + 1000000L).cast("long").as("doc_id"), col("text")))
     // native simhash64 expression: the old typed .map deserialized every row
     // (Deserialize/SerializeFromObject around an otherwise all-codegen plan)
-    val fps = corpus.select(col("doc_id"),
+    val fps = duplicatedCorpus(docs).select(col("doc_id"),
       call_function("simhash64", col("text")).as("fp"))
     fps.filter(col("doc_id") < 1000000L).as("a")
       .join(fps.filter(col("doc_id") >= 1000000L).as("b"),
@@ -823,7 +774,7 @@ object TextOps {
     val base = DocsTables.fanOut(embeddings).select(col("vec_id"), col("embedding"))
     // ALL tables*k hyperplane dots + bit packing in ONE fused native pass
     // (srp_buckets): a projection of 96 separate vec_dot expressions
-    // measured ~7 µs PER DOT (r06 ProbeEmb — too large to JIT, row
+    // measured ~7 µs PER DOT (r06 — too large to JIT, row
     // re-walked per dot); the fused expression reads the vector once and
     // streams the plane matrix over it. Bucket values bit-identical,
     // including SQL NaN ordering and null-element semantics.
@@ -981,9 +932,8 @@ object TextOps {
     * least `recallFloor` of it. Deterministic: the k-means fit is
     * fixed-init/fixed-iteration and ties break on nid, so the driver
     * hash-compares (n_exact, TRUE) stably. Floor chosen from probed recall
-    * 0.88 / 0.88 / 0.96 at nProbe=4 of 16 on sf0.001/0.01/0.1
-    * (tools/IvfProbe — full nProbe curve in BASELINE.md), leaving ≥18
-    * points of corpus-drift margin. */
+    * 0.88 / 0.88 / 0.96 at nProbe=4 of 16 on sf0.001/0.01/0.1 (full nProbe
+    * curve in BASELINE.md), leaving ≥18 points of corpus-drift margin. */
   def ivfRecall(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       nCells: Int = 16, nProbe: Int = 4, fitIters: Int = 3,
       recallFloor: Double = 0.7): DataFrame = {

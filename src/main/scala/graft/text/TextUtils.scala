@@ -31,7 +31,7 @@ object TextUtils {
     if (s == null) return null
     // fast path: already collapsed (no leading/trailing/double space, no
     // non-space py-whitespace) — returns the input without allocating;
-    // trim runs per text node/handler call, so this is hot (AllocProf)
+    // trim runs per text node/handler call, so this is hot (allocation profile)
     val n0 = s.length
     var fast = true
     var prevSpace = true // position -1 counts as space => leading space fails

@@ -42,17 +42,17 @@ object Plans {
     sb.append("  SerializeFromObject nodes from the plan.\n")
     sb.append("- `dedup_clusters` is iterative (star contraction over the near-dup\n")
     sb.append("  pair graph, O(log diameter) rounds): the dump shows only the FINAL\n")
-    sb.append("  corpus-labeling join against the converged, localCheckpoint'ed\n")
+    sb.append("  corpus-labeling join against the converged, checkpointed\n")
     sb.append("  label table (`Scan ExistingRDD`); each round's contraction is a\n")
     sb.append("  3-join + distinct over 8-byte ids with lineage truncated per round.\n")
     sb.append("- `pipeline_dedup` (extract -> pairs over extracted text -> CC ->\n")
     sb.append("  canonical agg) shares that shape, and since r5 the extracted text\n")
-    sb.append("  is PERSISTED before fan-out (TextOps.cachePipelineInput): every\n")
-    sb.append("  consumer — both corpus-expansion union branches and the final\n")
-    sb.append("  labeling join — reads one InMemoryRelation, so the kernel's\n")
-    sb.append("  MapPartitions executes exactly once per pipeline run (it appears\n")
-    sb.append("  in the dump only inside the InMemoryRelation build plan; the\n")
-    sb.append("  structural kernel-once test is in SparkSpec).\n")
+    sb.append("  is CHECKPOINTED before fan-out (TextOps.cachePipelineInput): every\n")
+    sb.append("  consumer — the corpus expansion and the final labeling join —\n")
+    sb.append("  reads one `Scan ExistingRDD`, so the kernel's MapPartitions\n")
+    sb.append("  executes exactly once per pipeline run, in the eager checkpoint\n")
+    sb.append("  job, and never appears in the dump (the structural kernel-once\n")
+    sb.append("  test is in SparkSpec).\n")
     sb.append("- `ann_cosine_ivf` / `emb_lsh_recall`: centroid/hyperplane dots are\n")
     sb.append("  native `vec_dot` against LITERAL arrays (map-side, codegen'd,\n")
     sb.append("  no Exchange before the probe/bucket join); candidate generation\n")

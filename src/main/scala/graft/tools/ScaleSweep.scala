@@ -48,7 +48,6 @@ object ScaleSweep {
         graft.spark.TextOps.dedupClusters(d)
           .groupBy(col("cluster_id")).agg(count(lit(1))).count())
       d.unpersist()
-      graft.spark.TextOps.releaseCaches()
     }
     spark.stop()
   }

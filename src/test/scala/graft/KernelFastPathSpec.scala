@@ -1,13 +1,15 @@
 package graft
 
 import graft.dom.{Dom, Node}
-import graft.extract.{AsciiWords, Readability, TextRun}
+import graft.extract.{AsciiWords, Extraction, ExtractorOptions, Readability, TextRun}
+import graft.meta.JsonLd
 import graft.parse.HtmlParser
 import graft.select.Selectors
 import graft.text.TextUtils
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.util.regex.Pattern
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.regex.{Matcher, Pattern}
 
 /** Differential tests for the kernel's hand-written fast paths: each must
   * agree with the general form it replaced (a regex, an allocating
@@ -216,5 +218,44 @@ class KernelFastPathSpec extends AnyFunSuite {
       assert(runOf(root).length == root.trimmedTextLength)
       assert(runOf(root).commas == root.textContent.count(_ == ','))
     }
+  }
+
+  // JSON_MINIFY as the regex the scanner replaced
+  private val MinifyRegex = Pattern.compile("(\"(?:\\\\\"|[^\"])*\")|\\s")
+  private def regexMinify(text: String): String = {
+    val m = MinifyRegex.matcher(text)
+    val sb = new StringBuffer
+    while (m.find())
+      m.appendReplacement(sb, if (m.group(1) != null) Matcher.quoteReplacement(m.group(1)) else "")
+    m.appendTail(sb)
+    sb.toString
+  }
+
+  test("JSON minify scanner makes exactly the regex's matches") {
+    val rnd = new java.util.Random(31)
+    // every \s kind, escaped and double-escaped quotes, and non-\s spaces
+    val pieces = Seq("\"", "\\\"", "\\\\\"", "\\", " ", "\t", "\n", "\u000b", "\f", "\r",
+      "\u00a0", "\u2028", "a", "{", "}", ":", ",", "\"k\"", "\u00e9", "\ud83d\ude00")
+    val fixed = Seq("", "\"", "\"\"", "\" a", "\"a\\\" b", "\"a\\\" b\\\" c d", "\"a\\\\\" b",
+      "{ \"k\" : \"v w\" }", "x \"y\\\"\" z", "\"\\\"", "\\\"\" a \"")
+    val random = Seq.fill(20000)(Seq.fill(rnd.nextInt(24))(pieces(rnd.nextInt(pieces.length))).mkString)
+    (fixed ++ random).foreach(t => assert(JsonLd.minify(t) == regexMinify(t), t))
+  }
+
+  test("a page with a 200 000-char JSON-LD string keeps its metadata") {
+    val in = getClass.getResourceAsStream("/graft/brotli/page2_q1.raw")
+    val page = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    val anchor = "\"@type\":\"NewsArticle\","
+    assert(page.contains(anchor))
+    val body = ("Tanz in der Lokremise, \\\"gewaschen\\\" und getrocknet. " * 4000).take(200000)
+    assert(!body.endsWith("\\"))
+    val big = page.replaceFirst(Pattern.quote(anchor),
+      Matcher.quoteReplacement(anchor + "\"articleBody\":\"" + body + "\","))
+    val opts = ExtractorOptions(images = true)
+    val ref = Extraction.bareExtraction(page, options = opts)
+    val got = Extraction.bareExtraction(big, options = opts)
+    assert(ref != null && ref.meta.title != null && ref.meta.date != null)
+    assert(got != null, "the document was dropped")
+    assert(got.meta == ref.meta && got.text == ref.text)
   }
 }

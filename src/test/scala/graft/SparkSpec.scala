@@ -887,11 +887,14 @@ class SparkSpec extends AnyFunSuite {
     localLabels.count()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     intercept[Exception] { localLabels.collect() }
-    // reliable path: sc.setCheckpointDir + .checkpoint write each round to
-    // (shared, on a cluster) storage — the same block loss is survivable
+    // reliable path: with the session checkpoint dir set, every round is
+    // written to (shared, on a cluster) storage — the same block loss is
+    // survivable. The dir cannot be unset on the shared SparkContext, so the
+    // local half above must be the first code in this JVM to run without it
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    spark.sparkContext.setCheckpointDir(dir)
     val (labels, stats) = graft.spark.TextOps.connectedComponents(
-      pairs, maxIters = 10, checkpointDir = Some(dir), localFinishEdges = 0)
+      pairs, maxIters = 10, localFinishEdges = 0)
     assert(stats.converged)
     val first = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(first.size == 40 && first.values.forall(_ == 0L))
@@ -902,6 +905,22 @@ class SparkSpec extends AnyFunSuite {
     def walk(f: java.io.File): Long =
       if (f.isDirectory) f.listFiles.map(walk).sum else 1L
     assert(walk(new java.io.File(dir)) > 0, s"no checkpoint files under $dir")
+  }
+
+  test("dedupMinhash and pipeline_dedup re-collect identically after cached-block loss") {
+    // the test above left the session checkpoint dir set: the materialized
+    // shingle corpus and pipeline input are reliable checkpoints, so losing
+    // every cached block (what executor loss does) must not change a result
+    assert(spark.sparkContext.getCheckpointDir.isDefined)
+    val docs = DocsTables.documents(spark, sf)
+    for (df <- Seq(graft.spark.TextOps.dedupMinhash(docs),
+        SparkEntry.queries("pipeline_dedup")(spark, sf))) {
+      val first = df.collect().map(_.toSeq).toSet
+      assert(first.nonEmpty)
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      assert(df.collect().map(_.toSeq).toSet == first,
+        "post-block-loss re-collect diverged")
+    }
   }
 
   test("watermarked windowed aggregation over the events stream") {
@@ -929,14 +948,12 @@ class SparkSpec extends AnyFunSuite {
   test("pipeline_dedup executes the extraction kernel once: cached scans only in the final plan") {
     // the r4 scale flaw: un-persisted kernel output fed the corpus expansion
     // (2 union branches) and the final labeling (2 more) -> 4x extraction.
-    // With cachePipelineInput the kernel materializes one InMemoryRelation;
-    // every consumer must read it via InMemoryTableScan, so the final plan
-    // may contain NO kernel MapPartitions/DeserializeToObject nodes.
+    // With cachePipelineInput the kernel output is checkpointed once; every
+    // consumer must read it via the checkpoint scan (Scan ExistingRDD), so
+    // the final plan may contain NO kernel MapPartitions nodes.
     val df = SparkEntry.queries("pipeline_dedup")(spark, sf)
-    // structural traversal (NOT string match: an InMemoryTableScan PRINTS its
-    // cached relation's build plan, which legitimately contains the one
-    // MapPartitions that materializes the cache). collect() stops at leaf
-    // nodes, so any MapPartitions it finds is a genuine re-execution.
+    // structural traversal: collect() stops at leaf nodes, so any
+    // MapPartitions it finds is a genuine re-execution.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     def unwrap(p: SparkPlan): SparkPlan = p match {
@@ -950,12 +967,11 @@ class SparkSpec extends AnyFunSuite {
     assert(kernelNodes.isEmpty,
       s"kernel re-execution leaked into the pipeline_dedup plan:\n$exec")
     val cachedScans = exec.collect {
-      case s if s.nodeName.contains("InMemoryTableScan") => s
+      case s if s.nodeName.contains("ExistingRDD") => s
     }
     assert(cachedScans.nonEmpty,
-      s"expected cached kernel output in the pipeline_dedup plan:\n$exec")
+      s"expected checkpointed kernel output in the pipeline_dedup plan:\n$exec")
     assert(df.count() > 0)
-    graft.spark.TextOps.releaseCaches()
   }
 
   test("streaming sessions: 10^5-event hot user in one micro-batch completes exactly") {
