@@ -126,10 +126,10 @@ object SparkEntry {
     // --- skewed join + AQE skew-split: 80% of lineitem rows are remapped to
     // one hot order key, so the sort-merge join's hot partition dwarfs the
     // median; AQE (skewJoin.enabled) splits it at runtime — the plan shows
-    // `skew=true` on the join (SparkSpec asserts it; PLANS.md carries the
-    // shape). Runs in its own newSession() so the lowered skew thresholds
-    // (sized for test-scale data) and the disabled broadcast (forcing SMJ,
-    // as a 100 TB fact-fact join would be) leak into no other query.
+    // `skew=true` on the join (SparkSpec asserts that shape). Runs in its
+    // own newSession() so the lowered skew thresholds (sized for test-scale
+    // data) and the disabled broadcast (forcing SMJ, as a 100 TB fact-fact
+    // join would be) leak into no other query.
     "tpch_skew_revenue" -> ((s, dir) => tpchSkewRevenue(s, dir)),
     // --- relational surface: 3-way join + agg over the TPC-H-ish tables
     // (nation broadcast, lineitem->orders->customer shuffle joins on keys)

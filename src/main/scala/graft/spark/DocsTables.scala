@@ -30,18 +30,11 @@ object DocsTables {
     * thousands of splits, making this a no-op with zero added shuffle. */
   private[graft] def fanOut(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    // CACHED inputs (pipeline staging) keep their layout: the cache was
-    // built from an already-fanned-out plan, and re-shuffling a cached
-    // table would add an exchange per consumer (and at scale a full
-    // shuffle of the cached data). The check must stay pure driver-side
-    // plan inspection: a `.rdd.getNumPartitions` probe materializes AQE
-    // query stages — it measurably ran an extra job per invocation.
+    // cached and checkpointed inputs have no input files, so they keep their layout.
+    // The check stays driver-side plan inspection: a `.rdd.getNumPartitions`
+    // probe materializes AQE query stages, one extra job per call.
     val plan = df.queryExecution.optimizedPlan
-    val isCached = plan.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
-    val nFiles =
-      if (isCached) Int.MaxValue
-      else try df.inputFiles.length catch { case _: Throwable => Int.MaxValue }
+    val nFiles = try df.inputFiles.length catch { case _: Throwable => Int.MaxValue }
     // size cap: file COUNT under-approximates split count for big files (a
     // few 1 GB files still split into many scan tasks), so the guard only
     // fires for scans small enough that the round-robin shuffle is

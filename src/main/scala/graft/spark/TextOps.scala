@@ -370,9 +370,9 @@ object TextOps {
     * the algorithm). Returns (labels(doc_id, label), stats).
     *
     * Checkpointing: lineage MUST be truncated each round — the flatten
-    * self-join doubles the logical plan per iteration and analysis blows up
-    * exponentially (hard-won; PLANS.md). Every round goes through
-    * `materialize`: without a session checkpoint dir that is a
+    * self-join doubles the logical plan per iteration, so without a cut the
+    * analyzer's work grows exponentially in the round count. Every round
+    * goes through `materialize`: without a session checkpoint dir that is a
     * `localCheckpoint` (executor-block storage: fast, but a lost executor
     * mid-iteration kills the job — fine on a single box); with
     * `spark.checkpoint.dir` on shared storage (HDFS/S3) it is a RELIABLE

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 object EvalRun {
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "standard"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master("local[*]")
+      .config("spark.sql.shuffle.partitions", Runtime.getRuntime.availableProcessors.toString)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val s = EvalCorpus.score(spark, "/root/reference/tests/eval",

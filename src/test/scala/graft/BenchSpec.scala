@@ -1,114 +1,28 @@
 package graft
 
-import graft.Bench.Leg
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** The scaling harness's acceptance logic is load-bearing for the
-  * north-rule evidence — pin it with pure unit tests. */
+/** graft.Bench's one pass, end to end on sf0.001: the JSON line keeps the
+  * BENCH.json keys and names no lane count wider than the host. */
 class BenchSpec extends AnyFunSuite {
 
-  private def leg(tput: Double, usPerDoc: Double, cpus: Int = 2): Leg =
-    // docs=1e6 => kernelCoreSec = usPerDoc (µs/doc * docs / 1e6)
-    Leg(cpus, 1000000L, 1000000.0 / tput, tput, usPerDoc, pinned = true)
-
-  test("quietWindow: accepts 3 consecutive in-spread clean legs, rejects ramps") {
-    // flat triple within 10%
-    val quiet = Seq(leg(100, 70), leg(104, 69), leg(98, 71))
-    assert(Bench.quietWindow(quiet).isDefined)
-    // JIT ramp: first leg 20% below — no 3-window within spread
-    val ramp = Seq(leg(80, 85), leg(98, 72), leg(101, 70))
-    assert(Bench.quietWindow(ramp).isEmpty)
-    // 4 legs with a ramp head: the tail triple qualifies
-    val rampTail = Seq(leg(80, 85), leg(97, 72), leg(101, 70), leg(99, 71))
-    val w = Bench.quietWindow(rampTail)
-    assert(w.isDefined && w.get.map(_.tput) == Seq(97.0, 101.0, 99.0))
-    // collapsed leg in the middle (µs/doc > 2x quietest) breaks consecutiveness
-    val collapsed = Seq(leg(100, 70), leg(40, 180), leg(101, 70), leg(99, 71))
-    assert(Bench.quietWindow(collapsed).isEmpty)
-    // in-spread but collapsed-µs legs are not a quiet window: a uniformly
-    // descheduled child must not pass on tput consistency alone
-    assert(Bench.quietWindow(Seq(leg(100, 70), leg(40, 180), leg(41, 178), leg(40, 181))).isEmpty)
-  }
-
-  test("quietWindow: picks the highest-median window among several") {
-    val legs = Seq(leg(90, 75), leg(91, 74), leg(92, 74), leg(100, 70), leg(101, 70), leg(99, 70))
-    val w = Bench.quietWindow(legs).get
-    assert(Bench.median(w.map(_.tput)) == 100.0)
-  }
-
-  test("medianCorroborated: neighbor rule, not best-two") {
-    // two agreeing rounds
-    assert(Bench.medianCorroborated(Seq(0.86, 0.88), 0.10))
-    // two discordant rounds: refused even though a midpoint would look fine
-    assert(!Bench.medianCorroborated(Seq(0.72, 0.86), 0.10))
-    // median corroborated by neighbor; low outlier ignored
-    assert(Bench.medianCorroborated(Seq(0.65, 0.84, 0.86), 0.10))
-    // best-two agree (0.84/0.86) but the MIDDLE pair does not -> refused
-    // (the top pair may be 2-core-contention-inflated; it must not carry
-    // the verdict while the published median sits between the clusters)
-    assert(!Bench.medianCorroborated(Seq(0.60, 0.61, 0.84, 0.86), 0.10))
-    // fewer than 2 rounds never corroborates
-    assert(!Bench.medianCorroborated(Seq(0.9), 0.10))
-    assert(!Bench.medianCorroborated(Nil, 0.10))
-  }
-
-  test("summarize: globally-descheduled level cannot self-certify quiet (ADVICE r4)") {
-    // internally consistent triple at 3x the global floor on 4 cores:
-    // allowance(4)=2.0, so the window is distrusted -> quiet=false
-    val uniform = Seq(leg(40, 210, cpus = 4), leg(41, 208, cpus = 4), leg(40, 211, cpus = 4))
-    val flagged = Bench.summarize(4, uniform, children = 1, globalRefUs = 70.0)
-    assert(!flagged.quiet && !flagged.globalOk)
-    // same legs with a matching global floor pass
-    val ok = Bench.summarize(4, uniform, children = 1, globalRefUs = 180.0)
-    assert(ok.quiet && ok.globalOk)
-    // 32-core legs at ~2.2x the floor are legitimate bandwidth inflation
-    // (allowance 3.5) — must NOT be flagged
-    val inflated = Seq(leg(300, 155, cpus = 32), leg(305, 152, cpus = 32), leg(298, 154, cpus = 32))
-    assert(Bench.summarize(32, inflated, children = 1, globalRefUs = 70.0).quiet)
-    // no global reference (0) degrades to the per-level verdict
-    assert(Bench.summarize(4, uniform, children = 1, globalRefUs = 0.0).quiet)
-  }
-
-  test("round persistence: appended rounds reload only under the same code/input key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rounds")
-    val path = dir.resolve("rounds.jsonl").toString
-    val r1 = Bench.Round(23313.9, 65477.9, 80.9, 96.0, ok = true)
-    val r2 = Bench.Round(22000.0, 60000.0, 82.0, 140.0, ok = false)
-    Bench.appendRoundForTest(path, "tag-a", "/sf", 10, r1)
-    Bench.appendRoundForTest(path, "tag-a", "/sf", 10, r2)
-    Bench.appendRoundForTest(path, "tag-b", "/sf", 10, r1) // other code version
-    Bench.appendRoundForTest(path, "tag-a", "/sf", 20, r1) // other factor
-    val got = Bench.loadPriorRoundsForTest(path, "tag-a", "/sf", 10)
-    assert(got.length == 2)
-    assert(got.forall(_.prior))
-    assert(got.head.ok && !got(1).ok)
-    assert(math.abs(got.head.ratio - r1.ratio) < 1e-4)
-    // unknown tag loads nothing (uncommitted/unidentifiable code)
-    assert(Bench.loadPriorRoundsForTest(path, "unknown", "/sf", 10).isEmpty)
-  }
-}
-
-/** Mid-run local-finish correctness: the driver union-find must compose
-  * correctly with NOT-YET-IDEMPOTENT labels (pointer chains survive the
-  * one-hop flatten), which only occurs when the distributed loop ran at
-  * least one round before the edge set fell under the threshold. */
-class LocalFinishSpec extends org.scalatest.funsuite.AnyFunSuite {
-  test("connectedComponents: local finish engaged AFTER distributed rounds is exact") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
+  test("Bench.run: one pass at sf0.001 emits the ten keys, every query, no scaling figure") {
+    val spark = SparkSession.builder()
       .master("local[4]").config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false").getOrCreate()
-    import spark.implicits._
-    // two chains (diameter 60 each): 118 directed pairs -> 236 edges; with
-    // localFinishEdges = 60 the loop MUST contract distributedly first
-    // (236 > 60), then finish locally on a shrunken graph mid-run
-    val chain = (0L until 60L).sliding(2).map(s => (s.head, s.last)).toSeq ++
-      (1000L until 1060L).sliding(2).map(s => (s.head, s.last)).toSeq
-    val (labels, stats) = graft.spark.TextOps.connectedComponents(
-      chain.toDF("a", "b"), maxIters = 20, localFinishEdges = 60)
-    assert(stats.converged)
-    assert(stats.rounds >= 1, "local finish must have engaged AFTER a distributed round")
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got.size == 120)
-    got.foreach { case (d, l) => assert(l == (if (d < 1000) 0L else 1000L), s"$d -> $l") }
+    val json = Bench.run(spark, "/root/testdata/sf0.001", queryRuns = 1, factor = 1)
+    val root = new ObjectMapper().readTree(json)
+    assert(root.fieldNames.asScala.toSet == Set("metric", "value", "unit", "queries",
+      "query_spread", "query_runs", "sf", "cpus", "extract", "scaling"), json)
+    assert(SparkEntry.queries.size == 23)
+    assert(root.get("queries").fieldNames.asScala.toSet == SparkEntry.queries.keySet)
+    // spread -1 marks a query run that threw
+    SparkEntry.queries.keys.foreach(q => assert(root.get("query_spread").get(q).asDouble >= 0, q))
+    assert(root.get("cpus").asInt <= Runtime.getRuntime.availableProcessors)
+    assert(root.get("extract").get("docs").asLong > 0)
+    assert(root.get("scaling").get("efficiency").isNull)
   }
 }

@@ -634,6 +634,27 @@ class SparkSpec extends AnyFunSuite {
       "text column should not survive past the exchange")
   }
 
+  test("fanOut: a 1-file scan is repartitioned; persisted and checkpointed copies keep their layout") {
+    val p = spark.sparkContext.defaultParallelism
+    val scan = DocsTables.documents(spark, sf)
+    assert(scan.inputFiles.length == 1 && p > 1, "precondition: a 1-split scan on a multi-lane session")
+    def fannedPlan(df: org.apache.spark.sql.DataFrame) =
+      DocsTables.fanOut(df).queryExecution.executedPlan.toString
+    assert(fannedPlan(scan).contains(s"Exchange RoundRobinPartitioning($p)"), fannedPlan(scan))
+    def keepsLayout(df: org.apache.spark.sql.DataFrame): Unit = {
+      assert(df.inputFiles.isEmpty, df.inputFiles.mkString(","))
+      assert(!fannedPlan(df).contains("Exchange"), fannedPlan(df))
+    }
+    // a fresh frame: `scan`'s optimized plan was built before any cache existed
+    val persisted = DocsTables.documents(spark, sf).persist()
+    try {
+      persisted.count()
+      keepsLayout(persisted)
+      keepsLayout(persisted.filter("doc_id % 2 = 0"))
+    } finally persisted.unpersist(blocking = true)
+    keepsLayout(scan.localCheckpoint())
+  }
+
   test("IVF assignment is map-side: no nested-loop join, single window in plan") {
     val emb = graft.spark.DocsTables.embeddings(spark, "/root/testdata/sf0.01")
     val plan = graft.spark.TextOps.annCosineIvf(emb, nQueries = 5, k = 5, nCells = 8, nProbe = 4)
