@@ -22,17 +22,15 @@ import scala.util.control.NonFatal
   * by layer. */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
+  private def session(cpus: Int): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.log.level", "WARN")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted

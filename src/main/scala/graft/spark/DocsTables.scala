@@ -3,6 +3,8 @@ package graft.spark
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Deterministic synthesis of the interleaved `docs` input table
   * (doc_id, spans array<struct<kind,text,media_ref,offset>>) from the
   * driver-generated `documents.parquet` (doc_id, text, lang, source, n_chars).
@@ -15,6 +17,8 @@ import org.apache.spark.sql.functions._
   * expected output is exactly predictable from the source row — the DuckDB
   * oracle can verify span equality end-to-end (FIXTURES.md §3). */
 object DocsTables {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Scan-parallelism guard (optimization guide §2.5, "input skew: one huge
     * unsplittable file … otherwise repartition immediately after the read"):
@@ -34,13 +38,21 @@ object DocsTables {
     // The check stays driver-side plan inspection: a `.rdd.getNumPartitions`
     // probe materializes AQE query stages, one extra job per call.
     val plan = df.queryExecution.optimizedPlan
-    val nFiles = try df.inputFiles.length catch { case _: Throwable => Int.MaxValue }
+    val nFiles = try df.inputFiles.length catch {
+      case NonFatal(e) =>
+        log.warn(s"fanOut: input files unknown ($e); keeping the input layout")
+        Int.MaxValue
+    }
     // size cap: file COUNT under-approximates split count for big files (a
     // few 1 GB files still split into many scan tasks), so the guard only
     // fires for scans small enough that the round-robin shuffle is
     // trivially cheap — which is exactly the regime it exists for
     val small = nFiles > 0 && nFiles < p &&
-      (try plan.stats.sizeInBytes < (256L << 20) catch { case _: Throwable => false })
+      (try plan.stats.sizeInBytes < (256L << 20) catch {
+        case NonFatal(e) =>
+          log.warn(s"fanOut: no size estimate ($e); keeping the input layout")
+          false
+      })
     if (small) df.repartition(p) else df
   }
 

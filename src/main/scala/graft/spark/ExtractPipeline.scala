@@ -2,6 +2,7 @@ package graft.spark
 
 import graft.extract.{Deduplicator, ExtractedDoc, Extraction, ExtractorOptions}
 import graft.out.Serializers.Span
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,13 +112,15 @@ object ExtractPipeline {
     * exists only if staging routed a doc there, and only then does the pass
     * spread those rows round-robin over their own partitions. Total input
     * scan volume is 1x (the staging write) + 1/buckets per pass, never
-    * buckets× the raw table. `htmlBackup=true` adds a SECOND read of the
-    * bucket for the backup write (2/buckets per pass): re-reading the pruned
-    * parquet keeps the memory profile flat, vs. caching a whole bucket of
-    * raw pages to save a scan. Each manifest records the directories
-    * (`scan_path`) and files it read. The staged layout is part of the run:
-    * `_commits/_buckets` records the bucket count, `htmlBackup`, the layout
-    * and the threshold, and a resume that differs in any of them fails.
+    * buckets× the raw table. `htmlBackup=true` adds one job at staging that
+    * reads the staged table back once and writes the `(doc_id, html)`
+    * projection of every bucket, partitioned by `_bucket`, to `_backup`; a
+    * pass commits its share with a directory rename, not a second job.
+    * Each manifest records the directories (`scan_path`) and files it read.
+    * The staged layout is part of the run: `_commits/_buckets` records the
+    * bucket count, `htmlBackup`, the layout (which names `_backup` when
+    * the backup is staged) and the threshold, and a resume that differs in
+    * any of them fails.
     *
     * Concurrency: the uncommitted buckets run on a pool of at most
     * `defaultParallelism` passes that pull from one queue, so driver-side
@@ -134,8 +137,9 @@ object ExtractPipeline {
     * `htmlBackup=true` mirrors the reference's HTML backup sink
     * (cli_utils.py:161-170: `--backup-dir` persists the raw page next to the
     * extraction output): each bucket's raw html payloads land in
-    * `html-bucket-N`, committed by the same atomic manifest as the
-    * extraction output. */
+    * `html-bucket-N`, moved there from `_backup/_bucket=N` before the same
+    * atomic manifest that commits the extraction output. A bucket with no
+    * docs gets an empty `html-bucket-N` directory. */
   def runWithCommitLog(spark: SparkSession, input: Dataset[DocRow],
       outDir: String, options: ExtractorOptions, buckets: Int = 8,
       skewThresholdBytes: Int = 0, htmlBackup: Boolean = false): Seq[String] = {
@@ -148,7 +152,11 @@ object ExtractPipeline {
     // The bucket count is part of the layout: a resume with a different
     // `buckets` against the same outDir must fail loudly, not mis-bucket.
     val stagedDir = s"$outDir/_staged"
+    val backupDir = s"$outDir/_backup"
     val bucketsMarker = java.nio.file.Paths.get(s"$outDir/_commits/_buckets")
+    val rowSchema = org.apache.spark.sql.Encoders.product[DocRow].schema
+    val hfs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val layout = stagedLayout(htmlBackup)
     if (!new java.io.File(s"$stagedDir/_SUCCESS").exists()) {
       val heavy =
         if (heavyBytes == 0) lit(false)
@@ -157,9 +165,23 @@ object ExtractPipeline {
       input.withColumn("_bucket", pmod(hash(col("doc_id")), lit(buckets)))
         .withColumn("_heavy", heavy)
         .write.mode("overwrite").partitionBy("_bucket", "_heavy").parquet(stagedDir)
-      // tmp + atomic rename: a crash between the staging write and a plain
-      // marker write would leave a resumable staged table whose next run
-      // throws NoSuchFileException instead of a diagnosable error
+      // the html backup of every bucket in one job. The schema is given, so
+      // reading the staged table back needs no schema-inference job; the
+      // bucket directories are passed by name because Spark warns that a
+      // path named `_staged` is hidden. An empty input stages no bucket.
+      val stagedBuckets =
+        if (!htmlBackup) Array.empty[String]
+        else hfs.globStatus(new Path(s"$stagedDir/_bucket=*")).map(_.getPath.toString)
+      if (stagedBuckets.nonEmpty)
+        spark.read.schema(rowSchema.add("_bucket", "int")).option("basePath", stagedDir)
+          .parquet(stagedBuckets.toSeq: _*)
+          .select("doc_id", "spans", "_bucket").as[(String, Seq[Span], Int)]
+          .map { case (id, spans, b) => (id, htmlPayload(spans), b) }
+          .toDF("doc_id", "html", "_bucket")
+          .write.mode("overwrite").partitionBy("_bucket").parquet(backupDir)
+      // tmp + atomic rename, after the backup: a marker means staging is
+      // complete, and a crash before it leaves a staged table whose next
+      // run fails with the restage message, not a NoSuchFileException
       val tmpMarker = java.nio.file.Paths.get(s"$outDir/_commits/._buckets.tmp")
       // the marker records the run LAYOUT: bucket count, whether the html
       // backup sink is part of each bucket's committed unit, the staged
@@ -167,9 +189,10 @@ object ExtractPipeline {
       // resume with any of them changed must fail loudly (a flipped
       // htmlBackup would silently skip the backup for already-committed
       // buckets; a table staged without the heavy/bulk split has no bulk
-      // directory, so its passes would commit empty buckets)
+      // directory, so its passes would commit empty buckets; one staged
+      // without `_backup` would commit buckets with no html backup)
       java.nio.file.Files.writeString(tmpMarker,
-        s"$buckets\n$htmlBackup\n$StagedLayout\n$heavyBytes")
+        s"$buckets\n$htmlBackup\n$layout\n$heavyBytes")
       java.nio.file.Files.move(tmpMarker, bucketsMarker,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -189,22 +212,37 @@ object ExtractPipeline {
         s"commit log at $outDir was staged with htmlBackup=$stagedBackup, " +
           s"got htmlBackup=$htmlBackup — committed buckets would be missing " +
           "(or carrying stale) html-bucket-N data")
-      require(markerLines.length > 3 && markerLines(2) == StagedLayout,
-        s"commit log at $outDir was staged without the $StagedLayout layout " +
-          s"(no heavy/bulk split) — delete $stagedDir to restage; committed " +
-          "buckets are kept")
+      require(markerLines.length > 3 && markerLines(2) == layout,
+        s"commit log at $outDir was staged without the $layout layout " +
+          s"— delete $stagedDir to restage; committed buckets are kept")
       val stagedHeavy = markerLines(3).toInt
       require(stagedHeavy == heavyBytes,
         s"commit log at $outDir was staged with skewThresholdBytes=$stagedHeavy, " +
           s"got $heavyBytes — heavy docs are routed at staging; delete " +
           s"$stagedDir to restage with the new threshold")
     }
-    val rowSchema = org.apache.spark.sql.Encoders.product[DocRow].schema
     val heavyPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
+    /** Moves bucket `b`'s staged html backup to `html-bucket-b`. A target
+      * with no source is kept: an earlier attempt of this pass moved it.
+      * With neither, staging wrote no `_bucket=b` directory because the
+      * bucket has no docs, and the target is created empty. */
+    def commitBackup(b: Int): Unit = {
+      val src = new Path(s"$backupDir/_bucket=$b")
+      val dst = new Path(s"$outDir/html-bucket-$b")
+      def check(ok: Boolean, what: String): Unit =
+        if (!ok) throw new java.io.IOException(s"html backup of bucket $b: could not $what")
+      if (hfs.exists(src)) {
+        // a stale target from before a restage goes first: renaming onto an
+        // existing directory would move src inside it
+        if (hfs.exists(dst)) check(hfs.delete(dst, true), s"delete stale $dst")
+        check(hfs.rename(src, dst), s"rename $src to $dst")
+      } else if (!hfs.exists(dst)) check(hfs.mkdirs(dst), s"create $dst")
+    }
+
     /** One bucket pass: pruned scan -> extract -> parquet write (+ html
-      * backup) -> atomic manifest. The manifest metrics are observed on the
-      * write itself, so no job re-reads the committed files. */
+      * backup rename) -> atomic manifest. The manifest metrics are observed
+      * on the write itself, so no job re-reads the committed files. */
     def commitBucket(b: Int): String = {
       val t0 = System.nanoTime()
       // path-level partition pruning: only this bucket's files are read
@@ -215,8 +253,7 @@ object ExtractPipeline {
       }
       val (bulk, heavy) = (scan(heavy = false), scan(heavy = true))
       val scans = bulk.toSeq ++ heavy
-      val part = scans.map(_._2).reduceOption(_ unionAll _).getOrElse(spark.emptyDataset[DocRow])
-      val scannedFiles = part.inputFiles.length
+      val scannedFiles = scans.map(_._2.inputFiles.length).sum
       val scanPaths = scans.map(s => "\"" + s._1 + "\"").mkString("[", ",", "]")
       val bulkOut = extractDocs(bulk.fold(spark.emptyDataset[DocRow])(_._2), options)
       // round-robin the heavy docs so each lands in its own task
@@ -230,10 +267,7 @@ object ExtractPipeline {
         coalesce(sum(size(col("spans"))), lit(0L)).as("spans"),
         coalesce(sum(col("kernel_us")), lit(0L)).as("kernel_us"))
         .write.mode("overwrite").parquet(target)
-      if (htmlBackup)
-        part.map(r => (r.doc_id, htmlPayload(r.spans)))
-          .toDF("doc_id", "html")
-          .write.mode("overwrite").parquet(s"$outDir/html-bucket-$b")
+      if (htmlBackup) commitBackup(b)
       val stats = metrics.get
       val durMs = (System.nanoTime() - t0) / 1000000
       val json =
@@ -278,8 +312,10 @@ object ExtractPipeline {
     done.toSeq.filter(_ != null)
   }
 
-  /** The staged table's directory layout, recorded in `_commits/_buckets`. */
-  private val StagedLayout = "_bucket/_heavy"
+  /** The staged directory layout, recorded in `_commits/_buckets`: a table
+    * staged without the `_backup` projection cannot serve an htmlBackup run. */
+  private def stagedLayout(htmlBackup: Boolean): String =
+    if (htmlBackup) "_bucket/_heavy+_backup" else "_bucket/_heavy"
 
   private def manifestPath(outDir: String, bucket: Int): java.nio.file.Path =
     java.nio.file.Paths.get(s"$outDir/_commits/bucket-$bucket.json")

@@ -7,8 +7,8 @@ object EvalRun {
     val mode = if (args.nonEmpty) args(0) else "standard"
     val spark = SparkSession.builder().master("local[*]")
       .config("spark.sql.shuffle.partitions", Runtime.getRuntime.availableProcessors.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "WARN").getOrCreate()
     val s = EvalCorpus.score(spark, "/root/reference/tests/eval",
       "src/test/resources/evaldata.json", mode)
     println(s"EVAL[$mode] $s")

@@ -12,7 +12,7 @@ class FixtureSpec extends AnyFunSuite {
   private val Zero = ExtractorOptions(config = TrafConfig.Zero)
 
   private def readFile(name: String): String =
-    HtmlParser.decodeFile(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(Res, name)))
+    HtmlParser.decodeFile(FixtureCorpus.readAllBytes(java.nio.file.Paths.get(Res, name)))
 
   test("exotic_tags.html (unit_tests.py:167-172)") {
     val html = readFile("exotic_tags.html")
@@ -21,7 +21,7 @@ class FixtureSpec extends AnyFunSuite {
   }
 
   test("webpage.html.gz end-to-end (unit_tests.py:134-136)") {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(Res, "webpage.html.gz"))
+    val bytes = FixtureCorpus.readAllBytes(java.nio.file.Paths.get(Res, "webpage.html.gz"))
     val html = HtmlParser.decodeFile(bytes)
     val r = Extraction.extract(html, null, ExtractorOptions())
     assert(r != null && r.contains("Long story short,"), if (r == null) "null" else r.take(200))

@@ -32,7 +32,7 @@ class RealWorldGoldenSpec extends AnyFunSuite {
     var total = 0
     val failures = scala.collection.mutable.ListBuffer.empty[String]
     cases.foreach { case (url, file, wth, wo) =>
-      val html = HtmlParser.decodeFile(java.nio.file.Files.readAllBytes(
+      val html = HtmlParser.decodeFile(FixtureCorpus.readAllBytes(
         java.nio.file.Paths.get(Cache, file)))
       val r = Extraction.extract(html, url, ExtractorOptions(comments = true))
       val res = if (r == null) "" else r

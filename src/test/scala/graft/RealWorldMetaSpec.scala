@@ -30,7 +30,7 @@ class RealWorldMetaSpec extends AnyFunSuite {
     var total = 0
     val failures = scala.collection.mutable.ListBuffer.empty[String]
     cases.foreach { case (url, file, checks) =>
-      val html = HtmlParser.decodeFile(java.nio.file.Files.readAllBytes(
+      val html = HtmlParser.decodeFile(FixtureCorpus.readAllBytes(
         java.nio.file.Paths.get(Cache, file)))
       val tree = HtmlParser.loadHtml(html)
       val meta = if (tree == null) graft.meta.DocMeta() else Metadata.extractMetadata(tree, url)

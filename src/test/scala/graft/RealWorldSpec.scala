@@ -82,6 +82,7 @@ class RealWorldSpec extends AnyFunSuite {
   )
 
   test("real-world archived pages: scored substring parity") {
+    FixtureCorpus.require(Cache)
     var clausesTotal = 0
     var clausesPassed = 0
     var pagesClean = 0

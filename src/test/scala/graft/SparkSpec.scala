@@ -1,7 +1,7 @@
 package graft
 
 import graft.extract.{ExtractorOptions, TrafConfig}
-import graft.spark.{DocsTables, ExtractPipeline}
+import graft.spark.{DocRow, DocsTables, ExtractPipeline}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -250,7 +250,7 @@ class SparkSpec extends AnyFunSuite {
         ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4,
           skewThresholdBytes = 1 << 20, htmlBackup = backup)
       }
-      assert(jobs.length == 4 * (if (backup) 2 else 1), s"htmlBackup=$backup: ${jobs.length} jobs")
+      assert(jobs.length == 4, s"htmlBackup=$backup: ${jobs.length} jobs")
       (0 until 4).foreach { b =>
         assert(!new java.io.File(s"$dir/_staged/_bucket=$b/_heavy=true").exists())
         assertScanCovered(dir, b)
@@ -275,6 +275,64 @@ class SparkSpec extends AnyFunSuite {
       ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2)
     }
     assert(e.getMessage.contains("htmlBackup"))
+  }
+
+  test("commit log: html-bucket-N is bucket N's staged rows through htmlPayload; a resume keeps it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-backup-rows").toString
+    val input = DocsTables.docsTable(spark, sf)
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4, htmlBackup = true)
+    def backup(b: Int) = spark.read.parquet(s"$dir/html-bucket-$b").as[(String, String)].collect().toSet
+    val rows = (0 until 4).map { b =>
+      val staged = spark.read.parquet(s"$dir/_staged/_bucket=$b").select("doc_id", "spans").as[DocRow]
+        .collect().map(r => (r.doc_id, ExtractPipeline.htmlPayload(r.spans))).toSet
+      val ids = spark.read.parquet(s"$dir/bucket-$b").select("doc_id").as[String].collect().toSet
+      val got = backup(b)
+      assert(got.nonEmpty && got == staged, s"bucket $b")
+      assert(got.map(_._1) == ids, s"bucket $b")
+      got
+    }
+    // a crash after the rename, before the manifest: the resume keeps the
+    // moved backup and commits the bucket with the same rows
+    assert(new java.io.File(s"$dir/_commits/bucket-2.json").delete())
+    assert(!new java.io.File(s"$dir/_backup/_bucket=2").exists())
+    assert(ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4, htmlBackup = true) ==
+      Seq(s"$dir/bucket-2"))
+    assert(backup(2) == rows(2))
+  }
+
+  test("commit log: an htmlBackup table staged without _backup fails loudly, then restages") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-backup-layout").toString
+    val input = DocsTables.docsTable(spark, sf)
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2, htmlBackup = true)
+    // the marker a staging without the backup job wrote
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_commits/_buckets"),
+      "2\ntrue\n_bucket/_heavy\n0")
+    assert(new java.io.File(s"$dir/_commits/bucket-1.json").delete())
+    val e = intercept[IllegalArgumentException] {
+      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2, htmlBackup = true)
+    }
+    assert(e.getMessage.contains("restage"), e)
+    // restaging replaces bucket 1's earlier backup instead of nesting in it
+    assert(org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$dir/_staged")))
+    assert(ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2, htmlBackup = true) ==
+      Seq(s"$dir/bucket-1"))
+    assert(!new java.io.File(s"$dir/html-bucket-1/_bucket=1").exists())
+    val ids = spark.read.parquet(s"$dir/html-bucket-*").select("doc_id").as[String].collect()
+    assert(ids.sorted.toSeq == input.select("doc_id").as[String].collect().sorted.toSeq)
+  }
+
+  test("commit log: at 128 buckets, empty ones included, html-bucket-* holds exactly the input doc_ids") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-backup-128").toString
+    val input = DocsTables.docsTable(spark, sf)
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 128, htmlBackup = true)
+    val empty = (0 until 128).filter(b => ExtractPipeline.manifestMetrics(dir, b).get("docs") == 0)
+    assert(empty.nonEmpty, "no empty bucket at 128")
+    empty.foreach(b => assert(new java.io.File(s"$dir/html-bucket-$b").isDirectory, s"bucket $b"))
+    val ids = spark.read.parquet(s"$dir/html-bucket-*").select("doc_id").as[String].collect()
+    assert(ids.sorted.toSeq == input.select("doc_id").as[String].collect().sorted.toSeq)
   }
 
   test("commit log: a table staged without the heavy/bulk split fails loudly, then restages") {

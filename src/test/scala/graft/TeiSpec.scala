@@ -105,7 +105,7 @@ class TeiSpec extends AnyFunSuite {
   }
 
   test("exotic_tags check_tei fixture (unit_tests.py:173-177)") {
-    val content = new String(java.nio.file.Files.readAllBytes(
+    val content = new String(FixtureCorpus.readAllBytes(
       java.nio.file.Paths.get("/root/reference/tests/resources/exotic_tags_tei.html")), "UTF-8")
     // fixture is XML-ish; parse leniently and scrub
     val tree = HtmlParser.parseXmlLike(content)
