@@ -31,7 +31,8 @@ final case class ResultRow(
   * Scale design (1000-executor story):
   *  - the kernel is per-row pure Scala — embarrassingly parallel, no shuffle;
   *    `runWithCommitLog` lays the input out by doc_id hash once, at staging,
-  *    so a bucket pass is one map-only scan -> kernel -> write job;
+  *    through one exchange aligned to the buckets, so a bucket pass is one
+  *    map-only scan -> kernel -> write job over at most k staged files;
   *  - mega-document skew (north rule) is routed once, at staging: rows
   *    heavier than the skew threshold land in their bucket's heavy directory,
   *    and only a pass that finds one spreads those rows round-robin over
@@ -104,7 +105,12 @@ object ExtractPipeline {
     * partitioned by `_bucket` (the emulated `bucket(doc_id)` Iceberg layout)
     * and `_heavy`, which marks the docs whose payload (the text length
     * summed over all spans) exceeds `skewThresholdBytes`; `<= 0` routes no
-    * doc as heavy.
+    * doc as heavy. Staging adds one exchange, `repartition(buckets * k,
+    * doc_id)`. Spark's hash partitioning is `pmod(murmur3(doc_id, 42), n)`,
+    * the function that defines `_bucket`, so with `n = buckets * k` each
+    * shuffle partition holds rows of exactly one bucket (partition mod
+    * buckets): a bucket has at most k staged files, 2k with heavy docs,
+    * however many partitions the input had (see `filesPerBucket` for k).
     * Routing is decided there and never again. Every bucket pass — including
     * resume passes in a later process — reads only its own `_bucket=N`
     * directories: the bulk one goes straight from the scan through the
@@ -114,22 +120,25 @@ object ExtractPipeline {
     * scan volume is 1x (the staging write) + 1/buckets per pass, never
     * buckets× the raw table. `htmlBackup=true` adds one job at staging that
     * reads the staged table back once and writes the `(doc_id, html)`
-    * projection of every bucket, partitioned by `_bucket`, to `_backup`; a
-    * pass commits its share with a directory rename, not a second job.
+    * projection of every uncommitted bucket, partitioned by `_bucket`, to
+    * `_backup`; a pass commits its share with a directory rename, not a
+    * second job.
     * Each manifest records the directories (`scan_path`) and files it read.
     * The staged layout is part of the run: `_commits/_buckets` records the
     * bucket count, `htmlBackup`, the layout (which names `_backup` when
     * the backup is staged) and the threshold, and a resume that differs in
     * any of them fails.
     *
-    * Concurrency: the uncommitted buckets run on a pool of at most
-    * `defaultParallelism` passes that pull from one queue, so driver-side
-    * job overhead of one bucket overlaps the tasks of others. `wall_ms` in
-    * a manifest is that bucket's own wall time, which overlaps its
-    * neighbours'. The returned paths are in ascending bucket order. If a
-    * pass throws, no further pass starts, passes already running still
-    * commit, and the first failure is rethrown as is; a re-run then
-    * processes only the failed and unstarted buckets.
+    * Concurrency: the uncommitted buckets run on a pool of `passWidth`
+    * passes that pull from one queue, so driver-side job overhead of one
+    * bucket overlaps the tasks of others. The width comes from the staged
+    * listing (scan splits per pass against `defaultParallelism` lanes) and
+    * is recorded in each manifest as `pool_width`. `wall_ms` in a manifest
+    * is that bucket's own wall time, which overlaps its neighbours'. The
+    * returned paths are in ascending bucket order. If a pass throws, no
+    * further pass starts, passes already running still commit, and the
+    * first failure is rethrown as is; a re-run then processes only the
+    * failed and unstarted buckets.
     *
     * Metrics: docs, ok, spans and kernel_us are observed on the bucket's
     * write itself (`Dataset.observe`), not read back from the written files.
@@ -157,21 +166,28 @@ object ExtractPipeline {
     val rowSchema = org.apache.spark.sql.Encoders.product[DocRow].schema
     val hfs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val layout = stagedLayout(htmlBackup)
+    def committed(b: Int): Boolean = java.nio.file.Files.exists(manifestPath(outDir, b))
     if (!new java.io.File(s"$stagedDir/_SUCCESS").exists()) {
       val heavy =
         if (heavyBytes == 0) lit(false)
         else aggregate(col("spans"), lit(0L),
           (acc, s) => acc + coalesce(length(s.getField("text")), lit(0))) > heavyBytes
-      input.withColumn("_bucket", pmod(hash(col("doc_id")), lit(buckets)))
+      // `hash` is the exchange's partition function, so every partition of
+      // the exchange is a share of one bucket
+      input.repartition(buckets * stagedFilesPerBucket(input, buckets), col("doc_id"))
+        .withColumn("_bucket", pmod(hash(col("doc_id")), lit(buckets)))
         .withColumn("_heavy", heavy)
         .write.mode("overwrite").partitionBy("_bucket", "_heavy").parquet(stagedDir)
-      // the html backup of every bucket in one job. The schema is given, so
+      // the html backup of every uncommitted bucket in one job. Committed
+      // buckets are left out: after a restage nothing would ever move their
+      // copy out of `_backup`. The schema is given, so
       // reading the staged table back needs no schema-inference job; the
       // bucket directories are passed by name because Spark warns that a
       // path named `_staged` is hidden. An empty input stages no bucket.
       val stagedBuckets =
         if (!htmlBackup) Array.empty[String]
-        else hfs.globStatus(new Path(s"$stagedDir/_bucket=*")).map(_.getPath.toString)
+        else hfs.globStatus(new Path(s"$stagedDir/_bucket=*")).map(_.getPath)
+          .filterNot(p => committed(p.getName.stripPrefix("_bucket=").toInt)).map(_.toString)
       if (stagedBuckets.nonEmpty)
         spark.read.schema(rowSchema.add("_bucket", "int")).option("basePath", stagedDir)
           .parquet(stagedBuckets.toSeq: _*)
@@ -222,6 +238,16 @@ object ExtractPipeline {
           s"$stagedDir to restage with the new threshold")
     }
     val heavyPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val pending = (0 until buckets).filterNot(committed)
+    // scan splits per pass from the staged listing, no job: a file of n
+    // bytes is ceil(n / maxPartitionBytes) splits
+    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
+    val listing = hfs.listFiles(new Path(stagedDir), true)
+    val stagedSplits = Iterator.continually(listing).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(f => math.max(1L, (f.getLen + maxSplit - 1) / maxSplit)).sum
+    val width = passWidth(spark.sparkContext.defaultParallelism,
+      (stagedSplits + buckets - 1) / buckets, pending.size)
 
     /** Moves bucket `b`'s staged html backup to `html-bucket-b`. A target
       * with no source is kept: an earlier attempt of this pass moved it.
@@ -274,7 +300,7 @@ object ExtractPipeline {
         s"""{"bucket":$b,"docs":${stats("docs")},"ok":${stats("ok")},""" +
           s""""spans":${stats("spans")},"kernel_us":${stats("kernel_us")},""" +
           s""""wall_ms":$durMs,"input":"hash(doc_id) % $buckets == $b",""" +
-          s""""scan_path":$scanPaths,"scanned_files":$scannedFiles}"""
+          s""""scan_path":$scanPaths,"scanned_files":$scannedFiles,"pool_width":$width}"""
       val tmp = java.nio.file.Paths.get(s"$outDir/_commits/.bucket-$b.json.tmp")
       java.nio.file.Files.writeString(tmp, json)
       // atomic commit; a failed rename throws instead of reporting the
@@ -288,11 +314,9 @@ object ExtractPipeline {
     // `pending`). The pool is created here, not shared, so its threads
     // inherit this thread's Spark local properties (job group, scheduler
     // pool); a pre-existing pool would issue unattributed jobs.
-    val pending = (0 until buckets).filterNot(b => java.nio.file.Files.exists(manifestPath(outDir, b)))
     val next = new java.util.concurrent.atomic.AtomicInteger(0)
     val done = new Array[String](buckets)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val width = math.max(1, math.min(pending.size, spark.sparkContext.defaultParallelism))
     val lane: java.util.concurrent.Callable[Unit] = () => {
       var i = next.getAndIncrement()
       while (i < pending.size && failure.get == null) {
@@ -316,6 +340,48 @@ object ExtractPipeline {
     * staged without the `_backup` projection cannot serve an htmlBackup run. */
   private def stagedLayout(htmlBackup: Boolean): String =
     if (htmlBackup) "_bucket/_heavy+_backup" else "_bucket/_heavy"
+
+  /** The staging exchange has at most this many partitions per lane
+    * (`defaultParallelism`), unless `buckets` alone exceeds it. */
+  private val StagingPartitionsPerLane = 4
+
+  /** Bucket passes that run at once never exceed this many driver threads. */
+  private val MaxConcurrentPasses = 64
+
+  /** k, the staged files per bucket: the plan size estimate `sizeInBytes`
+    * over `buckets * maxPartitionBytes`, so a staged file is about one scan
+    * split, clamped to [1, kMax]. kMax keeps `buckets * k` within
+    * `StagingPartitionsPerLane` (4) × `lanes`. An unknown estimate, for
+    * which Spark reports `spark.sql.defaultSizeInBytes` (passed as
+    * `unknownSize`), takes kMax. */
+  private[graft] def filesPerBucket(sizeInBytes: BigInt, unknownSize: BigInt, buckets: Int,
+      maxPartitionBytes: Long, lanes: Int): Int = {
+    val kMax = math.max(1, StagingPartitionsPerLane * lanes / buckets)
+    if (sizeInBytes >= unknownSize) kMax
+    else {
+      val perBucket = BigInt(buckets) * maxPartitionBytes
+      ((sizeInBytes + perBucket - 1) / perBucket).max(1).min(kMax).toInt
+    }
+  }
+
+  /** k for staging `input` into `buckets`. The estimate comes from the
+    * optimized plan's statistics on the driver, as `DocsTables.fanOut`'s
+    * does, so it runs no job. */
+  private[graft] def stagedFilesPerBucket(input: Dataset[_], buckets: Int): Int = {
+    val conf = input.sparkSession.sessionState.conf
+    filesPerBucket(input.queryExecution.optimizedPlan.stats.sizeInBytes, conf.defaultSizeInBytes, buckets, conf.filesMaxPartitionBytes,
+      input.sparkSession.sparkContext.defaultParallelism)
+  }
+
+  /** Bucket passes to run at once, in one step from the run's own numbers
+    * (DS2, "Three steps is all you need", OSDI 2018): enough passes of
+    * `splitsPerPass` scan tasks each to fill `lanes` task slots, clamped to
+    * [1, min(pending, `MaxConcurrentPasses`)]. */
+  private[graft] def passWidth(lanes: Int, splitsPerPass: Long, pending: Int): Int = {
+    val splits = math.max(1L, splitsPerPass)
+    val fill = (lanes + splits - 1) / splits
+    math.max(1L, math.min(fill, math.min(pending, MaxConcurrentPasses).toLong)).toInt
+  }
 
   private def manifestPath(outDir: String, bucket: Int): java.nio.file.Path =
     java.nio.file.Paths.get(s"$outDir/_commits/bucket-$bucket.json")

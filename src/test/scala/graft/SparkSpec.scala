@@ -258,6 +258,106 @@ class SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** The staged parquet files of bucket `b`, heavy directory included. */
+  private def stagedFiles(dir: String, b: Int): Seq[String] =
+    Option(new java.io.File(s"$dir/_staged/_bucket=$b").listFiles()).toSeq.flatten
+      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getPath)).sorted
+
+  /** The committed output rows, kernel timing zeroed, in doc_id order. */
+  private def committedRows(dir: String): Seq[graft.spark.ResultRow] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/bucket-*").as[graft.spark.ResultRow].collect()
+      .map(_.copy(kernel_us = 0L)).sortBy(_.doc_id).toSeq
+  }
+
+  test("commit log: staging writes at most k files per bucket, whatever the input's partition count") {
+    val base = DocsTables.docsTable(spark, sf)
+    val fresh = java.nio.file.Files.createTempDirectory("graft-k-fresh").toString
+    ExtractPipeline.runWithCommitLog(spark, base, fresh, opts, buckets = 4)
+    // without the staging exchange every input partition writes a file into
+    // every bucket it holds rows of: up to p files per bucket
+    Seq(4, 8, 32).foreach { p =>
+      val input = base.repartition(p)
+      val k = ExtractPipeline.stagedFilesPerBucket(input, 4)
+      assert(k == 1, s"p=$p")
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-k-$p").toString
+      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4)
+      (0 until 4).foreach { b =>
+        assert(stagedFiles(dir, b).length <= k, s"p=$p bucket $b: ${stagedFiles(dir, b)}")
+        assertScanCovered(dir, b)
+      }
+      assert(committedRows(dir) == committedRows(fresh), s"p=$p")
+    }
+    // a tiny split size takes k to kMax: still at most k files per bucket,
+    // each of them one bucket's rows
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    try {
+      val input = base.repartition(32)
+      val k = ExtractPipeline.stagedFilesPerBucket(input, 4)
+      // kMax: 4 x lanes / buckets
+      assert(k == math.max(1, 4 * spark.sparkContext.defaultParallelism / 4), k)
+      val dir = java.nio.file.Files.createTempDirectory("graft-k-max").toString
+      ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4)
+      val files = (0 until 4).map(stagedFiles(dir, _).length)
+      assert(files.forall(_ <= k) && files.exists(_ > 1), files)
+      (0 until 4).foreach(assertScanCovered(dir, _))
+      assert(committedRows(dir) == committedRows(fresh))
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  test("commit log: k is 1 at sf scale and bounded for a 100 TB or unknown estimate") {
+    val split = 128L << 20
+    val unknown = BigInt(Long.MaxValue)
+    // an sf-scale estimate (50 MiB) into 16 buckets on 4 lanes; there kMax
+    // is 1 too, so an unknown estimate also stages one file per bucket
+    assert(ExtractPipeline.filesPerBucket(BigInt(50L << 20), unknown, 16, split, 4) == 1)
+    assert(ExtractPipeline.filesPerBucket(unknown, unknown, 16, split, 4) == 1)
+    // the README cluster: 100 TB, 4096 buckets, 1000 executors x 8 cores.
+    // Unclamped, 100 TB / (4096 x 128 MiB) is 182 files per bucket
+    val tb100 = BigInt(100) << 40
+    val kMax = ExtractPipeline.filesPerBucket(tb100, unknown, 4096, split, 8000)
+    assert(kMax == 7 && 4096 * kMax <= 4 * 8000, kMax)
+    assert(ExtractPipeline.filesPerBucket(unknown, unknown, 4096, split, 8000) == kMax)
+    // between the bounds k is the ceiling of size over buckets x split
+    assert(ExtractPipeline.filesPerBucket(BigInt(2 * split * 3 - 1), unknown, 2, split, 4) == 3)
+    assert(ExtractPipeline.filesPerBucket(BigInt(0), unknown, 2, split, 4) == 1)
+  }
+
+  test("commit log: pass pool width fills the lanes from the staged splits per pass") {
+    // README cluster: 8000 lanes, 4096 pending buckets, ~200 splits a pass
+    val w = ExtractPipeline.passWidth(8000, 200, 4096)
+    assert(w >= 10 && w < 100, w)
+    // 4 lanes, one staged file per bucket: min(pending, lanes), as before
+    assert(ExtractPipeline.passWidth(4, 1, 16) == 4)
+    assert(ExtractPipeline.passWidth(4, 1, 2) == 2)
+    assert(ExtractPipeline.passWidth(4, 0, 0) == 1)
+    assert(ExtractPipeline.passWidth(4, 3, 16) == 2)
+    // one-split passes on a big cluster stop at the fixed thread cap
+    assert(ExtractPipeline.passWidth(8000, 1, 4096) == 64)
+  }
+
+  test("commit log: a table staged without the bucket exchange resumes with no restage") {
+    import org.apache.spark.sql.functions._
+    val input = DocsTables.docsTable(spark, sf)
+    val fresh = java.nio.file.Files.createTempDirectory("graft-old-fresh").toString
+    ExtractPipeline.runWithCommitLog(spark, input, fresh, opts, buckets = 4)
+    val dir = java.nio.file.Files.createTempDirectory("graft-old-staging").toString
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4)
+    // the staging write before the exchange existed: the same layout and
+    // marker, one file per input partition in each bucket
+    input.repartition(8).withColumn("_bucket", pmod(hash(col("doc_id")), lit(4)))
+      .withColumn("_heavy", lit(false))
+      .write.mode("overwrite").partitionBy("_bucket", "_heavy").parquet(s"$dir/_staged")
+    val before = (0 until 4).map(stagedFiles(dir, _))
+    assert(before.exists(_.length > 1), before)
+    (0 until 4).foreach(b => assert(new java.io.File(s"$dir/_commits/bucket-$b.json").delete()))
+    assert(ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4) ==
+      (0 until 4).map(b => s"$dir/bucket-$b"))
+    assert((0 until 4).map(stagedFiles(dir, _)) == before, "the table was restaged")
+    (0 until 4).foreach(assertScanCovered(dir, _))
+    assert(committedRows(dir) == committedRows(fresh))
+  }
+
   test("commit log: HTML backup sink persists raw payloads bucket-aligned") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft-backup").toString
@@ -321,6 +421,11 @@ class SparkSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/html-bucket-1/_bucket=1").exists())
     val ids = spark.read.parquet(s"$dir/html-bucket-*").select("doc_id").as[String].collect()
     assert(ids.sorted.toSeq == input.select("doc_id").as[String].collect().sorted.toSeq)
+    // the restage backed up only the uncommitted bucket, and its pass moved
+    // it: no second copy of committed bucket 0 is left in `_backup`
+    val left = Option(new java.io.File(s"$dir/_backup").listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("_bucket="))
+    assert(left.isEmpty, left)
   }
 
   test("commit log: at 128 buckets, empty ones included, html-bucket-* holds exactly the input doc_ids") {
@@ -389,6 +494,8 @@ class SparkSpec extends AnyFunSuite {
     }
     val (staged, log) = main("--skew-bytes", "0")
     assert(staged == 0 && log.contains("buckets_written=2/2") && log.contains("skew threshold off"), log)
+    // local[2], one staged file per bucket: two one-split passes fill both lanes
+    assert(log.contains("staged_files_per_bucket_max=1 pool_width=2"), log)
     val (resumed, err) = main() // the default 1 MiB threshold
     assert(resumed != 0 && err.contains("skewThresholdBytes=0, got 1048576"), err)
   }
