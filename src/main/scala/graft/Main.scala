@@ -76,14 +76,12 @@ object Main {
       .partition { case (path, _) => thisRun.contains(path) }
     def total(ms: Seq[(String, Map[String, Long])], k: String) = ms.map(_._2(k)).sum
     val nRun = total(run, "docs")
-    // staged files per bucket (the most any pass read) and the pass pool
-    // width this run chose; a run that resumed nothing has no width
+    // staged files per bucket: the most any pass read
     val files = (run ++ before).flatMap(_._2.get("scanned_files")).maxOption.getOrElse(0L)
-    val width = run.flatMap(_._2.get("pool_width")).headOption.fold("none")(_.toString)
     println(f"GRAFT-EXTRACT done: buckets_written=${written.length}/$buckets " +
       f"docs_this_run=$nRun ok_this_run=${total(run, "ok")} " +
       f"docs_already_committed=${total(before, "docs")} " +
-      s"staged_files_per_bucket_max=$files pool_width=$width " +
+      s"staged_files_per_bucket_max=$files " +
       f"wall=$secs%.1fs tput=${nRun / math.max(secs, 1e-9)}%.0f docs/s " +
       s"output=$output (skew threshold ${if (skewBytes > 0) s"${skewBytes}B" else "off"}, " +
       s"mode $mode, htmlBackup=$htmlBackup)")

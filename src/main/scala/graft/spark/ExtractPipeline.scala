@@ -117,8 +117,12 @@ object ExtractPipeline {
     * kernel to the write, one map-only job with no exchange; a heavy one
     * exists only if staging routed a doc there, and only then does the pass
     * spread those rows round-robin over their own partitions. Total input
-    * scan volume is 1x (the staging write) + 1/buckets per pass, never
-    * buckets× the raw table. `htmlBackup=true` adds one job at staging that
+    * scan volume is 1x (the staging read) + 1/buckets per pass, never
+    * buckets× the raw table; the staging exchange adds one shuffle write
+    * and one shuffle read of the whole input, and each of its
+    * `buckets * k` reducers handles 1/(buckets * k) of it (about 3.5 GB at
+    * 100 TB, 4096 buckets and k = 7, a cost measured only at sf0.1, where
+    * the shuffle is about 2 MB). `htmlBackup=true` adds one job at staging that
     * reads the staged table back once and writes the `(doc_id, html)`
     * projection of every uncommitted bucket, partitioned by `_bucket`, to
     * `_backup`; a pass commits its share with a directory rename, not a
@@ -129,13 +133,11 @@ object ExtractPipeline {
     * the backup is staged) and the threshold, and a resume that differs in
     * any of them fails.
     *
-    * Concurrency: the uncommitted buckets run on a pool of `passWidth`
-    * passes that pull from one queue, so driver-side job overhead of one
-    * bucket overlaps the tasks of others. The width comes from the staged
-    * listing (scan splits per pass against `defaultParallelism` lanes) and
-    * is recorded in each manifest as `pool_width`. `wall_ms` in a manifest
-    * is that bucket's own wall time, which overlaps its neighbours'. The
-    * returned paths are in ascending bucket order. If a pass throws, no
+    * Concurrency: the uncommitted buckets run on a pool of at most
+    * `defaultParallelism` passes that pull from one queue, so driver-side
+    * job overhead of one bucket overlaps the tasks of others. `wall_ms` in
+    * a manifest is that bucket's own wall time, which overlaps its
+    * neighbours'. The returned paths are in ascending bucket order. If a pass throws, no
     * further pass starts, passes already running still commit, and the
     * first failure is rethrown as is; a re-run then processes only the
     * failed and unstarted buckets.
@@ -180,10 +182,14 @@ object ExtractPipeline {
         .write.mode("overwrite").partitionBy("_bucket", "_heavy").parquet(stagedDir)
       // the html backup of every uncommitted bucket in one job. Committed
       // buckets are left out: after a restage nothing would ever move their
-      // copy out of `_backup`. The schema is given, so
+      // copy out of `_backup`. `_backup` is cleared first, because the job
+      // is skipped when no uncommitted bucket has docs, and a `_bucket=N`
+      // left by an earlier staging would then be committed as bucket N's
+      // html. The schema is given, so
       // reading the staged table back needs no schema-inference job; the
       // bucket directories are passed by name because Spark warns that a
       // path named `_staged` is hidden. An empty input stages no bucket.
+      if (htmlBackup) hfs.delete(new Path(backupDir), true)
       val stagedBuckets =
         if (!htmlBackup) Array.empty[String]
         else hfs.globStatus(new Path(s"$stagedDir/_bucket=*")).map(_.getPath)
@@ -238,16 +244,6 @@ object ExtractPipeline {
           s"$stagedDir to restage with the new threshold")
     }
     val heavyPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pending = (0 until buckets).filterNot(committed)
-    // scan splits per pass from the staged listing, no job: a file of n
-    // bytes is ceil(n / maxPartitionBytes) splits
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val listing = hfs.listFiles(new Path(stagedDir), true)
-    val stagedSplits = Iterator.continually(listing).takeWhile(_.hasNext).map(_.next())
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(f => math.max(1L, (f.getLen + maxSplit - 1) / maxSplit)).sum
-    val width = passWidth(spark.sparkContext.defaultParallelism,
-      (stagedSplits + buckets - 1) / buckets, pending.size)
 
     /** Moves bucket `b`'s staged html backup to `html-bucket-b`. A target
       * with no source is kept: an earlier attempt of this pass moved it.
@@ -300,7 +296,7 @@ object ExtractPipeline {
         s"""{"bucket":$b,"docs":${stats("docs")},"ok":${stats("ok")},""" +
           s""""spans":${stats("spans")},"kernel_us":${stats("kernel_us")},""" +
           s""""wall_ms":$durMs,"input":"hash(doc_id) % $buckets == $b",""" +
-          s""""scan_path":$scanPaths,"scanned_files":$scannedFiles,"pool_width":$width}"""
+          s""""scan_path":$scanPaths,"scanned_files":$scannedFiles}"""
       val tmp = java.nio.file.Paths.get(s"$outDir/_commits/.bucket-$b.json.tmp")
       java.nio.file.Files.writeString(tmp, json)
       // atomic commit; a failed rename throws instead of reporting the
@@ -314,9 +310,11 @@ object ExtractPipeline {
     // `pending`). The pool is created here, not shared, so its threads
     // inherit this thread's Spark local properties (job group, scheduler
     // pool); a pre-existing pool would issue unattributed jobs.
+    val pending = (0 until buckets).filterNot(committed)
     val next = new java.util.concurrent.atomic.AtomicInteger(0)
     val done = new Array[String](buckets)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val width = math.max(1, math.min(pending.size, spark.sparkContext.defaultParallelism))
     val lane: java.util.concurrent.Callable[Unit] = () => {
       var i = next.getAndIncrement()
       while (i < pending.size && failure.get == null) {
@@ -345,9 +343,6 @@ object ExtractPipeline {
     * (`defaultParallelism`), unless `buckets` alone exceeds it. */
   private val StagingPartitionsPerLane = 4
 
-  /** Bucket passes that run at once never exceed this many driver threads. */
-  private val MaxConcurrentPasses = 64
-
   /** k, the staged files per bucket: the plan size estimate `sizeInBytes`
     * over `buckets * maxPartitionBytes`, so a staged file is about one scan
     * split, clamped to [1, kMax]. kMax keeps `buckets * k` within
@@ -369,18 +364,8 @@ object ExtractPipeline {
     * does, so it runs no job. */
   private[graft] def stagedFilesPerBucket(input: Dataset[_], buckets: Int): Int = {
     val conf = input.sparkSession.sessionState.conf
-    filesPerBucket(input.queryExecution.optimizedPlan.stats.sizeInBytes, conf.defaultSizeInBytes, buckets, conf.filesMaxPartitionBytes,
-      input.sparkSession.sparkContext.defaultParallelism)
-  }
-
-  /** Bucket passes to run at once, in one step from the run's own numbers
-    * (DS2, "Three steps is all you need", OSDI 2018): enough passes of
-    * `splitsPerPass` scan tasks each to fill `lanes` task slots, clamped to
-    * [1, min(pending, `MaxConcurrentPasses`)]. */
-  private[graft] def passWidth(lanes: Int, splitsPerPass: Long, pending: Int): Int = {
-    val splits = math.max(1L, splitsPerPass)
-    val fill = (lanes + splits - 1) / splits
-    math.max(1L, math.min(fill, math.min(pending, MaxConcurrentPasses).toLong)).toInt
+    filesPerBucket(input.queryExecution.optimizedPlan.stats.sizeInBytes, conf.defaultSizeInBytes,
+      buckets, conf.filesMaxPartitionBytes, input.sparkSession.sparkContext.defaultParallelism)
   }
 
   private def manifestPath(outDir: String, bucket: Int): java.nio.file.Path =

@@ -323,19 +323,6 @@ class SparkSpec extends AnyFunSuite {
     assert(ExtractPipeline.filesPerBucket(BigInt(0), unknown, 2, split, 4) == 1)
   }
 
-  test("commit log: pass pool width fills the lanes from the staged splits per pass") {
-    // README cluster: 8000 lanes, 4096 pending buckets, ~200 splits a pass
-    val w = ExtractPipeline.passWidth(8000, 200, 4096)
-    assert(w >= 10 && w < 100, w)
-    // 4 lanes, one staged file per bucket: min(pending, lanes), as before
-    assert(ExtractPipeline.passWidth(4, 1, 16) == 4)
-    assert(ExtractPipeline.passWidth(4, 1, 2) == 2)
-    assert(ExtractPipeline.passWidth(4, 0, 0) == 1)
-    assert(ExtractPipeline.passWidth(4, 3, 16) == 2)
-    // one-split passes on a big cluster stop at the fixed thread cap
-    assert(ExtractPipeline.passWidth(8000, 1, 4096) == 64)
-  }
-
   test("commit log: a table staged without the bucket exchange resumes with no restage") {
     import org.apache.spark.sql.functions._
     val input = DocsTables.docsTable(spark, sf)
@@ -438,6 +425,19 @@ class SparkSpec extends AnyFunSuite {
     empty.foreach(b => assert(new java.io.File(s"$dir/html-bucket-$b").isDirectory, s"bucket $b"))
     val ids = spark.read.parquet(s"$dir/html-bucket-*").select("doc_id").as[String].collect()
     assert(ids.sorted.toSeq == input.select("doc_id").as[String].collect().sorted.toSeq)
+    // a restage whose only uncommitted bucket is empty runs no backup job; a
+    // `_backup/_bucket=N` an earlier staging left must not become its html
+    val (e, full) = (empty.head, (0 until 128).find(!empty.contains(_)).get)
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$dir/html-bucket-$full"),
+      new java.io.File(s"$dir/_backup/_bucket=$e"))
+    assert(new java.io.File(s"$dir/_commits/bucket-$e.json").delete())
+    assert(org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$dir/_staged")))
+    assert(ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 128, htmlBackup = true) ==
+      Seq(s"$dir/bucket-$e"))
+    assert(new java.io.File(s"$dir/html-bucket-$e").list().forall(!_.endsWith(".parquet")))
+    assert(!new java.io.File(s"$dir/_backup/_bucket=$e").exists())
+    val again = spark.read.parquet(s"$dir/html-bucket-*").select("doc_id").as[String].collect()
+    assert(again.sorted.toSeq == ids.sorted.toSeq)
   }
 
   test("commit log: a table staged without the heavy/bulk split fails loudly, then restages") {
@@ -494,8 +494,8 @@ class SparkSpec extends AnyFunSuite {
     }
     val (staged, log) = main("--skew-bytes", "0")
     assert(staged == 0 && log.contains("buckets_written=2/2") && log.contains("skew threshold off"), log)
-    // local[2], one staged file per bucket: two one-split passes fill both lanes
-    assert(log.contains("staged_files_per_bucket_max=1 pool_width=2"), log)
+    // one staged file per bucket, whatever the input's partition count
+    assert(log.contains("staged_files_per_bucket_max=1 "), log)
     val (resumed, err) = main() // the default 1 MiB threshold
     assert(resumed != 0 && err.contains("skewThresholdBytes=0, got 1048576"), err)
   }
