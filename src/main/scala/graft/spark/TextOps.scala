@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions._
   * Scale notes per operator:
   *  - exact dedup: one hash-shuffle groupBy on the text (at 100 TB: group by
   *    xxhash64 prefix bucket first, then exact within bucket);
-  *  - MinHash LSH: signatures are computed scan-side (map-only), candidate
-  *    generation is an equi-join on (band, band_hash) — the only quadratic
-  *    risk is inside a bucket, which the band hash bounds;
+  *  - near-dup joins (MinHash, n-gram prefix filter, banded SimHash, SRP-LSH):
+  *    keys are computed scan-side and candidates come from one blocking
+  *    self-join, `candidatePairs` — the only quadratic risk is inside a key;
+  *    MinHash, n-gram and SimHash cap hot keys (`bucketCap`, `tokenCap`,
+  *    `bandCap`), SRP-LSH has no cap;
   *  - ANN: brute-force cosine against a broadcast query set (the baseline);
   *    the scale path is the same join keyed by an IVF/LSH bucket.
   */
@@ -296,38 +298,57 @@ object TextOps {
     // whole-stage-codegen expressions and the same values cost <1 s. bhash
     // values are bit-identical (same hash over the same slice), so the
     // candidate set and the verified output are unchanged.
-    val allBands = sigs
+    val bands = sigs
       .select(col("doc_id"), col("mh"),
         explode(sequence(lit(0), lit(LshBands - 1))).as("band"))
       .select(col("doc_id"), col("band"),
         hash(slice(col("mh"), col("band") * LshRows + 1, lit(LshRows))).as("bhash"))
-    val bands =
-      if (bucketCap <= 0) allBands
-      else {
-        val hot = allBands.groupBy(col("band"), col("bhash"))
-          .agg(count(lit(1)).as("bsz")).filter(col("bsz") > bucketCap)
-          .select(col("band"), col("bhash"))
-        allBands.join(broadcast(hot), Seq("band", "bhash"), "left_anti")
-      }
-    val candidates = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bhash") === col("b.bhash") &&
-          col("a.doc_id") < col("b.doc_id"))
+    val candidates = candidatePairs(bands, Seq("band", "bhash"), bucketCap, None)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    // verify joins ship long arrays (8 B/shingle) only for candidate rows.
-    // jaccard = |I| / (|A| + |B| - |I|): the union size falls out of the
-    // set sizes, and |I| is the native sorted-merge count — the previous
-    // array_intersect + array_union built two hash sets and one result
-    // array PER CANDIDATE PAIR (same integers, same double, same round).
-    val withSets = candidates
+    jaccardVerify(candidates, corpus, threshold)
+  }
+
+  /** The blocking self-join of the near-dup family. `rows` are
+    * `(id, key…, payload…)`, id first; returns the `a`/`b` self-join on equal
+    * `keys`, `a.id < b.id` and `extra` (a condition over both sides, kept in
+    * the join so a failing pair is never materialized). A pair sharing m
+    * keys comes back m times: callers project and deduplicate.
+    * `cap > 0` is the 100 TB hot-key guard: keys held by more than `cap`
+    * rows are counted once and removed by a broadcast anti-join (a pair
+    * sharing only such keys is lost); `cap <= 0` keeps every key. */
+  private def candidatePairs(rows: DataFrame, keys: Seq[String], cap: Int,
+      extra: Option[Column]): DataFrame = {
+    val kept =
+      if (cap <= 0) rows
+      else {
+        val hot = rows.groupBy(keys.map(col): _*)
+          .agg(count(lit(1)).as("bsz")).filter(col("bsz") > cap)
+          .select(keys.map(col): _*)
+        rows.join(broadcast(hot), keys, "left_anti")
+      }
+    val id = rows.columns.head
+    val onKeys = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+      col(s"a.$id") < col(s"b.$id")
+    kept.as("a").join(kept.as("b"), extra.fold(onKeys)(onKeys && _))
+  }
+
+  /** Exact 3-shingle Jaccard verify of `(id_a, id_b)` candidates against the
+    * sorted shingle corpus (`shingleCorpus`), keeping pairs >= `threshold`.
+    * The joins ship long arrays (8 B/shingle) only for candidate rows.
+    * jaccard = |I| / (|A| + |B| - |I|): the union size falls out of the set
+    * sizes, and |I| is the native sorted-merge count, which builds no hash
+    * set or result array per candidate pair. */
+  private def jaccardVerify(cands: DataFrame, corpus: DataFrame,
+      threshold: Double): DataFrame = {
+    val inter = call_function("sorted_intersect_count", col("sh_a"), col("sh_b"))
+    cands
       .join(corpus.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(corpus.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-    val inter = call_function("sorted_intersect_count", col("sh_a"), col("sh_b"))
-    withSets.select(col("id_a"), col("id_b"),
+      .select(col("id_a"), col("id_b"),
         round(inter / (size(col("sh_a")) + size(col("sh_b")) - inter)
           .cast("double"), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   def dedupMinhashOracle(threshold: Double = 0.8): String =
@@ -343,25 +364,6 @@ object TextOps {
        |WHERE a.doc_id < b.doc_id
        |  AND len(list_intersect(a.sh, b.sh)) / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE) >= $threshold""".stripMargin
 
-  /** Near-dup CLUSTERS: connected components over the MinHash near-dup
-    * pair graph, labeling every corpus doc with the smallest doc_id in its
-    * component (singletons label themselves) — the "keep one canonical doc
-    * per duplicate cluster" step a production dedup pipeline runs after
-    * pair generation.
-    *
-    * Algorithm: star contraction with label flattening. Each round (1)
-    * contracts every edge through the current labels and drops self-loops,
-    * (2) lowers each representative to its minimum neighboring
-    * representative, (3) flattens labels one pointer hop (L := L∘L).
-    * Contraction + flattening compound, so a chain of diameter d resolves
-    * in O(log d) rounds — the Kiveris et al. star-contraction family, the
-    * published shape for trillion-edge connected components — while plain
-    * min-label propagation (GraphX-style Pregel) needs d rounds. The
-    * iteration runs only over the near-dup MEMBER subgraph (nodes with at
-    * least one pair); the full corpus is labeled once at the end with a
-    * left join, so per-round cost is O(pairs), not O(corpus). At 100 TB
-    * the contracted edge set shrinks monotonically and every join key is
-    * an 8-byte id; AQE handles the skew a mega-component would create. */
   /** Convergence/robustness facts of a connectedComponents run. */
   final case class ClusterStats(converged: Boolean, rounds: Int, residualEdges: Long)
 
@@ -499,6 +501,25 @@ object TextOps {
     parent.keys.map(k => (k, find(k))).toMap
   }
 
+  /** Near-dup CLUSTERS: connected components over the MinHash near-dup
+    * pair graph, labeling every corpus doc with the smallest doc_id in its
+    * component (singletons label themselves) — the "keep one canonical doc
+    * per duplicate cluster" step a production dedup pipeline runs after
+    * pair generation.
+    *
+    * Algorithm: star contraction with label flattening. Each round (1)
+    * contracts every edge through the current labels and drops self-loops,
+    * (2) lowers each representative to its minimum neighboring
+    * representative, (3) flattens labels one pointer hop (L := L∘L).
+    * Contraction + flattening compound, so a chain of diameter d resolves
+    * in O(log d) rounds — the Kiveris et al. star-contraction family, the
+    * published shape for trillion-edge connected components — while plain
+    * min-label propagation (GraphX-style Pregel) needs d rounds. The
+    * iteration runs only over the near-dup MEMBER subgraph (nodes with at
+    * least one pair); the full corpus is labeled once at the end with a
+    * left join, so per-round cost is O(pairs), not O(corpus). At 100 TB
+    * the contracted edge set shrinks monotonically and every join key is
+    * an 8-byte id; AQE handles the skew a mega-component would create. */
   def dedupClusters(docs: DataFrame, threshold: Double = 0.8,
       maxIters: Int = 20, localFinishEdges: Int = 100000): DataFrame = {
     val pairs = dedupMinhash(docs, threshold)
@@ -556,8 +577,9 @@ object TextOps {
     * but with zero probabilistic machinery: this is the exact-guarantee
     * path when LSH's (tiny) miss probability is not acceptable. At 100 TB:
     * join keys are 8-byte hashes; prefix length shrinks as threshold rises
-    * (t=0.8 keeps ~20% of tokens); AQE handles hot-token skew. */
-  /** `tokenCap > 0` is the 100 TB hot-token guard (mirror of dedupMinhash's
+    * (t=0.8 keeps ~20% of tokens); AQE handles hot-token skew.
+    *
+    * `tokenCap > 0` is the 100 TB hot-token guard (mirror of dedupMinhash's
     * bucketCap): a prefix token shared by more than `tokenCap` docs would
     * generate O(freq²) candidate pairs from one join key — the token list is
     * computed once and removed by a broadcast anti-join. RECALL TRADE: unlike
@@ -573,17 +595,9 @@ object TextOps {
     val corpus = shingleCorpus(docs)
     val prefixLen = (size(col("sh")) -
       ceil(size(col("sh")) * lit(threshold)).cast("int") + 1)
-    val allTokens = corpus
+    val tokens = corpus
       .select(col("doc_id"), size(col("sh")).as("sz"),
         explode(slice(col("sh"), lit(1), prefixLen)).as("tok"))
-    val tokens =
-      if (tokenCap <= 0) allTokens
-      else {
-        val hot = allTokens.groupBy(col("tok"))
-          .agg(count(lit(1)).as("tsz")).filter(col("tsz") > tokenCap)
-          .select(col("tok"))
-        allTokens.join(broadcast(hot), Seq("tok"), "left_anti")
-      }
     // LENGTH FILTER at the candidate join (Bayardo/Xiao set-similarity-join
     // staple): J(A,B) >= t forces t*|A| <= |B| and t*|B| <= |A| (the
     // intersection is bounded by the smaller set, the union bounded below by
@@ -591,35 +605,14 @@ object TextOps {
     // before the candidate explosion — lossless, the exact-jaccard verify
     // output is unchanged. Kills the freq² pair blow-up of corpus-wide
     // boilerplate prefix tokens shared across differently-sized docs.
-    val cands = tokens.as("a").join(tokens.as("b"),
-        col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id") &&
-          col("b.sz") >= col("a.sz") * lit(threshold) &&
-          col("a.sz") >= col("b.sz") * lit(threshold))
+    val lengthFilter = col("b.sz") >= col("a.sz") * lit(threshold) &&
+      col("a.sz") >= col("b.sz") * lit(threshold)
+    val cands = candidatePairs(tokens, Seq("tok"), tokenCap, Some(lengthFilter))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")).distinct()
-    // native merge-count verify — see dedupMinhash's verify note
-    val inter = call_function("sorted_intersect_count", col("sh_a"), col("sh_b"))
-    cands
-      .join(corpus.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(corpus.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(inter / (size(col("sh_a")) + size(col("sh_b")) - inter)
-          .cast("double"), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardVerify(cands, corpus, threshold)
   }
 
   // --------------------------------------------------------------- simhash
-
-  /** SimHash fingerprints via the native `simhash64` expression (hex like
-    * content_fingerprint; rows-only check — blake2b is not available to the
-    * SQL oracle). */
-  def simhashFingerprints(spark: SparkSession, docs: DataFrame): DataFrame = {
-    SqlSurface.registerVecDot(spark)
-    val fp = call_function("simhash64", col("text"))
-    // Long.toHexString semantics (content_fingerprint): no zero padding
-    docs.select(col("doc_id").cast("long").as("doc_id"),
-      when(fp === 0L, lit("0"))
-        .otherwise(regexp_replace(lower(hex(fp)), "^0+", "")).as("fingerprint"))
-  }
 
   /** SimHash shaped for a SQL oracle: fingerprint the duplicated corpus
     * (every text twice, under doc_id and doc_id+1000000 — two independent
@@ -649,8 +642,8 @@ object TextOps {
     * simhash analogue of prefix filtering); verify with bit_count(xor).
     * Join keys are (band, 16-bit band value) — fixed-width, never text.
     * Degenerate bands (e.g. a corpus-wide all-zero band from short docs)
-    * create hot keys; `bandCap` drops them via the same broadcast anti-join
-    * pattern as dedupMinhash's bucketCap (recall trade: a dropped pair must
+    * create hot keys; `bandCap` drops them through candidatePairs' cap, as
+    * dedupMinhash's bucketCap does (recall trade: a dropped pair must
     * have collided ONLY in capped bands). Spec-pinned against a capped
     * brute-force all-pairs hamming join. */
   def dedupSimhash(spark: SparkSession, docs: DataFrame, maxHamming: Int = 3,
@@ -673,7 +666,7 @@ object TextOps {
     // scan's natural splits deliberately.
     val corpus = corpusDocs
       .select(col("doc_id"), call_function("simhash64", col("text")).as("fp"))
-    val allBands = corpus.select(col("doc_id"), col("fp"),
+    val bands = corpus.select(col("doc_id"), col("fp"),
       posexplode(array((0 until nBands).map { b =>
         // unsigned slice of bandBits bits (last band takes the remainder)
         val lo = b * bandBits
@@ -681,17 +674,7 @@ object TextOps {
         shiftrightunsigned(col("fp"), lo).bitwiseAND(
           lit((1L << width) - 1 | (if (width == 64) -1L else 0L)))
       }: _*)).as(Seq("band", "bval")))
-    val bands =
-      if (bandCap <= 0) allBands
-      else {
-        val hot = allBands.groupBy(col("band"), col("bval"))
-          .agg(count(lit(1)).as("bsz")).filter(col("bsz") > bandCap)
-          .select(col("band"), col("bval"))
-        allBands.join(broadcast(hot), Seq("band", "bval"), "left_anti")
-      }
-    bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
-          col("a.doc_id") < col("b.doc_id"))
+    candidatePairs(bands, Seq("band", "bval"), bandCap, None)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).cast("int").as("hamming"))
       .distinct()
@@ -797,9 +780,8 @@ object TextOps {
     // and the post-verify distinct shuffles only surviving pairs. Output
     // pair set identical: verification is deterministic per pair, so
     // dedup-before and dedup-after commute.
-    val cand = tagged.as("a").join(tagged.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
+    // cap 0: no caller sets an SRP cap, so none is offered
+    val cand = candidatePairs(tagged, Seq("tbl", "bucket"), 0, None)
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
     // verify with the SAME float formulation as embeddingNearDup (normalize
     // each side ONCE at the scan, then dot per pair): every emitted pair
@@ -862,19 +844,6 @@ object TextOps {
        |WHERE a.vec_id < b.vec_id AND a.vec_id < $cap AND b.vec_id < $cap
        |  AND list_cosine_similarity(a.embedding, b.embedding) >= $threshold""".stripMargin
 
-  /** IVF-style ANN: coarse quantizer = the first `nCells` vectors as fixed
-    * centroids (deterministic); vectors are assigned to their nearest
-    * centroid scan-side, queries probe the `nProbe` nearest cells, and the
-    * exact cosine ranks candidates inside the probed cells. Sub-linear in
-    * corpus size per query at the cost of recall (tunable via nProbe).
-    *
-    * Scale shape: the centroids are collected to the driver ONCE (this is a
-    * model-fit step — O(nCells·dim) bytes, the same shape as `KMeans.fit`)
-    * and baked into the plan as L2-normalized literal arrays, so centroid
-    * assignment is a pure map-side argmax over nCells literal dot products:
-    * no join, no ×nCells row blow-up, no window shuffle — `explain` shows no
-    * Exchange before the probe⋈cell join. argmax over dot(v, ĉ_i) equals
-    * argmax over cos(v, c_i) because ‖v‖ is a common positive factor. */
   /** Spherical k-means centroid fit for the IVF quantizer: Lloyd iterations
     * expressed as DataFrame jobs — assign each vector to its nearest current
     * centroid MAP-SIDE (argmax over literal-baked unit-centroid dots, the
@@ -955,6 +924,19 @@ object TextOps {
     s"""SELECT CAST(count(*) AS BIGINT) AS n_exact, TRUE AS recall_ok
        |FROM (${annCosineOracle(nQueries, k).replace("\n", "\n  ")}) exact_topk""".stripMargin
 
+  /** IVF-style ANN: coarse quantizer = the first `nCells` vectors as fixed
+    * centroids (deterministic); vectors are assigned to their nearest
+    * centroid scan-side, queries probe the `nProbe` nearest cells, and the
+    * exact cosine ranks candidates inside the probed cells. Sub-linear in
+    * corpus size per query at the cost of recall (tunable via nProbe).
+    *
+    * Scale shape: the centroids are collected to the driver ONCE (this is a
+    * model-fit step — O(nCells·dim) bytes, the same shape as `KMeans.fit`)
+    * and baked into the plan as L2-normalized literal arrays, so centroid
+    * assignment is a pure map-side argmax over nCells literal dot products:
+    * no join, no ×nCells row blow-up, no window shuffle — `explain` shows no
+    * Exchange before the probe⋈cell join. argmax over dot(v, ĉ_i) equals
+    * argmax over cos(v, c_i) because ‖v‖ is a common positive factor. */
   def annCosineIvf(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       nCells: Int = 16, nProbe: Int = 4, fitIters: Int = 0): DataFrame = {
     SqlSurface.registerVecDot(embeddings.sparkSession)

@@ -731,6 +731,25 @@ class SparkSpec extends AnyFunSuite {
     assert(a.nonEmpty)
   }
 
+  test("near-dup operators emit each pair once") {
+    // the other near-dup specs compare sets, so a missing or misplaced
+    // distinct (a pair that shares m keys joins m times) would pass them
+    val docs = DocsTables.documents(spark, sf)
+    val emb = DocsTables.embeddings(spark, sf)
+    val outputs = Seq(
+      "dedupMinhash" -> graft.spark.TextOps.dedupMinhash(docs),
+      "dedupNgramJaccard" -> graft.spark.TextOps.dedupNgramJaccard(docs),
+      "dedupSimhash" -> graft.spark.TextOps.dedupSimhash(spark, docs),
+      // emb_lsh_recall's point: sf0.001 has no pair at the default 0.5
+      "embeddingNearDupLsh" ->
+        graft.spark.TextOps.embeddingNearDupLsh(emb, threshold = 0.35, tables = 24))
+    outputs.foreach { case (name, df) =>
+      val n = df.count()
+      assert(n > 0, s"$name emitted no pair")
+      assert(n == df.distinct().count(), s"$name emitted a pair more than once")
+    }
+  }
+
   test("dedupClusters: labels are exact connected components of the pair graph") {
     val docs = graft.spark.DocsTables.documents(spark, sf)
     val pairs = graft.spark.TextOps.dedupMinhash(docs)
