@@ -22,16 +22,6 @@ import scala.util.control.NonFatal
   * by layer. */
 object Bench {
 
-  private def session(cpus: Int): SparkSession =
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.log.level", "WARN")
-      .getOrCreate()
-
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) Double.NaN
@@ -85,7 +75,7 @@ object Bench {
     val cpus = math.max(1, math.min(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(nproc), nproc))
     val queryRuns = sys.env.getOrElse("SPARK_GRAFT_QUERY_RUNS", "3").toInt
 
-    val spark = session(cpus)
+    val spark = LocalSession(cpus)
     // extraction input sized to ~400k docs, so the pass is seconds of
     // kernel work — small runs measure job-fixed overhead
     val nDocsBase = DocsTables.documents(spark, sfDir).count()

@@ -55,14 +55,14 @@ object SparkEntry {
     "dedup_clusters" -> ((s, dir) => TextOps.dedupClusters(DocsTables.documents(s, dir))),
     // simhash determinism shaped for SQL: identical texts under two ids must
     // fingerprint identically -> hamming 0, predictable without blake2b
-    "simhash_fp" -> ((s, dir) => TextOps.simhashPairs(s, DocsTables.documents(s, dir))),
+    "simhash_fp" -> ((s, dir) => TextOps.simhashPairs(DocsTables.documents(s, dir))),
     // the SimHash near-dup SCALE path (Manku-style banded hamming join)
     // through an identical-copy corpus: banding is lossless by pigeonhole,
     // so every planted (a, a+1M) hamming-0 pair MUST survive the band join
     // — DuckDB predicts the full set without computing simhash (the mutated-
     // corpus variant is spec-pinned against brute-force all-pairs hamming)
     "dedup_simhash" -> ((s, dir) =>
-      TextOps.dedupSimhashCorpus(s, TextOps.duplicatedCorpus(DocsTables.documents(s, dir)),
+      TextOps.dedupSimhashCorpus(TextOps.duplicatedCorpus(DocsTables.documents(s, dir)),
           maxHamming = 3, bandCap = 0)
         .filter(col("id_b") === col("id_a") + 1000000L)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))),

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Dot product of two numeric arrays as a NATIVE codegen'd expression.
   *
@@ -517,4 +518,16 @@ case class ShingleHashes(child: org.apache.spark.sql.catalyst.expressions.Expres
   override protected def withNewChildInternal(
       newChild: org.apache.spark.sql.catalyst.expressions.Expression): ShingleHashes =
     copy(child = newChild)
+}
+
+/** 64-bit Charikar simhash: `simhash64(string) -> long`. Opaque (blake2b is
+  * not codegen'd), yet better than a Scala UDF: null handling and type
+  * plumbing stay in Catalyst and the expression composes in SQL. */
+case class Simhash64(child: Expression) extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = LongType
+  override def nullSafeEval(input: Any): Any =
+    graft.hash.SimHash.createHash(input.asInstanceOf[UTF8String].toString)
+  override protected def withNewChildInternal(newChild: Expression): Simhash64 =
+    copy(child = newChild)
+  override def prettyName: String = "simhash64"
 }

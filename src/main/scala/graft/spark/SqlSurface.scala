@@ -1,35 +1,30 @@
 package graft.spark
 
 import graft.extract.{Extraction, ExtractorOptions, TrafConfig}
+import graft.functions._
 import graft.out.Serializers.Span
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** 64-bit Charikar simhash as a native Catalyst expression (preference order
-  * (b) from the build brief: a scalar this opaque beats a Scala UDF — no
-  * codegen of blake2b itself, but null handling and type plumbing stay in
-  * Catalyst and the expression composes in SQL). */
-case class Simhash64(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    graft.hash.SimHash.createHash(input.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(newChild: Expression): Simhash64 =
-    copy(child = newChild)
-  override def prettyName: String = "simhash64"
-}
-
-/** SQL registration: exposes the kernel to `spark.sql` users
-  * (SURVEY §2.10 — optional UDF/expression surface). */
+/** SQL names for the native expressions and kernel UDFs: exposes them to
+  * `spark.sql` users (SURVEY §2.10 — optional UDF/expression surface).
+  * Operators never need this; they call `graft.functions` as typed columns. */
 object SqlSurface {
 
+  private val natives: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", e => VecDot(e(0), e(1))),
+    ("vec_unit", e => VecUnit(e(0))),
+    ("vec_dots", e => VecDots(e(0), e(1))),
+    ("srp_buckets", e => SrpBuckets(e(0), e(1), e(2))),
+    ("minhash128", e => MinHash128(e(0))),
+    ("shingle_hashes", e => ShingleHashes(e(0))),
+    ("sorted_intersect_count", e => SortedIntersectCount(e(0), e(1))),
+    ("simhash64", e => Simhash64(e(0))))
+
   def register(spark: SparkSession): Unit = {
-    // native expressions
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => Simhash64(exprs.head), "scala_udf")
-    registerVecDot(spark) // vec_dot + minhash128
+    natives.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
     // kernel as SQL functions (opaque per-row transforms -> UDFs)
     val opts = ExtractorOptions(config = TrafConfig.Zero, fast = true, images = true)
     spark.udf.register("extract_text",
@@ -42,28 +37,5 @@ object SqlSurface {
       val d = Extraction.bareExtraction(html, null, opts)
       if (d == null) null else d.meta.title
     })
-  }
-
-  /** Native similarity/hashing expressions only (idempotent) — the TextOps
-    * operators call this so they resolve in any session. */
-  def registerVecDot(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => graft.functions.VecDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash128", exprs => graft.functions.MinHash128(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => graft.functions.SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_unit", exprs => graft.functions.VecUnit(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dots", exprs => graft.functions.VecDots(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "srp_buckets",
-      exprs => graft.functions.SrpBuckets(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => Simhash64(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => graft.functions.ShingleHashes(exprs.head), "scala_udf")
   }
 }

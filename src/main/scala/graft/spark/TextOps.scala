@@ -1,6 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.functions.{minhash128, shingleHashes, simhash64, sortedIntersectCount, srpBuckets,
+  vecDot, vecDots, vecUnit}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -237,7 +239,7 @@ object TextOps {
     * to the interpreted zip_with tree (VecExprsEquivalenceSpec). */
   private def shingleCorpus(docs: DataFrame): DataFrame =
     materialize(nearDupCorpus(docs)
-      .select(col("doc_id"), call_function("shingle_hashes", col("text")).as("sh"))
+      .select(col("doc_id"), shingleHashes(col("text")).as("sh"))
       .filter(size(col("sh")) > 0))
 
   /** Materializes an EXPENSIVE dedup-pipeline input (e.g. the extraction
@@ -273,7 +275,6 @@ object TextOps {
     * the exact oracle path. */
   def dedupMinhash(docs: DataFrame, threshold: Double = 0.8,
       bucketCap: Int = 0): DataFrame = {
-    SqlSurface.registerVecDot(docs.sparkSession)
     val corpus = shingleCorpus(docs)
     // Signatures stay PURE MAP-SIDE work: minhash128 computes all 128
     // permutation mins in one pass (bit-identical to the explode +
@@ -288,7 +289,7 @@ object TextOps {
     // from the materialized sorted-shingle corpus is cheaper than the extra
     // plan machinery.
     val sigs = corpus.select(col("doc_id"),
-      call_function("minhash128", col("sh")).as("mh"))
+      minhash128(col("sh")).as("mh"))
     // band keys: explode the band INDEX first, then slice+hash the cached
     // signature in a plain codegen'd projection. The previous
     // `posexplode(transform(sequence, b => hash(slice(mh, ...))))` evaluated
@@ -341,7 +342,7 @@ object TextOps {
     * set or result array per candidate pair. */
   private def jaccardVerify(cands: DataFrame, corpus: DataFrame,
       threshold: Double): DataFrame = {
-    val inter = call_function("sorted_intersect_count", col("sh_a"), col("sh_b"))
+    val inter = sortedIntersectCount(col("sh_a"), col("sh_b"))
     cands
       .join(corpus.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(corpus.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
@@ -591,7 +592,6 @@ object TextOps {
     * a dedup pipeline prefers to drop. Keep 0 for the exact oracle path. */
   def dedupNgramJaccard(docs: DataFrame, threshold: Double = 0.8,
       tokenCap: Int = 0): DataFrame = {
-    SqlSurface.registerVecDot(docs.sparkSession) // sorted_intersect_count
     val corpus = shingleCorpus(docs)
     val prefixLen = (size(col("sh")) -
       ceil(size(col("sh")) * lit(threshold)).cast("int") + 1)
@@ -621,12 +621,11 @@ object TextOps {
     * identical 64-bit simhashes, so DuckDB predicts every row —
     * (id, id+1000000, 0) — without being able to compute blake2b itself.
     * Map-only fingerprinting; the self-join keys on the 8-byte id. */
-  def simhashPairs(spark: SparkSession, docs: DataFrame): DataFrame = {
-    SqlSurface.registerVecDot(spark)
+  def simhashPairs(docs: DataFrame): DataFrame = {
     // native simhash64 expression: the old typed .map deserialized every row
     // (Deserialize/SerializeFromObject around an otherwise all-codegen plan)
     val fps = duplicatedCorpus(docs).select(col("doc_id"),
-      call_function("simhash64", col("text")).as("fp"))
+      simhash64(col("text")).as("fp"))
     fps.filter(col("doc_id") < 1000000L).as("a")
       .join(fps.filter(col("doc_id") >= 1000000L).as("b"),
         col("a.doc_id") === col("b.doc_id") - 1000000L)
@@ -646,17 +645,16 @@ object TextOps {
     * dedupMinhash's bucketCap does (recall trade: a dropped pair must
     * have collided ONLY in capped bands). Spec-pinned against a capped
     * brute-force all-pairs hamming join. */
-  def dedupSimhash(spark: SparkSession, docs: DataFrame, maxHamming: Int = 3,
+  def dedupSimhash(docs: DataFrame, maxHamming: Int = 3,
       bandCap: Int = 0): DataFrame =
-    dedupSimhashCorpus(spark, nearDupCorpus(docs), maxHamming, bandCap)
+    dedupSimhashCorpus(nearDupCorpus(docs), maxHamming, bandCap)
 
   /** Core banded-hamming join over an explicit (doc_id, text) corpus —
     * dedupSimhash feeds it the standard mutated near-dup corpus; the driver
     * oracle query feeds an identical-copy corpus instead (hamming-0 planted
     * pairs are then DuckDB-predictable without computing simhash in SQL). */
-  private[graft] def dedupSimhashCorpus(spark: SparkSession, corpusDocs: DataFrame,
+  private[graft] def dedupSimhashCorpus(corpusDocs: DataFrame,
       maxHamming: Int, bandCap: Int): DataFrame = {
-    SqlSurface.registerVecDot(spark)
     require(maxHamming >= 0 && maxHamming <= 7, "bands are 64/(maxHamming+1) bits")
     val nBands = maxHamming + 1
     val bandBits = 64 / nBands
@@ -665,7 +663,7 @@ object TextOps {
     // 32-way task overhead exceeds the parallelism gain. Left on the
     // scan's natural splits deliberately.
     val corpus = corpusDocs
-      .select(col("doc_id"), call_function("simhash64", col("text")).as("fp"))
+      .select(col("doc_id"), simhash64(col("text")).as("fp"))
     val bands = corpus.select(col("doc_id"), col("fp"),
       posexplode(array((0 until nBands).map { b =>
         // unsigned slice of bandBits bits (last band takes the remainder)
@@ -683,28 +681,15 @@ object TextOps {
 
   // ------------------------------------------------------------ ANN cosine
 
-  /** L2-normalize the embedding once per row so every pairwise stage below
-    * is a dot product only (norms would otherwise be recomputed per PAIR).
-    * The norm itself goes through the native vec_dot: the aggregate() form
-    * is re-inlined PER ELEMENT by CollapseProject (64 interpreted norm
-    * evals per row). */
-  private def unitVec(c: Column): Column = call_function("vec_unit", c)
-  /** Pairwise dot via the codegen'd native expression (graft.functions.VecDot)
-    * — the interpreted aggregate(zip_with(...)) form was ~60% of the bench
-    * total on the 2M-pair near-dup join. Same element order and double
-    * accumulation, so results are bit-identical. */
-  private def dotCol(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
   /** Brute-force cosine top-k: broadcast the query set, one pass over the
     * corpus, per-query top-k via window. The IVF/LSH-bucketed variant keys
     * the same join on a coarse-quantizer bucket instead of a cross join. */
   def annCosineTopK(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    SqlSurface.registerVecDot(embeddings.sparkSession)
-    val base = embeddings.select(col("vec_id"), unitVec(col("embedding")).as("u"))
+    val base = embeddings.select(col("vec_id"), vecUnit(col("embedding")).as("u"))
     val queries = base.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("u").as("qu"))
     val scored = base.join(broadcast(queries), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), dotCol(col("qu"), col("u")).as("cos"))
+      .select(col("qid"), col("vec_id").as("nid"), vecDot(col("qu"), col("u")).as("cos"))
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -726,9 +711,8 @@ object TextOps {
     * embeddingNearDupLsh below; this exact variant feeds the DuckDB oracle). */
   def embeddingNearDup(embeddings: DataFrame, threshold: Double = 0.5,
       cap: Int = 2000): DataFrame = {
-    SqlSurface.registerVecDot(embeddings.sparkSession)
     val base = DocsTables.fanOut(embeddings)
-      .select(col("vec_id"), unitVec(col("embedding")).as("u"))
+      .select(col("vec_id"), vecUnit(col("embedding")).as("u"))
       .filter(col("vec_id") < cap)
     // the cosine threshold lives IN the join condition: the nested-loop
     // join then evaluates one codegen'd predicate per pair and only
@@ -739,7 +723,7 @@ object TextOps {
     base.select(col("vec_id").as("a_id"), col("u").as("a_u"))
       .join(base.select(col("vec_id").as("b_id"), col("u").as("b_u")),
         col("a_id") < col("b_id") &&
-          dotCol(col("a_u"), col("b_u")) >= threshold)
+          vecDot(col("a_u"), col("b_u")) >= threshold)
       .select(col("a_id"), col("b_id"))
   }
 
@@ -750,7 +734,6 @@ object TextOps {
     * rows + bucket-local pairs instead of the full cross product. */
   def embeddingNearDupLsh(embeddings: DataFrame, threshold: Double = 0.5,
       dim: Int = 64, k: Int = 4, tables: Int = 8): DataFrame = {
-    SqlSurface.registerVecDot(embeddings.sparkSession)
     val rnd = new java.util.Random(42) // fixed seed: deterministic plan
     val hyper = Array.fill(tables, k, dim)(rnd.nextGaussian())
     // fanOut: tables*k literal-hyperplane dots per row run scan-side
@@ -761,15 +744,14 @@ object TextOps {
     // re-walked per dot); the fused expression reads the vector once and
     // streams the plane matrix over it. Bucket values bit-identical,
     // including SQL NaN ordering and null-element semantics.
-    val planesLit = typedlit(
-      (0 until tables).flatMap(t => (0 until k).map(i => hyper(t)(i).toSeq)))
+    val planes = (0 until tables).flatMap(t => (0 until k).map(i => hyper(t)(i).toSeq))
     // candidate generation ships IDS ONLY (the dedupMinhash shape): the
     // bucket self-join + distinct move 16-byte pairs, and the embedding
     // arrays are joined back only for surviving candidates — carrying two
     // 64-float arrays per candidate through the dedup shuffle made the
     // recall query ~25x slower at sf0.1 (1.5 GB of array traffic)
     val tagged = base.select(col("vec_id"),
-      posexplode(call_function("srp_buckets", col("embedding"), planesLit, lit(k)))
+      posexplode(srpBuckets(col("embedding"), planes, k))
         .as(Seq("tbl", "bucket")))
     // NO distinct here: a pair colliding in m tables flows through the
     // verify as m rows and is deduped AFTER it. The pre-verify distinct
@@ -789,7 +771,7 @@ object TextOps {
     // exact set is exactly 1. Normalizing after the join instead would run
     // `transform`'s interpreted lambda — with its embedded norm — per
     // CANDIDATE row rather than per corpus row (~10x on this query).
-    val baseU = base.select(col("vec_id"), unitVec(col("embedding")).as("u"))
+    val baseU = base.select(col("vec_id"), vecUnit(col("embedding")).as("u"))
     // cosine threshold as the second join's residual condition (see
     // embeddingNearDup): failing candidates are never materialized
     val withA = cand
@@ -797,7 +779,7 @@ object TextOps {
     val bSide = baseU.select(col("vec_id").as("bid"), col("u").as("b_u"))
     withA
       .join(bSide, withA("b_id") === bSide("bid") &&
-        dotCol(col("a_u"), col("b_u")) >= threshold)
+        vecDot(col("a_u"), col("b_u")) >= threshold)
       .select(col("a_id"), col("b_id"))
       .distinct()
   }
@@ -855,7 +837,6 @@ object TextOps {
     * their previous centroid. Returns L2-normalized centroids. */
   def fitIvfCentroids(embeddings: DataFrame, nCells: Int = 16,
       iters: Int = 3): Array[Array[Double]] = {
-    SqlSurface.registerVecDot(embeddings.sparkSession)
     // NOTE on determinism: avg() sums floats in partition order, so the
     // input layout can move centroids at the last bit; the published
     // ivf_recall contract absorbs this by design (recall floor 0.7 vs
@@ -873,8 +854,7 @@ object TextOps {
     var it = 0
     while (it < iters) {
       // fused native pass over all nCells centroids (see vec_dots note)
-      val dotArr = call_function("vec_dots", col("embedding"),
-        typedlit(cents.map(_.toSeq).toSeq))
+      val dotArr = vecDots(col("embedding"), cents.map(_.toSeq).toSeq)
       val assigned = base.select(
         (array_position(dotArr, array_max(dotArr)).cast("int") - 1).as("cell"),
         col("embedding"))
@@ -939,7 +919,6 @@ object TextOps {
     * argmax over cos(v, c_i) because ‖v‖ is a common positive factor. */
   def annCosineIvf(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       nCells: Int = 16, nProbe: Int = 4, fitIters: Int = 0): DataFrame = {
-    SqlSurface.registerVecDot(embeddings.sparkSession)
     val base = embeddings.select(col("vec_id"), col("embedding"))
     // fitIters > 0 swaps the deterministic first-nCells quantizer for a real
     // spherical k-means fit (fitIvfCentroids). Correctness at nProbe=nCells
@@ -960,27 +939,26 @@ object TextOps {
     // aggregate(zip_with) form (probeStructs below runs over nQueries rows
     // only, so the per-expression cost is irrelevant there)
     def dotLit(cn: Array[Double]): Column =
-      call_function("vec_dot", col("embedding"), array(cn.map(lit): _*))
+      vecDot(col("embedding"), array(cn.map(lit): _*))
     // map-side argmax: first index of the max dot (ties -> lowest cell_id,
     // matching the previous window tie-break ccos desc / cell_id asc).
     // ALL nCells dots in one fused native pass (vec_dots — see
     // embeddingNearDupLsh): element p is bit-identical to dotLit(cents(p)).
-    val dotArr = call_function("vec_dots", col("embedding"),
-      typedlit(cents.map(_._2.toSeq).toSeq))
+    val dotArr = vecDots(col("embedding"), cents.map(_._2.toSeq).toSeq)
     val cellIds = array(cents.map { case (id, _) => lit(id) }: _*)
     // `u` computed at the scan (once per corpus row): the ranking dot after
     // the probe join then reads a ready array instead of re-running the
     // interpreted normalize-transform per candidate row
     val assigned = base.withColumn("cell_id",
         element_at(cellIds, array_position(dotArr, array_max(dotArr)).cast("int")))
-      .withColumn("u", unitVec(col("embedding")))
+      .withColumn("u", vecUnit(col("embedding")))
     // queries probe their nProbe nearest cells: map-side sort of the nCells
     // (−dot, cell_id) structs, slice, explode — still no shuffle
     val probeStructs = array_sort(array(cents.map { case (id, cn) =>
       struct((-dotLit(cn)).as("negd"), lit(id).as("cell_id"))
     }: _*))
     val probes = base.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), unitVec(col("embedding")).as("qu"),
+      .select(col("vec_id").as("qid"), vecUnit(col("embedding")).as("qu"),
         explode(slice(probeStructs, 1, nProbe)).as("pr"))
       .select(col("qid"), col("qu"), col("pr.cell_id").as("cell_id"))
     // rank candidates inside probed cells (the one genuine shuffle). The
@@ -992,7 +970,7 @@ object TextOps {
     probes.join(assigned, Seq("cell_id"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
-        dotCol(col("qu"), col("u")).as("cos"))
+        vecDot(col("qu"), col("u")).as("cos"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("nid"))

@@ -664,6 +664,8 @@ class SparkSpec extends AnyFunSuite {
   }
 
   test("SQL surface: simhash64 expression + extraction UDFs") {
+    import org.apache.spark.sql.functions.{col, lit, typedlit}
+    import graft.functions._
     graft.spark.SqlSurface.register(spark)
     graft.spark.DocsTables.documents(spark, sf).createOrReplaceTempView("documents_v")
     val r = spark.sql(
@@ -678,6 +680,40 @@ class SparkSpec extends AnyFunSuite {
     // expression value agrees with the kernel function
     val one = spark.sql("SELECT text, simhash64(text) FROM documents_v LIMIT 1").collect()(0)
     assert(one.getLong(1) == graft.hash.SimHash.createHash(one.getString(0)))
+    // every registered name resolves through spark.sql; each native name
+    // equals its typed constructor on one row
+    spark.range(1).select(lit("the quick brown fox jumps over").as("t"),
+        typedlit(Seq(1.0f, 2.0f, -3.0f)).as("v"),
+        typedlit(Seq(1L, 3L, 5L)).as("a"), typedlit(Seq(3L, 5L, 7L)).as("b"))
+      .createOrReplaceTempView("one_row")
+    val planes = Seq(Seq(1.0, -1.0, 0.5), Seq(-0.5, 0.25, 2.0))
+    val planesSql = "array(array(1.0D, -1.0D, 0.5D), array(-0.5D, 0.25D, 2.0D))"
+    val bySql = spark.sql("SELECT vec_dot(v, v), vec_unit(v), " +
+      s"vec_dots(v, $planesSql), srp_buckets(v, $planesSql, 1), minhash128(a), " +
+      "shingle_hashes(t), sorted_intersect_count(a, b), simhash64(t) FROM one_row")
+    val typed = spark.table("one_row").select(vecDot(col("v"), col("v")), vecUnit(col("v")),
+      vecDots(col("v"), planes), srpBuckets(col("v"), planes, 1), minhash128(col("a")),
+      shingleHashes(col("t")), sortedIntersectCount(col("a"), col("b")), simhash64(col("t")))
+    assert(bySql.collect().head.toSeq == typed.collect().head.toSeq)
+    val udfs = spark.sql("SELECT extract_title(h), size(extract_spans(h)) FROM (SELECT " +
+      "concat('<html><head><title>Graft title</title></head><body><article><p>', text, " +
+      "'</p></article></body></html>') AS h FROM documents_v LIMIT 1)").collect()(0)
+    assert(udfs.getString(0) == "Graft title" && udfs.getInt(1) > 0)
+  }
+
+  test("near-dup and ANN operators leave a fresh session's function registry alone") {
+    val s = spark.newSession()
+    val natives = Seq("vec_dot", "vec_unit", "vec_dots", "srp_buckets", "minhash128",
+      "shingle_hashes", "sorted_intersect_count", "simhash64")
+    def registered = natives.filter(s.catalog.functionExists)
+    assert(registered.isEmpty)
+    val docs = DocsTables.documents(s, sf)
+    val emb = DocsTables.embeddings(s, sf)
+    Seq(graft.spark.TextOps.dedupMinhash(docs), graft.spark.TextOps.dedupNgramJaccard(docs),
+      graft.spark.TextOps.dedupSimhash(docs), graft.spark.TextOps.annCosineTopK(emb),
+      graft.spark.TextOps.embeddingNearDupLsh(emb), graft.spark.TextOps.annCosineIvf(emb))
+      .foreach(_.collect())
+    assert(registered.isEmpty, s"operators registered ${registered.mkString(", ")}")
   }
 
   test("hashedShingles (zip_with form) equals shingles+xxhash64 (element_at form)") {
@@ -693,12 +729,11 @@ class SparkSpec extends AnyFunSuite {
 
   test("minhash128 expression equals the explode + 128-min-agg formulation") {
     import org.apache.spark.sql.functions._
-    graft.spark.SqlSurface.registerVecDot(spark)
     val docs = graft.spark.DocsTables.documents(spark, sf)
     val corpus = graft.spark.TextOps.nearDupCorpus(docs)
       .select(col("doc_id"), graft.spark.TextOps.hashedShingles(col("text")).as("sh"))
       .filter(size(col("sh")) > 0)
-    val native = corpus.select(col("doc_id"), call_function("minhash128", col("sh")).as("mh"))
+    val native = corpus.select(col("doc_id"), graft.functions.minhash128(col("sh")).as("mh"))
     val exploded = corpus.select(col("doc_id"), explode(col("sh")).as("s"))
     val agg = exploded
       .select(col("doc_id") +: (0 until 128).map(i => xxhash64(col("s"), lit(i)).as(s"h$i")): _*)
@@ -739,7 +774,7 @@ class SparkSpec extends AnyFunSuite {
     val outputs = Seq(
       "dedupMinhash" -> graft.spark.TextOps.dedupMinhash(docs),
       "dedupNgramJaccard" -> graft.spark.TextOps.dedupNgramJaccard(docs),
-      "dedupSimhash" -> graft.spark.TextOps.dedupSimhash(spark, docs),
+      "dedupSimhash" -> graft.spark.TextOps.dedupSimhash(docs),
       // emb_lsh_recall's point: sf0.001 has no pair at the default 0.5
       "embeddingNearDupLsh" ->
         graft.spark.TextOps.embeddingNearDupLsh(emb, threshold = 0.35, tables = 24))
@@ -950,12 +985,11 @@ class SparkSpec extends AnyFunSuite {
   test("dedupSimhash: banded hamming join equals brute-force all-pairs exactly") {
     import org.apache.spark.sql.functions._
     val docs = DocsTables.documents(spark, sf)
-    val got = graft.spark.TextOps.dedupSimhash(spark, docs, maxHamming = 3)
+    val got = graft.spark.TextOps.dedupSimhash(docs, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // brute force: all corpus fingerprints to the driver, O(n²) hamming scan
-    graft.spark.SqlSurface.registerVecDot(spark)
     val fps = graft.spark.TextOps.nearDupCorpus(docs)
-      .select(col("doc_id"), call_function("simhash64", col("text")).as("fp"))
+      .select(col("doc_id"), graft.functions.simhash64(col("text")).as("fp"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val brute = (for {
       i <- fps.indices.iterator
@@ -980,10 +1014,10 @@ class SparkSpec extends AnyFunSuite {
       (col("id") + 500000L).as("doc_id"),
       lit("exactly the same ten words of text in every planted document").as("text"))
     val t0 = System.nanoTime()
-    val capped = graft.spark.TextOps.dedupSimhash(spark, normal.unionAll(hot), bandCap = 100)
+    val capped = graft.spark.TextOps.dedupSimhash(normal.unionAll(hot), bandCap = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cappedSec = (System.nanoTime() - t0) / 1e9
-    val normalOnly = graft.spark.TextOps.dedupSimhash(spark, normal)
+    val normalOnly = graft.spark.TextOps.dedupSimhash(normal)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == normalOnly, s"capped=${capped.size} normalOnly=${normalOnly.size}")
     assert(cappedSec < 120, s"capped run took ${cappedSec}s — cap not effective")
@@ -1113,9 +1147,13 @@ class SparkSpec extends AnyFunSuite {
   }
 
   test("dedupMinhash and pipeline_dedup re-collect identically after cached-block loss") {
-    // the test above left the session checkpoint dir set: the materialized
-    // shingle corpus and pipeline input are reliable checkpoints, so losing
-    // every cached block (what executor loss does) must not change a result
+    // with the session checkpoint dir set, the materialized shingle corpus
+    // and pipeline input are reliable checkpoints, so losing every cached
+    // block (what executor loss does) must not change a result. The test
+    // above sets the dir; run alone, this test sets one itself
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(
+        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
     assert(spark.sparkContext.getCheckpointDir.isDefined)
     val docs = DocsTables.documents(spark, sf)
     for (df <- Seq(graft.spark.TextOps.dedupMinhash(docs),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.{shingleHashes, sortedIntersectCount, srpBuckets, vecDot, vecDots, vecUnit}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +16,6 @@ class VecExprsEquivalenceSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .appName("vec-exprs-equivalence").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.spark.SqlSurface.registerVecDot(s)
     s
   }
 
@@ -31,10 +31,10 @@ class VecExprsEquivalenceSpec extends AnyFunSuite {
     val df = floatVecs(64, 64)
     val lambdaForm = {
       val c = col("embedding")
-      val nrm = sqrt(call_function("vec_dot", c, c))
+      val nrm = sqrt(vecDot(c, c))
       transform(c, x => x.cast("double") / nrm)
     }
-    val rows = df.select(call_function("vec_unit", col("embedding")).as("a"),
+    val rows = df.select(vecUnit(col("embedding")).as("a"),
       lambdaForm.as("b")).collect()
     rows.foreach { r =>
       val a = r.getSeq[Double](0)
@@ -50,10 +50,9 @@ class VecExprsEquivalenceSpec extends AnyFunSuite {
     val rnd = new java.util.Random(11)
     val planes = Array.fill(17, 64)(rnd.nextGaussian())
     val df = floatVecs(40, 64)
-    val dots = call_function("vec_dots", col("embedding"),
-      typedlit(planes.map(_.toSeq).toSeq))
+    val dots = vecDots(col("embedding"), planes.map(_.toSeq).toSeq)
     val singles = array(planes.map(p =>
-      call_function("vec_dot", col("embedding"), array(p.map(lit): _*))): _*)
+      vecDot(col("embedding"), array(p.map(lit): _*))): _*)
     df.select(dots.as("a"), singles.as("b")).collect().foreach { r =>
       val a = r.getSeq[Double](0); val b = r.getSeq[Double](1)
       assert(a.size == b.size)
@@ -67,12 +66,11 @@ class VecExprsEquivalenceSpec extends AnyFunSuite {
     val tables = 6; val k = 4
     val hyper = Array.fill(tables, k, 64)(rnd.nextGaussian())
     val df = floatVecs(50, 64)
-    val fused = call_function("srp_buckets", col("embedding"),
-      typedlit((0 until tables).flatMap(t => (0 until k).map(i => hyper(t)(i).toSeq))),
-      lit(k))
+    val fused = srpBuckets(col("embedding"),
+      (0 until tables).flatMap(t => (0 until k).map(i => hyper(t)(i).toSeq)), k)
     val sqlForm = array((0 until tables).map { t =>
       (0 until k).map { i =>
-        (call_function("vec_dot", col("embedding"), array(hyper(t)(i).map(lit): _*)) >= 0)
+        (vecDot(col("embedding"), array(hyper(t)(i).map(lit): _*)) >= 0)
           .cast("int") * lit(1 << i)
       }.reduce(_ + _)
     }: _*)
@@ -90,7 +88,7 @@ class VecExprsEquivalenceSpec extends AnyFunSuite {
       (a, b)
     }
     val df = rows.toDF("a", "b")
-    df.select(call_function("sorted_intersect_count", col("a"), col("b")).as("n"),
+    df.select(sortedIntersectCount(col("a"), col("b")).as("n"),
         size(array_intersect(col("a"), col("b"))).as("m"))
       .collect().foreach(r => assert(r.getInt(0) == r.getInt(1)))
   }
@@ -112,7 +110,7 @@ class VecExprsEquivalenceSpec extends AnyFunSuite {
     )
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val rows = df.select(
-        call_function("shingle_hashes", col("text")).as("a"),
+        shingleHashes(col("text")).as("a"),
         array_sort(graft.spark.TextOps.hashedShingles(col("text"))).as("b"))
       .collect()
     rows.foreach { r =>
