@@ -109,7 +109,7 @@ object SparkEntry {
     "media_features" -> ((s, dir) => graft.spark.MultimodalOps.mediaFeaturesQuery(s, dir)),
     // --- windowed analytics: gap-based sessionization over the events table
     "events_sessions" -> ((s, dir) =>
-      graft.spark.StreamOps.eventSessions(s.read.parquet(s"$dir/events.parquet"))),
+      graft.spark.SessionOps.eventSessions(s.read.parquet(s"$dir/events.parquet"))),
     // --- window functions: top-3 orders per market segment
     "tpch_top_orders" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
@@ -202,7 +202,7 @@ object SparkEntry {
       """SELECT CAST(doc_id AS BIGINT) AS id_a, CAST(doc_id + 1000000 AS BIGINT) AS id_b,
         |  CAST(0 AS BIGINT) AS hamming
         |FROM documents""".stripMargin,
-    "events_sessions" -> graft.spark.StreamOps.eventSessionsOracle,
+    "events_sessions" -> graft.spark.SessionOps.eventSessionsOracle,
     "tpch_top_orders" ->
       """SELECT c_mktsegment, rnk, o_orderkey FROM (
         | SELECT c_mktsegment, o_orderkey,
@@ -261,7 +261,7 @@ object SparkEntry {
       """SELECT a.vec_id AS a_id, b.vec_id AS b_id
         |FROM embeddings a, embeddings b
         |WHERE a.vec_id < b.vec_id AND b.vec_id < 2000
-        |  AND list_cosine_similarity(a.embedding, b.embedding) >= 0.5""".stripMargin,
+        |  AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.5""".stripMargin,
     "media_features" -> graft.spark.MultimodalOps.mediaFeaturesOracle
   )
 }

@@ -122,22 +122,4 @@ object DocsTables {
         lit(null).cast("string").as("media_ref"), lit(0).as("offset"))).as("spans"))
       .as[DocRow]
   }
-
-  /** synth-skew: as scaled, plus `k` mega-documents built by repeating a
-    * section ~`sectionsPerMega` times (exercises the skew router). */
-  def docsTableSkewed(spark: SparkSession, sfDir: String, factor: Int,
-      k: Int = 4, sectionsPerMega: Int = 2000): Dataset[DocRow] = {
-    import spark.implicits._
-    val base = docsTableScaled(spark, sfDir, factor)
-    val mega = documents(spark, sfDir).limit(k)
-      .withColumn("body", concat_ws("", transform(sequence(lit(0), lit(sectionsPerMega - 1)),
-        i => concat(lit("<p>section "), i, lit(": "), col("text"), lit("</p>")))))
-      .select(concat(lit("mega-"), col("doc_id")).as("doc_id"),
-        array(struct(lit("html").as("kind"),
-          concat(lit("<html><body><div class=\"article-body\">"), col("body"),
-            lit("</div></body></html>")).as("text"),
-          lit(null).cast("string").as("media_ref"), lit(0).as("offset"))).as("spans"))
-      .as[DocRow]
-    base.unionAll(mega)
-  }
 }

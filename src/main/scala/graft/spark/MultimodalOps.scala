@@ -4,16 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video payloads ride as opaque
-  * `binary` columns with typed metadata; decode / feature-extract / resize /
-  * frame-sample run as typed per-partition transforms over the blob column.
+  * `binary` columns with typed metadata; decode + feature-extract run as one
+  * typed per-partition transform over the blob column (`extractFeatures`,
+  * the `media_features` query).
   *
   * Image rows carry REAL PNG payloads (synthesized deterministically,
   * decoded with ImageIO on the executor) and audio rows REAL 16-bit PCM WAV
   * payloads (synthesized and decoded with javax.sound.sampled) — both paths
   * use the real JDK codec, not a stub. Video rides as a multi-frame animated
   * GIF (the closest in-JDK stand-in for a video container) decoded frame by
-  * frame with the real JDK GIF reader; features for all three kinds are
-  * computed from DECODED pixels/samples (pixelFeatures) — no stub remains. */
+  * frame with the real JDK GIF reader. Each kind has one decoder, and
+  * features for all three are computed from the DECODED pixels/samples. */
 object MultimodalOps {
 
   /** ImageIO's stream factories are DISK-cache-backed by default: every
@@ -54,15 +55,6 @@ object MultimodalOps {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     bos.toByteArray
-  }
-
-  /** Real image decode: JDK ImageIO. Returns (width, height) or None when
-    * the payload is not a decodable image. */
-  def decodeImage(blob: Array[Byte]): Option[(Int, Int)] = {
-    imageIoNoDiskCache
-    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(blob)))
-      .map(i => (i.getWidth, i.getHeight))
-    catch { case _: java.io.IOException => None }
   }
 
   /** Deterministic audio parameters per doc (SQL-predictable, so the DuckDB
@@ -127,36 +119,6 @@ object MultimodalOps {
     bos.toByteArray
   }
 
-  /** Real frame-level video-container decode: the JDK GIF reader. Returns
-    * (width, height, nFrames) or None when not decodable. `getNumImages
-    * (true)` walks every frame in the stream — a real decode, not metadata
-    * trust. */
-  def decodeGif(blob: Array[Byte]): Option[(Int, Int, Int)] = {
-    imageIoNoDiskCache
-    try {
-      val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(blob))
-      try {
-        reader.setInput(iis)
-        Some((reader.getWidth(0), reader.getHeight(0), reader.getNumImages(true)))
-      } finally { reader.dispose(); iis.close() }
-    } catch { case _: java.io.IOException | _: IllegalArgumentException => None }
-  }
-
-  /** Real audio decode: JDK javax.sound.sampled. Returns
-    * (sampleRate, frameCount) or None when the payload is not decodable. */
-  def decodeAudio(blob: Array[Byte]): Option[(Int, Long)] =
-    try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(blob))
-      try Some((ais.getFormat.getSampleRate.toInt, ais.getFrameLength))
-      finally ais.close()
-    } catch {
-      case _: javax.sound.sampled.UnsupportedAudioFileException => None
-      case _: java.io.IOException => None
-    }
-
   /** Deterministic media table synthesized from documents.parquet: image
     * rows carry real PNG blobs, audio rows real 16-bit PCM WAV blobs, video
     * rows real multi-frame animated GIFs (all encoded executor-side in the
@@ -185,137 +147,11 @@ object MultimodalOps {
       })
   }
 
-  /** Real image RESIZE (JDK Graphics2D, bilinear): decode -> scale so the
-    * longer side is `maxDim` (no upscaling) -> re-encode PNG. Returns the
-    * original payload when not decodable or already small enough. */
-  def resizePng(blob: Array[Byte], maxDim: Int): Array[Byte] = {
-    imageIoNoDiskCache
-    val src = try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(blob))
-      catch { case _: java.io.IOException => null }
-    if (src == null) return blob
-    val (w, h) = (src.getWidth, src.getHeight)
-    if (math.max(w, h) <= maxDim) return blob
-    val scale = maxDim.toDouble / math.max(w, h)
-    val (nw, nh) = (math.max(1, (w * scale).round.toInt), math.max(1, (h * scale).round.toInt))
-    val dst = new java.awt.image.BufferedImage(nw, nh,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val g = dst.createGraphics()
-    g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-      java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-    g.drawImage(src, 0, 0, nw, nh, null)
-    g.dispose()
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(dst, "png", bos)
-    bos.toByteArray
-  }
-
-  /** Dataset-level resize transform: image rows above `maxDim` are decoded,
-    * scaled and re-encoded per partition (the standard pre-processing step
-    * before a vision encoder); audio/video rows pass through. One map
-    * stage, no shuffle — at 100 TB this pipelines with the scan. */
-  def resizeImages(media: Dataset[MediaRow], maxDim: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { m =>
-      if (m.media_kind == "image") m.copy(blob = resizePng(m.blob, maxDim)) else m
-    })
-  }
-
-  /** Real FRAME SAMPLE: decode frame `k` (clamped) of an animated-GIF video
-    * payload and re-encode it as a standalone PNG. None when not decodable. */
-  def sampleFrame(blob: Array[Byte], k: Int): Option[Array[Byte]] = {
-    imageIoNoDiskCache
-    try {
-      val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(blob))
-      try {
-        reader.setInput(iis)
-        val n = reader.getNumImages(true)
-        if (n <= 0) None
-        else {
-          val img = reader.read(math.min(math.max(k, 0), n - 1))
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          Some(bos.toByteArray)
-        }
-      } finally { reader.dispose(); iis.close() }
-    } catch { case _: java.io.IOException | _: IllegalArgumentException => None }
-  }
-
-  /** Dataset-level frame sampling: each video row yields one image row per
-    * sampled frame index (doc_id preserved, media_ref suffixed `#frame-i`),
-    * the shape a frame-level vision featurizer consumes downstream; non-video
-    * rows pass through unchanged. An UNDECODABLE video row also passes
-    * through unchanged (original payload, still media_kind "video") rather
-    * than being dropped — symmetric with resizeImages' decode-failure
-    * pass-through, so corrupt blobs never silently shrink downstream row
-    * counts (ADVICE r4). flatMap per partition, no shuffle. */
-  def sampleFrames(media: Dataset[MediaRow], every: Int = 2): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { m =>
-      if (m.media_kind != "video") Iterator.single(m)
-      else decodeGif(m.blob) match {
-        case Some((_, _, n)) =>
-          (0 until n by math.max(1, every)).iterator.flatMap { i =>
-            sampleFrame(m.blob, i).map(png =>
-              MediaRow(m.doc_id, s"${m.media_ref}#frame-$i", "image", png))
-          }
-        case None => Iterator.single(m) // undecodable: keep the source row
-      }
-    })
-  }
-
-  /** PIXEL-SPACE feature extraction — every dimension is computed from the
-    * DECODED content (pixels / PCM samples / per-frame pixels), not encoded
-    * bytes; the last marked stub is gone. Returns the 8-dim float feature
-    * plus `pixSum`, an EXACT integer invariant of the decode (image: sum of
-    * decoded blue-channel bytes; audio: sum of decoded PCM samples; video:
-    * sum of blue bytes across all decoded frames). pixSum is what the
-    * DuckDB oracle pins closed-form for the lossless codecs (PNG pixels and
-    * WAV samples roundtrip exactly; GIF is palette-quantized, so video's
-    * pixel sums are real-but-encoder-defined and oracle-masked).
-    * Undecodable payloads yield a zero vector and pixSum = -2. */
-  def pixelFeatures(m: MediaRow): (Array[Float], Long) = m.media_kind match {
-    case "image" =>
-      val img = try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.blob))
-        catch { case _: java.io.IOException => null }
-      if (img == null) (new Array[Float](8), -2L) else imageFeature(Seq(img))
-    case "audio" =>
-      decodePcm(m.blob) match {
-        case None => (new Array[Float](8), -2L)
-        case Some((rate, pcm)) =>
-          var sum = 0L; var sumAbs = 0L; var sumSq = 0.0
-          var mn = Int.MaxValue; var mx = Int.MinValue; var zc = 0
-          var i = 0
-          while (i < pcm.length) {
-            val v = pcm(i)
-            sum += v; sumAbs += math.abs(v); sumSq += v.toDouble * v
-            if (v < mn) mn = v
-            if (v > mx) mx = v
-            if (i > 0 && (pcm(i - 1) < 0) != (v < 0)) zc += 1
-            i += 1
-          }
-          val n = math.max(1, pcm.length)
-          (Array[Float](
-            (sum.toDouble / n / 32768.0).toFloat,
-            (sumAbs.toDouble / n / 32768.0).toFloat,
-            (math.sqrt(sumSq / n) / 32768.0).toFloat,
-            zc.toFloat / n,
-            mn / 32768.0f, mx / 32768.0f,
-            rate / 48000.0f,
-            (pcm.length / math.max(1.0, rate.toDouble)).toFloat), sum)
-      }
-    case "video" =>
-      decodeFrames(m.blob) match {
-        case Nil => (new Array[Float](8), -2L)
-        case frames => imageFeature(frames)
-      }
-    case _ => (new Array[Float](8), -2L)
-  }
-
   /** Shared pixel statistics over one or more decoded frames: channel means,
     * luma mean/std, horizontal-gradient mean, aspect — all over getRGB
-    * values, identical code path for a single image and a frame stack. */
+    * values, identical code path for a single image and a frame stack.
+    * Returns the 8-dim feature and pix_sum, the sum of the decoded
+    * blue-channel bytes. */
   private def imageFeature(frames: Seq[java.awt.image.BufferedImage]): (Array[Float], Long) = {
     var sumR = 0L; var sumG = 0L; var sumB = 0L
     var sumLuma = 0L; var sumLuma2 = 0.0; var sumHDiff = 0L
@@ -392,7 +228,7 @@ object MultimodalOps {
     * through the real ImageIO decoder, audio rows through the real
     * javax.sound.sampled WAV decoder, video rows through the real JDK GIF
     * frame reader (dimensions + per-frame walk for n_frames). The feature
-    * vector is pixel-space for ALL kinds (pixelFeatures): channel/luma
+    * vector is pixel-space for ALL kinds: channel/luma
     * statistics over decoded pixels for image and per-frame video, PCM
     * sample statistics for audio — no encoded-byte arithmetic remains. */
   def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
@@ -400,9 +236,7 @@ object MultimodalOps {
     media.mapPartitions { iter =>
       iter.map { m =>
         // ONE decode per blob: metadata (dims / frame count / sample rate)
-        // and pixel features both come from the same decoded object — the
-        // previous shape ran the full JDK codec twice per row (metadata
-        // pass + pixelFeatures), doubling codec cost (ADVICE r5)
+        // and pixel features both come from the same decoded object
         imageIoNoDiskCache
         m.media_kind match {
           case "image" =>

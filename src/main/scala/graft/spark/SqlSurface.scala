@@ -1,14 +1,13 @@
 package graft.spark
 
-import graft.extract.{Extraction, ExtractorOptions, TrafConfig}
 import graft.functions._
-import graft.out.Serializers.Span
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** SQL names for the native expressions and kernel UDFs: exposes them to
-  * `spark.sql` users (SURVEY §2.10 — optional UDF/expression surface).
-  * Operators never need this; they call `graft.functions` as typed columns. */
+/** SQL names for the native expressions: exposes them to `spark.sql` users
+  * (SURVEY §2.10 — optional expression surface). Operators never need this;
+  * they call `graft.functions` as typed columns, and the kernel's one entry
+  * is `ExtractPipeline.extractDocs`. */
 object SqlSurface {
 
   private val natives: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -21,21 +20,8 @@ object SqlSurface {
     ("sorted_intersect_count", e => SortedIntersectCount(e(0), e(1))),
     ("simhash64", e => Simhash64(e(0))))
 
-  def register(spark: SparkSession): Unit = {
+  def register(spark: SparkSession): Unit =
     natives.foreach { case (name, build) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
     }
-    // kernel as SQL functions (opaque per-row transforms -> UDFs)
-    val opts = ExtractorOptions(config = TrafConfig.Zero, fast = true, images = true)
-    spark.udf.register("extract_text",
-      (html: String) => Extraction.extract(html, null, opts))
-    spark.udf.register("extract_spans", (html: String) => {
-      val d = Extraction.bareExtraction(html, null, opts)
-      if (d == null) Seq.empty[Span] else d.spans
-    })
-    spark.udf.register("extract_title", (html: String) => {
-      val d = Extraction.bareExtraction(html, null, opts)
-      if (d == null) null else d.meta.title
-    })
-  }
 }

@@ -700,7 +700,7 @@ object TextOps {
     s"""SELECT qid, rank, nid FROM (
        | SELECT a.vec_id AS qid, b.vec_id AS nid,
        |   row_number() OVER (PARTITION BY a.vec_id
-       |     ORDER BY list_cosine_similarity(a.embedding, b.embedding) DESC, b.vec_id ASC) AS rank
+       |     ORDER BY list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) DESC, b.vec_id ASC) AS rank
        | FROM embeddings a, embeddings b
        | WHERE a.vec_id < $nQueries AND b.vec_id <> a.vec_id
        |) WHERE rank <= $k""".stripMargin
@@ -819,12 +819,15 @@ object TextOps {
           .otherwise(col("n_hit") / col("n_exact") >= recallFloor).as("recall_ok"))
   }
 
+  // The oracles cast to DOUBLE[] because the Spark side computes cosines in
+  // double: over FLOAT[] DuckDB returns a FLOAT cosine, which rounds a pair
+  // just under the threshold (0.34999998) onto it.
   def embLshRecallOracle(threshold: Double = 0.35, cap: Int = 2000): String =
     s"""SELECT CAST(count(*) AS BIGINT) AS n_exact,
        |  TRUE AS precision_ok, TRUE AS recall_ok
        |FROM embeddings a, embeddings b
        |WHERE a.vec_id < b.vec_id AND a.vec_id < $cap AND b.vec_id < $cap
-       |  AND list_cosine_similarity(a.embedding, b.embedding) >= $threshold""".stripMargin
+       |  AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= $threshold""".stripMargin
 
   /** Spherical k-means centroid fit for the IVF quantizer: Lloyd iterations
     * expressed as DataFrame jobs — assign each vector to its nearest current
