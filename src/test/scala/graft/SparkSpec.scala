@@ -585,35 +585,50 @@ class SparkSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("multimodal: image, audio and video rows decode with the real JDK codecs to the expected params") {
+  /** Ten rows of one media kind, each with its feature row from the one
+   *  decoder `extractFeatures` runs for that kind. */
+  private def decodedMedia(kind: String)
+      : Seq[(graft.spark.MultimodalOps.MediaRow, graft.spark.MultimodalOps.MediaFeatures)] = {
     import graft.spark.MultimodalOps
-    val media = MultimodalOps.mediaTable(spark, sf)
-    val blobs = media.collect().map(m => m.doc_id -> m.blob).toMap
-    val feats = MultimodalOps.extractFeatures(media).collect().groupBy(_.media_kind)
-    assert(Seq("image", "audio", "video").forall(k => feats.get(k).exists(_.nonEmpty)))
-    feats("image").take(10).foreach { f =>
-      val blob = blobs(f.doc_id)
+    val media = MultimodalOps.mediaTable(spark, sf).filter(_.media_kind == kind)
+    val rows = media.take(10)
+    val feats = MultimodalOps.extractFeatures(media).collect().map(f => f.doc_id -> f).toMap
+    assert(rows.nonEmpty)
+    rows.toSeq.map(m => m -> feats(m.doc_id))
+  }
+
+  test("multimodal: image rows decode with real ImageIO to the expected dims") {
+    import graft.spark.MultimodalOps
+    decodedMedia("image").foreach { case (m, f) =>
       // PNG magic: the blob is a real image payload, not repurposed text
-      assert((blob(0) & 0xff) == 0x89 && blob(1) == 'P'.toByte, f.doc_id)
-      assert(f.width == MultimodalOps.imgWidth(f.doc_id), s"doc ${f.doc_id} width")
-      assert(f.height == MultimodalOps.imgHeight(f.doc_id), s"doc ${f.doc_id} height")
-      assert(f.n_frames == 1, s"doc ${f.doc_id} frames")
+      assert((m.blob(0) & 0xff) == 0x89 && m.blob(1) == 'P'.toByte, m.doc_id)
+      assert(f.width == MultimodalOps.imgWidth(m.doc_id), s"doc ${m.doc_id} width")
+      assert(f.height == MultimodalOps.imgHeight(m.doc_id), s"doc ${m.doc_id} height")
+      assert(f.n_frames == 1, s"doc ${m.doc_id} frames")
     }
-    feats("audio").take(10).foreach { f =>
-      val blob = blobs(f.doc_id)
+  }
+
+  test("multimodal: audio rows decode with real javax.sound to the expected params") {
+    import graft.spark.MultimodalOps
+    decodedMedia("audio").foreach { case (m, f) =>
       // RIFF/WAVE magic: the blob is a real WAV payload, not repurposed text
-      assert(blob(0) == 'R'.toByte && blob(1) == 'I'.toByte && blob(8) == 'W'.toByte, f.doc_id)
-      assert(f.sample_rate == MultimodalOps.audioSampleRate(f.doc_id), s"doc ${f.doc_id} rate")
-      assert(f.n_samples == MultimodalOps.audioNumSamples(f.doc_id).toLong,
-        s"doc ${f.doc_id} samples")
+      assert(m.blob(0) == 'R'.toByte && m.blob(1) == 'I'.toByte &&
+        m.blob(8) == 'W'.toByte, m.doc_id)
+      assert(f.sample_rate == MultimodalOps.audioSampleRate(m.doc_id), s"doc ${m.doc_id} rate")
+      assert(f.n_samples == MultimodalOps.audioNumSamples(m.doc_id).toLong,
+        s"doc ${m.doc_id} samples")
     }
-    feats("video").take(10).foreach { f =>
-      val blob = blobs(f.doc_id)
+  }
+
+  test("multimodal: video rows decode with the real JDK GIF frame reader") {
+    import graft.spark.MultimodalOps
+    decodedMedia("video").foreach { case (m, f) =>
       // GIF89a magic: the blob is a real animated-GIF payload
-      assert(blob(0) == 'G'.toByte && blob(1) == 'I'.toByte && blob(2) == 'F'.toByte, f.doc_id)
-      assert(f.width == MultimodalOps.imgWidth(f.doc_id), s"doc ${f.doc_id} width")
-      assert(f.height == MultimodalOps.imgHeight(f.doc_id), s"doc ${f.doc_id} height")
-      assert(f.n_frames == MultimodalOps.videoFrames(f.doc_id), s"doc ${f.doc_id} frames")
+      assert(m.blob(0) == 'G'.toByte && m.blob(1) == 'I'.toByte &&
+        m.blob(2) == 'F'.toByte, m.doc_id)
+      assert(f.width == MultimodalOps.imgWidth(m.doc_id), s"doc ${m.doc_id} width")
+      assert(f.height == MultimodalOps.imgHeight(m.doc_id), s"doc ${m.doc_id} height")
+      assert(f.n_frames == MultimodalOps.videoFrames(m.doc_id), s"doc ${m.doc_id} frames")
     }
   }
 
