@@ -165,7 +165,6 @@ final class Node(var tag: String) {
   def len: Int = children.length
   def apply(i: Int): Node = children(i)
   def last: Node = children.last
-  def nonEmptyChildren: Boolean = children.nonEmpty
 
   def isAncestorOf(n: Node): Boolean = {
     var p = n.parent

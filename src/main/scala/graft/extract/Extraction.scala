@@ -4,7 +4,7 @@ import graft.clean.Cleaner
 import graft.dom.{Dom, Node}
 import graft.hash.SimHash
 import graft.meta.{DocMeta, Metadata}
-import graft.out.Serializers
+import graft.out.{Serializers, Tei}
 import graft.out.Serializers.Span
 import graft.parse.HtmlParser
 import graft.select.Selectors
@@ -17,6 +17,65 @@ final case class ExtractedDoc(
     comments: String,
     meta: DocMeta,
     rawTextLen: Int)
+
+/** One kernel pass over a document ([[Extraction.run]]): the extracted row
+  * and the body and comments trees it was rendered from. Every output format
+  * (determine_returnstring, core.py:794-833) is a projection of it: none
+  * reruns the kernel, and none changes the result, so one result renders any
+  * number of formats in any order. `commentsBody` and `doc.comments` are null
+  * when comment extraction is off. */
+final case class KernelResult(doc: ExtractedDoc, body: Node, commentsBody: Node) {
+
+  /** output_format='txt' (core.py:1015-1106). */
+  def txt: String = {
+    val out =
+      if (doc.comments != null && doc.comments.nonEmpty) doc.text + "\n" + doc.comments
+      else doc.text
+    TextUtils.normalizeUnicode(KernelResult.stripStr(out))
+  }
+
+  /** output_format='xml' (core.py:799-814). */
+  def xml: String = {
+    val m = doc.meta
+    // `fingerprint` and `id` are left out on purpose: the xml bytes are
+    // pinned without them (KernelGoldenSpec), and no check against the
+    // reference's xml output shows that it carries them
+    val metaAttrs = List("sitename" -> m.sitename, "title" -> m.title, "author" -> m.author,
+      "date" -> m.date, "url" -> m.url, "hostname" -> m.hostname,
+      "description" -> m.description,
+      "categories" -> (if (m.categories.nonEmpty) m.categories.mkString(";") else null),
+      "tags" -> (if (m.tags.nonEmpty) m.tags.mkString(";") else null),
+      "license" -> m.license)
+    TextUtils.normalizeUnicode(Serializers.xmlOutput(body, commentsBody, metaAttrs))
+  }
+
+  /** output_format='csv' (core.py:816-822). */
+  def csv: String =
+    TextUtils.normalizeUnicode(Serializers.txtToCsv(doc.text, doc.comments, doc.meta, doc.meta.id))
+
+  /** output_format='json' (core.py:824-825). */
+  def json: String =
+    TextUtils.normalizeUnicode(Serializers.jsonOutput(doc.meta, doc.text, doc.comments))
+
+  /** The TEI document tree (core.py:811-812) that [[tei]] serializes. */
+  def teiTree: Node =
+    Tei.buildTeiOutput(doc.meta, Serializers.finalCleanup(body.deepCopy),
+      if (commentsBody != null) commentsBody.deepCopy else null)
+
+  /** output_format='xmltei' (core.py:811-812). */
+  def tei: String =
+    TextUtils.normalizeUnicode(Option(TextUtils.sanitize(Dom.toXml(teiTree))).getOrElse(""))
+}
+
+object KernelResult {
+  private def stripStr(s: String): String = {
+    var a = 0
+    var b = s.length
+    while (a < b && TextUtils.isPyWhitespace(s.charAt(a))) a += 1
+    while (b > a && TextUtils.isPyWhitespace(s.charAt(b - 1))) b -= 1
+    s.substring(a, b)
+  }
+}
 
 /** Top-level per-document extraction (core.py:836-1106 `bare_extraction` /
   * `extract`), the kernel run per row inside the Spark `mapPartitions`
@@ -80,57 +139,40 @@ object Extraction {
     (rBody, rText, lenText)
   }
 
-  /** Full result incl. the body trees (tests / XML projection). */
-  final case class BareResult(doc: ExtractedDoc, body: Node, commentsBody: Node)
+  /** The one kernel call: parse, extract (bare_extraction, core.py:836-1007)
+    * and stamp `id` and the content fingerprint (core.py:1099-1103). Returns
+    * null when the document is discarded (the reference's ValueError
+    * channel). */
+  def run(html: String, url: String = null, recordId: String = null,
+      options: ExtractorOptions = ExtractorOptions()): KernelResult = {
+    val r =
+      try {
+        val tree = HtmlParser.loadHtml(html)
+        if (tree == null) null else extractTree(tree, url, options)
+      } catch {
+        case _: StackOverflowError => null
+        case scala.util.control.NonFatal(_) => null
+      }
+    if (r == null) return null
+    val fingerprint = SimHash.contentFingerprint(String.valueOf(r.doc.meta.title) + " " + r.doc.text)
+    r.copy(doc = r.doc.copy(meta = r.doc.meta.copy(id = recordId, fingerprint = fingerprint)))
+  }
 
-  /** bare_extraction (core.py:836-1007). Returns null when the document is
-    * discarded (the reference's ValueError channel). */
-  def bareExtraction(filecontent: String, url: String = null,
-      options: ExtractorOptions = ExtractorOptions(),
-      withMetadata: Boolean = true): ExtractedDoc = {
-    val r = bareFull(filecontent, url, options, withMetadata)
+  /** The extracted row of [[run]]. */
+  def extractDoc(filecontent: String, url: String = null, recordId: String = null,
+      options: ExtractorOptions = ExtractorOptions()): ExtractedDoc = {
+    val r = run(filecontent, url, recordId, options)
     if (r == null) null else r.doc
   }
 
-  def bareFull(filecontent: String, url: String = null,
-      options: ExtractorOptions = ExtractorOptions(),
-      withMetadata: Boolean = true): BareResult = {
-    try {
-      val tree = HtmlParser.loadHtml(filecontent)
-      if (tree == null) return null
-      bareExtractionTree(tree, url, options, withMetadata)
-    } catch {
-      case _: StackOverflowError => null
-      case scala.util.control.NonFatal(_) => null
-    }
-  }
-
-  /** extract with output_format='xml' (tests use this surface). */
-  def extractXml(filecontent: String, url: String = null,
-      options: ExtractorOptions = ExtractorOptions()): String = {
-    val r = bareFull(filecontent, url, options)
-    if (r == null) return null
-    val m = r.doc.meta
-    val metaAttrs = List("sitename" -> m.sitename, "title" -> m.title, "author" -> m.author,
-      "date" -> m.date, "url" -> m.url, "hostname" -> m.hostname,
-      "description" -> m.description,
-      "categories" -> (if (m.categories.nonEmpty) m.categories.mkString(";") else null),
-      "tags" -> (if (m.tags.nonEmpty) m.tags.mkString(";") else null),
-      "license" -> m.license, "fingerprint" -> m.fingerprint)
-    TextUtils.normalizeUnicode(
-      Serializers.xmlOutput(r.body, if (options.comments) r.commentsBody else null, metaAttrs))
-  }
-
-  def bareExtractionTree(treeIn: Node, url: String, options: ExtractorOptions,
-      withMetadata: Boolean): BareResult = {
+  private def extractTree(tree: Node, url: String, options: ExtractorOptions): KernelResult = {
     KernelBudget.start(options.config.extractionTimeoutSec)
     try {
-      val tree = treeIn
       // quick and dirty HTML lang check (core.py:905-908; LANGID_FLAG=False
       // path — our classifier is a heuristic, so the meta check always runs)
       if (options.lang != null && !Filters.checkHtmlLang(tree, options.lang)) return null
       // metadata first (metadata.py works on the uncleaned tree)
-      var meta = if (withMetadata) Metadata.extractMetadata(tree, url) else DocMeta()
+      var meta = Metadata.extractMetadata(tree, url)
       // cut short if extracted URL blacklisted (core.py:913-916)
       if (meta.url != null && options.urlBlacklist.contains(meta.url)) return null
 
@@ -194,90 +236,11 @@ object Extraction {
         if (options.comments && commentsBody != null)
           Serializers.xmlToTxt(renderCopy(commentsBody), options.formatting)
         else null
-      BareResult(ExtractedDoc(spans, text, commentsTxt, meta, lenText), postbody, commentsBody)
+      KernelResult(ExtractedDoc(spans, text, commentsTxt, meta, lenText), postbody, commentsBody)
     } catch {
       case e: StackOverflowError => if (Extraction.rethrow) throw e else null
       case scala.util.control.NonFatal(e) => if (Extraction.rethrow) throw e else null
     } finally KernelBudget.clear()
-  }
-
-  /** extract (core.py:1015-1106) with txt output; returns null if discarded. */
-  def extract(filecontent: String, url: String = null,
-      options: ExtractorOptions = ExtractorOptions()): String = {
-    val doc = bareExtraction(filecontent, url, options)
-    if (doc == null) return null
-    val out =
-      if (doc.comments != null && doc.comments.nonEmpty) doc.text + "\n" + doc.comments
-      else doc.text
-    TextUtils.normalizeUnicode(stripStr(out))
-  }
-
-  /** extract with output_format='csv' (determine_returnstring core.py:816-822). */
-  def extractCsv(filecontent: String, url: String = null, recordId: String = null,
-      options: ExtractorOptions = ExtractorOptions()): String = {
-    val doc = extractDoc(filecontent, url, recordId, options)
-    if (doc == null) return null
-    TextUtils.normalizeUnicode(Serializers.txtToCsv(doc.text,
-      if (options.comments) doc.comments else null, doc.meta, recordId))
-  }
-
-  /** extract with output_format='json' (core.py:824-825). */
-  def extractJson(filecontent: String, url: String = null, recordId: String = null,
-      options: ExtractorOptions = ExtractorOptions()): String = {
-    val doc = extractDoc(filecontent, url, recordId, options)
-    if (doc == null) return null
-    TextUtils.normalizeUnicode(Serializers.jsonOutput(doc.meta, doc.text,
-      if (options.comments) doc.comments else null))
-  }
-
-  /** extract with output_format='xmltei' (core.py:811-812). */
-  def extractTei(filecontent: String, url: String = null, recordId: String = null,
-      options: ExtractorOptions = ExtractorOptions()): String = {
-    val tei = extractTeiTree(filecontent, url, recordId, options)
-    if (tei == null) return null
-    TextUtils.normalizeUnicode(
-      Option(TextUtils.sanitize(Dom.toXml(tei))).getOrElse(""))
-  }
-
-  /** The TEI document TREE — extractTei is this plus serialization (so the
-    * RelaxNG validation path can never diverge from the shipped output). */
-  def extractTeiTree(filecontent: String, url: String = null, recordId: String = null,
-      options: ExtractorOptions = ExtractorOptions()): Node = {
-    val r = bareFull(filecontent, url, options)
-    if (r == null) return null
-    val fingerprint = SimHash.contentFingerprint(String.valueOf(r.doc.meta.title) + " " + r.doc.text)
-    val meta = r.doc.meta.copy(id = recordId, fingerprint = fingerprint)
-    // final empty-element cleanup as in the xml path (core.py:801-808)
-    r.body.iterList(null).foreach { element =>
-      if (element.tag != "graphic" && element.children.isEmpty &&
-        (element.text == null || element.text.isEmpty) &&
-        (element.tail == null || element.tail.isEmpty)) {
-        val p = element.getparent
-        if (p != null) p.remove(element)
-      }
-    }
-    Serializers.stripDoubleTags(r.body)
-    Serializers.removeEmptyElements(r.body)
-    graft.out.Tei.buildTeiOutput(meta, r.body,
-      if (options.comments) r.commentsBody else null, url)
-  }
-
-  /** Full result with fingerprint (core.py:1099-1103). */
-  def extractDoc(filecontent: String, url: String = null, recordId: String = null,
-      options: ExtractorOptions = ExtractorOptions()): ExtractedDoc = {
-    val doc = bareExtraction(filecontent, url, options)
-    if (doc == null) return null
-    val rawText = doc.text
-    val fingerprint = SimHash.contentFingerprint(String.valueOf(doc.meta.title) + " " + rawText)
-    doc.copy(meta = doc.meta.copy(id = recordId, fingerprint = fingerprint))
-  }
-
-  private def stripStr(s: String): String = {
-    var a = 0
-    var b = s.length
-    while (a < b && TextUtils.isPyWhitespace(s.charAt(a))) a += 1
-    while (b > a && TextUtils.isPyWhitespace(s.charAt(b - 1))) b -= 1
-    s.substring(a, b)
   }
 }
 

@@ -204,15 +204,6 @@ object LangId {
     * resolved by the disjoint-trigram tie-break above. */
   private val Confusable: Set[Set[String]] = Set(Set("da", "nb"))
 
-  /** Supported Latin-script set = WordLists keys (en de fr es it pt nl pl cs
-    * tr hu sv da nb); script-range set: ru el ko ja zh ar he. Text in most
-    * other languages abstains (returns null) by the margin gate above —
-    * probed r06: ro/fi abstain at Margin=0.15. The da/nb pair
-    * sits inside one dialect continuum and is resolved by the
-    * disjoint-trigram tie-break rather than the margin; Nynorsk folds to nb
-    * at this granularity. */
-  def supportedLatin: Seq[String] = WordLists.map(_._1)
-
   /** Character-trigram counts of the first 4k chars (letters lowercased,
     * non-letters collapsed to single boundaries) — shared by detect and
     * profileScores. */

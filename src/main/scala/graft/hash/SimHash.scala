@@ -49,7 +49,7 @@ object SimHash {
   }
 
   /** Internal buffer-returning variant (thread-local scratch, valid until
-    * the next call on the same thread) — createHash/generateBowHash iterate
+    * the next call on the same thread) — createHash iterates
     * it directly, skipping the per-token cons cells (allocation profile). */
   private[hash] def sampleTokensBuf(input: String,
       length: Int = 64): scala.collection.mutable.ArrayBuffer[String] = {
@@ -166,16 +166,4 @@ object SimHash {
 
   /** content_fingerprint (hashing.py:133-135). */
   def contentFingerprint(content: String): String = toHex(createHash(content))
-
-  /** generate_bow_hash (hashing.py:30-34). */
-  def generateBowHash(input: String, length: Int = 24): Array[Byte] = {
-    val teststring = sampleTokensBuf(input).mkString(" ").trim
-    Blake2b.digest(teststring.getBytes(java.nio.charset.StandardCharsets.UTF_8), length)
-  }
-
-  /** generate_hash_filename (hashing.py:37-41). */
-  def generateHashFilename(content: String): String = {
-    val noXml = content.replaceAll("<[^<]+?>", "")
-    java.util.Base64.getUrlEncoder.encodeToString(generateBowHash(noXml, 12))
-  }
 }

@@ -160,13 +160,12 @@ object Serializers {
     fields.map { case (k, v) => s"\"$k\": $v" }.mkString("{", ", ", "}")
   }
 
-  /** XML output projection (determine_returnstring 'xml' path, core.py:799-814
-    * + build_xml_output xml.py:102-114), without pretty-printing. Mutates the
-    * body tree (final cleanup) like the reference. */
-  def xmlOutput(body: Node, commentsBody: Node, metaAttrs: List[(String, String)]): String = {
-    // last cleaning (core.py:801-805)
+  /** The last cleaning before the xml and TEI renderings (core.py:801-808):
+    * drops empty non-graphic leaves, then strip_double_tags and
+    * remove_empty_elements. Rewrites `body` in place and returns it. */
+  def finalCleanup(body: Node): Node = {
     body.iterList(null).foreach { element =>
-      if ((element.tag != "graphic") && element.children.isEmpty &&
+      if (element.tag != "graphic" && element.children.isEmpty &&
         (element.text == null || element.text.isEmpty) &&
         (element.tail == null || element.tail.isEmpty)) {
         val parent = element.getparent
@@ -175,13 +174,21 @@ object Serializers {
     }
     stripDoubleTags(body)
     removeEmptyElements(body)
+  }
+
+  /** XML output projection (determine_returnstring 'xml' path, core.py:799-814
+    * + build_xml_output xml.py:102-114), without pretty-printing. Renders
+    * copies of the trees, which it leaves unchanged. */
+  def xmlOutput(body: Node, commentsBody: Node, metaAttrs: List[(String, String)]): String = {
     val doc = graft.dom.Dom.elem("doc")
     metaAttrs.foreach { case (k, v) => if (v != null) doc.set(k, v) }
-    body.tag = "main"
-    doc.append(body)
+    val main = finalCleanup(body.deepCopy)
+    main.tag = "main"
+    doc.append(main)
     if (commentsBody != null) {
-      commentsBody.tag = "comments"
-      doc.append(commentsBody)
+      val comments = commentsBody.deepCopy
+      comments.tag = "comments"
+      doc.append(comments)
     }
     Option(TextUtils.sanitize(graft.dom.Dom.toXml(doc))).getOrElse("")
   }

@@ -235,7 +235,7 @@ object Tei {
   }
 
   /** check_tei (xml.py:148-186). */
-  def checkTei(xmldoc: Node, url: String): Node = {
+  def checkTei(xmldoc: Node): Node = {
     // convert head tags
     xmldoc.iterList(Set("head")).foreach { elemIn =>
       var elem = elemIn
@@ -292,11 +292,6 @@ object Tei {
     xmldoc.children.find(_.tag == "text").flatMap(_.children.find(_.tag == "body"))
 
   /** build_tei_output (xml.py:138-145). */
-  def buildTeiOutput(meta: DocMeta, body: Node, commentsBody: Node, url: String): Node =
-    checkTei(writeTeiTree(meta, body, commentsBody), url)
-
-  /** validate_tei (xml.py:189-200): RelaxNG validation against the TEI P5
-    * schema (the reference's own schema asset, shipped as a resource) via
-    * the derivative-algorithm validator in RelaxNg. */
-  def validateTei(xmldoc: Node): Boolean = RelaxNg.teiSchema.validate(xmldoc)
+  def buildTeiOutput(meta: DocMeta, body: Node, commentsBody: Node): Node =
+    checkTei(writeTeiTree(meta, body, commentsBody))
 }

@@ -110,7 +110,7 @@ object EvalCorpus {
             val tree = HtmlParser.loadHtml(HtmlParser.decodeFile(content))
             if (tree == null) null else graft.extract.Baseline.baseline(tree)._2
           } else
-            Extraction.extract(HtmlParser.decodeFile(content), null, opts)
+            Option(Extraction.run(HtmlParser.decodeFile(content), null, null, opts)).map(_.txt).orNull
         var (tp, fn, fp, tn) = (0L, 0L, 0L, 0L)
         if (result != null) {
           expected.foreach(s => if (result.contains(s)) tp += 1 else fn += 1)

@@ -56,18 +56,6 @@ object TextUtils {
     sb.toString
   }
 
-  /** Python str.isprintable(): true unless category is Cc/Cf/Cs/Co/Cn/Zl/Zp/Zs
-    * (with U+0020 printable). */
-  def isPyPrintable(c: Char): Boolean = {
-    if (c == ' ') return true
-    Character.getType(c) match {
-      case Character.CONTROL | Character.FORMAT | Character.SURROGATE |
-          Character.PRIVATE_USE | Character.UNASSIGNED | Character.LINE_SEPARATOR |
-          Character.PARAGRAPH_SEPARATOR | Character.SPACE_SEPARATOR => false
-      case _ => true
-    }
-  }
-
   /** Python str.isprintable() over a full code point — Python iterates code
     * points, so astral chars (emoji, category So) are printable; a per-Char
     * walk would misclassify their surrogate halves as non-printable. */
@@ -191,51 +179,6 @@ object TextUtils {
   }
 
   def isDubiousHtml(beginning: String): Boolean = !beginning.contains("html")
-
-  /** difflib SequenceMatcher.ratio(): 2*M/T over recursive longest matching
-    * blocks (no junk heuristic — inputs are short domain strings). */
-  def sequenceMatcherRatio(a: String, b: String): Double = {
-    def longestMatch(alo: Int, ahi: Int, blo: Int, bhi: Int): (Int, Int, Int) = {
-      var best = (alo, blo, 0)
-      var j2len = Map.empty[Int, Int]
-      var i = alo
-      while (i < ahi) {
-        var newJ2len = Map.empty[Int, Int]
-        var j = blo
-        while (j < bhi) {
-          if (a.charAt(i) == b.charAt(j)) {
-            val k = j2len.getOrElse(j - 1, 0) + 1
-            newJ2len += (j -> k)
-            if (k > best._3) best = (i - k + 1, j - k + 1, k)
-          }
-          j += 1
-        }
-        j2len = newJ2len
-        i += 1
-      }
-      best
-    }
-    def matches(alo: Int, ahi: Int, blo: Int, bhi: Int): Int = {
-      val (i, j, k) = longestMatch(alo, ahi, blo, bhi)
-      if (k == 0) 0
-      else k + matches(alo, i, blo, j) + matches(i + k, ahi, j + k, bhi)
-    }
-    val total = a.length + b.length
-    if (total == 0) 1.0
-    else 2.0 * matches(0, a.length, 0, b.length) / total
-  }
-
-  private val StripExtension = Pattern.compile("\\.[^/?#]{2,63}$")
-
-  /** is_similar_domain (utils.py:363-371). */
-  def isSimilarDomain(reference: String, newString: String, threshold: Double = 0.5): Boolean = {
-    if (newString != reference) {
-      val r = StripExtension.matcher(reference).replaceFirst("")
-      val n = StripExtension.matcher(newString).replaceFirst("")
-      if (sequenceMatcherRatio(r, n) < threshold) return false
-    }
-    true
-  }
 }
 
 /** Thread-local reusable regex matchers: `Pattern.matcher` allocates a

@@ -14,55 +14,63 @@ class FixtureSpec extends AnyFunSuite {
   private def readFile(name: String): String =
     HtmlParser.decodeFile(FixtureCorpus.readAllBytes(java.nio.file.Paths.get(Res, name)))
 
+  // the txt projection of one kernel run (null when the page is discarded)
+  private def txt(html: String, url: String, o: ExtractorOptions): String =
+    Option(Extraction.run(html, url, null, o)).map(_.txt).orNull
+
+  // the xml projection of one kernel run (null when the page is discarded)
+  private def xml(html: String, url: String, o: ExtractorOptions): String =
+    Option(Extraction.run(html, url, null, o)).map(_.xml).orNull
+
   test("exotic_tags.html (unit_tests.py:167-172)") {
     val html = readFile("exotic_tags.html")
-    val r = Extraction.extract(html, "http://exotic_tags", Zero)
+    val r = txt(html, "http://exotic_tags", Zero)
     assert(r != null && r.contains("Teletype text") && r.contains("My new car is silver."), r)
   }
 
   test("webpage.html.gz end-to-end (unit_tests.py:134-136)") {
     val bytes = FixtureCorpus.readAllBytes(java.nio.file.Paths.get(Res, "webpage.html.gz"))
     val html = HtmlParser.decodeFile(bytes)
-    val r = Extraction.extract(html, null, ExtractorOptions())
+    val r = txt(html, null, ExtractorOptions())
     assert(r != null && r.contains("Long story short,"), if (r == null) "null" else r.take(200))
   }
 
   test("http_sample.html images + links (unit_tests.py:403-407,441-445)") {
     val html = readFile("http_sample.html")
-    val rDefault = Extraction.extract(html, null, ExtractorOptions())
+    val rDefault = txt(html, null, ExtractorOptions())
     assert(rDefault != null && !rDefault.contains("![Example image](test.jpg)"))
-    val rImg = Extraction.extract(html, null,
+    val rImg = txt(html, null,
       ExtractorOptions(fast = true, images = true))
     assert(rImg.contains("![Example image](test.jpg)"), rImg)
-    val rLink = Extraction.extract(html, null,
+    val rLink = txt(html, null,
       Zero.copy(fast = true, links = true))
     assert(rLink.contains("[link](testlink.html)"), rLink)
-    val rXml = Extraction.extractXml(html, null, Zero.copy(fast = true, links = true))
+    val rXml = xml(html, null, Zero.copy(fast = true, links = true))
     assert(rXml.contains("<ref target=\"testlink.html\">link</ref>"), rXml)
-    val rImgXml = Extraction.extractXml(html, null, Zero.copy(fast = true, images = true))
+    val rImgXml = xml(html, null, Zero.copy(fast = true, images = true))
     assert(rImgXml.contains("<graphic src=\"test.jpg\" title=\"Example image\"/>"), rImgXml)
   }
 
   test("apache.html tables toggle (unit_tests.py:382-385)") {
     val html = readFile("apache.html")
-    val withTables = Extraction.extract(html, null, ExtractorOptions(tables = true))
+    val withTables = txt(html, null, ExtractorOptions(tables = true))
     assert(withTables != null && withTables.contains("localhost:80"))
-    val noTables = Extraction.extract(html, null, ExtractorOptions(tables = false))
+    val noTables = txt(html, null, ExtractorOptions(tables = false))
     assert(noTables == null || !noTables.contains("localhost:80"))
   }
 
   test("scam.html rejected (unit_tests.py:386-389)") {
     // the reference suite runs with the mutated ZERO config (unit_tests.py:45-47)
     val html = readFile("scam.html")
-    val r1 = Extraction.extract(html, null, Zero.copy(fast = true, tables = false))
+    val r1 = txt(html, null, Zero.copy(fast = true, tables = false))
     assert(r1 == null || r1 == "", String.valueOf(r1).take(200))
-    val r2 = Extraction.extract(html, null, Zero.copy(tables = false))
+    val r2 = txt(html, null, Zero.copy(tables = false))
     assert(r2 == null || r2 == "", String.valueOf(r2).take(200))
   }
 
   test("utf8.html round-trips") {
     val html = readFile("utf8.html")
-    val r = Extraction.extract(html, null, Zero)
+    val r = txt(html, null, Zero)
     assert(r != null && r.nonEmpty)
   }
 

@@ -252,8 +252,8 @@ class KernelFastPathSpec extends AnyFunSuite {
     val big = page.replaceFirst(Pattern.quote(anchor),
       Matcher.quoteReplacement(anchor + "\"articleBody\":\"" + body + "\","))
     val opts = ExtractorOptions(images = true)
-    val ref = Extraction.bareExtraction(page, options = opts)
-    val got = Extraction.bareExtraction(big, options = opts)
+    val ref = Extraction.extractDoc(page, options = opts)
+    val got = Extraction.extractDoc(big, options = opts)
     assert(ref != null && ref.meta.title != null && ref.meta.date != null)
     assert(got != null, "the document was dropped")
     assert(got.meta == ref.meta && got.text == ref.text)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.{Extraction, ExtractorOptions, TrafConfig}
+import graft.extract.{Extraction, ExtractorOptions, KernelResult, TrafConfig}
 import graft.hash.{Blake2b, SimHash}
 import graft.out.Serializers.Span
 import graft.parse.HtmlParser
@@ -14,14 +14,19 @@ class KernelSpec extends AnyFunSuite {
   private val Zero = ExtractorOptions(config = TrafConfig.Zero)
   private val ZeroFast = Zero.copy(fast = true)
 
+  // one projection of one kernel run (null when the page is discarded)
+  private def render(html: String, o: ExtractorOptions, url: String = null)(
+      format: KernelResult => String): String =
+    Option(Extraction.run(html, url, null, o)).map(format).orNull
+
   private def txt(html: String, o: ExtractorOptions = Zero, url: String = null): String =
-    Extraction.extract(html, url, o)
+    render(html, o, url)(_.txt)
 
   private def xml(html: String, o: ExtractorOptions = Zero, url: String = null): String =
-    Extraction.extractXml(html, url, o)
+    render(html, o, url)(_.xml)
 
   private def spans(html: String, o: ExtractorOptions = Zero): List[Span] = {
-    val d = Extraction.bareExtraction(html, null, o)
+    val d = Extraction.extractDoc(html, null, null, o)
     if (d == null) Nil else d.spans
   }
 
@@ -54,7 +59,7 @@ class KernelSpec extends AnyFunSuite {
 
   test("load_html basic (unit_tests.py:125-127)") {
     assert(HtmlParser.loadHtml("<html><body>ÄÖÜ</body></html>") != null)
-    assert(Extraction.extract(null, "url") == null)
+    assert(txt(null, ExtractorOptions(), "url") == null)
   }
 
   test("unicode NFC Äffin (unit_tests.py:139-141)") {
@@ -215,7 +220,7 @@ class KernelSpec extends AnyFunSuite {
       </div>
   </body>
 </html>"""
-    assert(Extraction.extract(h, null, ExtractorOptions(formatting = true, links = true, images = true)) != null)
+    assert(txt(h, ExtractorOptions(formatting = true, links = true, images = true)) != null)
   }
 
   test("comments extraction (unit_tests.py:240)") {
@@ -353,7 +358,7 @@ class KernelSpec extends AnyFunSuite {
     val h = """<html><body><article><table><tbody><tr><td><small>text<br></small><h4>more_text</h4></td><td><a href='link'>linktext</a></td></tr></tbody></table></article></body></html>"""
     // the reference suite aliases ZERO_CONFIG = DEFAULT_CONFIG (mutated in
     // place, unit_tests.py:45-47), so its "DEFAULT_CONFIG" runs are zero-config
-    val r = Extraction.extractXml(h, null, ZeroFast.copy(links = true))
+    val r = xml(h, ZeroFast.copy(links = true))
     val squashed = if (r == null) "" else r.replace("\n", "").replace(" ", "")
     assert(squashed.contains("<table><row><cell>text<head>more_text</head></cell></row></table>"), squashed)
   }
@@ -462,7 +467,7 @@ class KernelSpec extends AnyFunSuite {
 
   test("metadata title/url/sitename basics") {
     val h = """<html><head><title>Test Title — Example.org</title><meta property="og:title" content="OG Title"/><meta property="og:description" content="desc"/><link rel="canonical" href="https://www.example.org/page"/></head><body><article><p>Some text here that is long enough for the extractor to proceed.</p></article></body></html>"""
-    val d = Extraction.bareExtraction(h, null, Zero)
+    val d = Extraction.extractDoc(h, null, null, Zero)
     assert(d != null)
     assert(d.meta.title == "OG Title")
     assert(d.meta.url == "https://www.example.org/page")
@@ -472,7 +477,6 @@ class KernelSpec extends AnyFunSuite {
   test("content_fingerprint golden value (hashing_tests.py:6-9)") {
     val content = "abcde ijk l, " * 10
     assert(SimHash.contentFingerprint(content) == "528497a1d07b66d6")
-    assert(SimHash.generateHashFilename(content) == "42LNugG3Sc95646i")
   }
 
   test("simhash similarity ordering (hashing_tests.py:13-44)") {
@@ -497,16 +501,16 @@ class KernelSpec extends AnyFunSuite {
     assert(graft.out.Serializers.txtToCsv("Test text", "Test comment", m, "1") ==
       "1\thttps://example.org\tNone\texample.org\tTest title\thttps://example.org/image.jpg\tNone\tTest text\tTest comment\tCC BY-SA\tarticle\n")
     val page = "<html><body><p>ÄÄÄÄÄÄÄÄÄÄÄÄÄÄ</p></body></html>"
-    assert(Extraction.extractCsv(page, null, null, Zero) != null)
-    assert(Extraction.extractCsv(page, null, null, Zero.copy(comments = false)).endsWith("\tNone\n"))
-    val j = Extraction.extractJson(page, null, null, Zero)
+    assert(render(page, Zero)(_.csv) != null)
+    assert(render(page, Zero.copy(comments = false))(_.csv).endsWith("\tNone\n"))
+    val j = render(page, Zero)(_.json)
     assert(j != null && j.endsWith("}") && j.contains("\"fingerprint\":") && j.contains("\"language\":"))
   }
 
   test("language filtering (unit_tests.py:703-710)") {
     val myHtml = "<html><head><meta http-equiv=\"content-language\" content=\"EN\"/></head><body><div=\"article-body\"><p>Text.</p></div></body></html>"
-    assert(Extraction.extract(myHtml, null, Zero.copy(lang = "de")) == null)
-    assert(Extraction.extract(myHtml, null, Zero) != null)
+    assert(txt(myHtml, Zero.copy(lang = "de")) == null)
+    assert(txt(myHtml, Zero) != null)
     // justext on same doc yields empty body (unit_tests.py:711)
     val tree = HtmlParser.loadHtml(myHtml)
     assert(graft.extract.Justext.tryJustext(tree).children.isEmpty)
@@ -516,31 +520,31 @@ class KernelSpec extends AnyFunSuite {
     assert(!graft.extract.Filters.languageFilter("Hier ist ein Text auf Deutsch", "", "de")._1)
     assert(graft.extract.Filters.languageFilter("Hier ist ein Text auf Deutsch", "", "en")._1)
     val doc = "<html><body><article><p>How many ages hence/Shall this our lofty scene be acted over,/In states unborn and accents yet unknown!</p></article></body></html>"
-    assert(Extraction.extract(doc, null, Zero.copy(lang = "de")) == null)
-    assert(Extraction.extract(doc, null, Zero.copy(lang = "en")) != null)
+    assert(txt(doc, Zero.copy(lang = "de")) == null)
+    assert(txt(doc, Zero.copy(lang = "en")) != null)
   }
 
   test("url blacklist (filters_tests.py:65)") {
     val h = "<html><head><link rel=\"canonical\" href=\"https://example.org/x/y\"/></head><body><p>some text</p></body></html>"
-    assert(Extraction.extract(h, null, Zero.copy(urlBlacklist = Set("https://example.org/x/y"))) == null)
-    assert(Extraction.extract(h, null, Zero) != null)
+    assert(txt(h, Zero.copy(urlBlacklist = Set("https://example.org/x/y"))) == null)
+    assert(txt(h, Zero) != null)
   }
 
   test("max_tree_size (filters_tests.py:67-77)") {
     val p50 = "<html><body>" + "<p>abc</p>" * 50 + "</body></html>"
-    assert(Extraction.extract(p50, null, ExtractorOptions(maxTreeSize = 500)) != null)
+    assert(txt(p50, ExtractorOptions(maxTreeSize = 500)) != null)
     val p501 = "<html><body>" + "<p>abc</p>" * 501 + "</body></html>"
-    assert(Extraction.extract(p501, null, ExtractorOptions(maxTreeSize = 500)) == null)
+    assert(txt(p501, ExtractorOptions(maxTreeSize = 500)) == null)
   }
 
   test("dedup at document and paragraph level (filters_tests.py:78-92)") {
     val cache = new graft.extract.Deduplicator(maxSize = 2)
     val opts = ExtractorOptions(dedup = true, dedupCache = cache)
     val doc = "<html><body>" + "<p>abc</p>" * 50 + "</body></html>"
-    assert(Extraction.extract(doc, null, opts) != null)
-    assert(Extraction.extract(doc, null, opts) != null)
-    assert(Extraction.extract(doc, null, opts) != null)
-    assert(Extraction.extract(doc, null, opts) == null)
+    assert(txt(doc, opts) != null)
+    assert(txt(doc, opts) != null)
+    assert(txt(doc, opts) != null)
+    assert(txt(doc, opts) == null)
     // paragraph level
     val cache2 = new graft.extract.Deduplicator(maxSize = 2)
     val opts2 = ExtractorOptions(dedup = true, dedupCache = cache2)
@@ -551,17 +555,11 @@ class KernelSpec extends AnyFunSuite {
     assert(graft.extract.Handlers.processNode(mkP, opts2) == null)
   }
 
-  test("is_similar_domain (utils.py:363-371)") {
-    assert(TextUtils.isSimilarDomain("example.org", "example.org"))
-    assert(TextUtils.isSimilarDomain("example.org", "example.com"))
-    assert(!TextUtils.isSimilarDomain("example.org", "totally-different.net"))
-  }
-
   test("stricter config discards short docs (unit_tests.py:706, NEW_CONFIG analogue)") {
     val strict = ExtractorOptions(config = graft.extract.TrafConfig(
       minExtractedSize = 10000, minOutputSize = 10000))
     val h = "<html><head><meta http-equiv=\"content-language\" content=\"EN\"/></head><body><div=\"article-body\"><p>Text.</p></div></body></html>"
-    assert(Extraction.extract(h, null, strict) == null)
-    assert(Extraction.extract(h, null, Zero) != null)
+    assert(txt(h, strict) == null)
+    assert(txt(h, Zero) != null)
   }
 }

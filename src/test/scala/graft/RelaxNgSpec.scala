@@ -11,6 +11,10 @@ class RelaxNgSpec extends AnyFunSuite {
   private def opts = ExtractorOptions(
     config = TrafConfig.Zero, formatting = true, comments = true)
 
+  // the TEI tree projection of one kernel run (null when the page is discarded)
+  private def teiTree(html: String, url: String, recordId: String, o: ExtractorOptions): graft.dom.Node =
+    Option(Extraction.run(html, url, recordId, o)).map(_.teiTree).orNull
+
   /** Minimal valid TEI tree built programmatically (the HTML tokenizer
     * lowercases names; TEI is case-sensitive). */
   private def minimalTei(): graft.dom.Node = {
@@ -72,7 +76,7 @@ class RelaxNgSpec extends AnyFunSuite {
         |<p>Short piece of content for the second page.</p>
         |<table><tr><td>a</td><td>b</td></tr></table></article></body></html>""".stripMargin)
     pages.zipWithIndex.foreach { case (html, i) =>
-      val tei = Extraction.extractTeiTree(html, s"https://example.org/p$i", s"doc$i", opts)
+      val tei = teiTree(html, s"https://example.org/p$i", s"doc$i", opts)
       assert(tei != null, s"page $i produced no TEI")
       assert(schema.validate(tei), s"page $i TEI output failed schema validation")
     }
@@ -86,12 +90,22 @@ class RelaxNgSpec extends AnyFunSuite {
     pages.foreach { f =>
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)
       val html = graft.parse.HtmlParser.decodeFile(bytes)
-      val tei = Extraction.extractTeiTree(html, "https://example.org/x", "id1", opts)
+      val tei = teiTree(html, "https://example.org/x", "id1", opts)
       if (tei != null) {
-        assert(graft.out.Tei.validateTei(tei), s"${f.getName} TEI failed validation")
+        assert(RelaxNg.validateTei(tei), s"${f.getName} TEI failed validation")
         checked += 1
       }
     }
     assert(checked >= 8, s"only $checked pages produced TEI")
+  }
+
+  test("committed real pages: TEI output validates against the schema") {
+    (0 until 3).foreach { i =>
+      val in = getClass.getResourceAsStream(s"/graft/brotli/page${i}_q1.raw")
+      val html = graft.parse.HtmlParser.decodeFile(try in.readAllBytes() finally in.close())
+      val tei = teiTree(html, "https://example.org/x", "id1", opts)
+      assert(tei != null, s"page${i}_q1 produced no TEI")
+      assert(RelaxNg.validateTei(tei), s"page${i}_q1 TEI failed validation")
+    }
   }
 }

@@ -24,7 +24,7 @@ class TeiConformanceSpec extends AnyFunSuite {
     val failures = cases.zipWithIndex.flatMap { case (c, i) =>
       val xml = c("xml").asInstanceOf[String]
       val doc = HtmlParser.parseXmlLike(xml)
-      val cleaned = graft.out.Tei.checkTei(doc, "fake_url")
+      val cleaned = graft.out.Tei.checkTei(doc)
       def findTag(path: Any): graft.dom.Node = path match {
         case s: String =>
           val tag = s.stripPrefix(".//")

@@ -20,6 +20,10 @@ class TeiSpec extends AnyFunSuite {
     tei
   }
 
+  // the tei projection of one kernel run (null when the page is discarded)
+  private def tei(html: String, url: String, recordId: String, o: ExtractorOptions): String =
+    Option(Extraction.run(html, url, recordId, o)).map(_.tei).orNull
+
   private def firstDiv(tei: Node): Node =
     tei.iterList(Set("div")).head
 
@@ -29,7 +33,7 @@ class TeiSpec extends AnyFunSuite {
   test("check_tei: bare div text becomes p (unit_tests.py:499-503)") {
     val div = Dom.elem("div")
     div.text = "text"
-    val cleaned = Tei.checkTei(teiWith(div), "fake_url")
+    val cleaned = Tei.checkTei(teiWith(div))
     assert(tagsAndText(firstDiv(cleaned)) == List(("div", null), ("p", "text")))
   }
 
@@ -38,7 +42,7 @@ class TeiSpec extends AnyFunSuite {
     val inner = Dom.subElement(outer, "div")
     inner.text = "text1"
     Dom.subElement(inner, "p").text = "text2"
-    val cleaned = Tei.checkTei(teiWith(outer), "fake_url")
+    val cleaned = Tei.checkTei(teiWith(outer))
     assert(tagsAndText(firstDiv(cleaned)) == List(("div", null), ("div", null), ("p", "text1 text2")))
   }
 
@@ -47,7 +51,7 @@ class TeiSpec extends AnyFunSuite {
     val inner = Dom.subElement(outer, "div")
     inner.text = "text1"
     Dom.subElement(inner, "head").text = "text2"
-    val cleaned = Tei.checkTei(teiWith(outer), "fake_url")
+    val cleaned = Tei.checkTei(teiWith(outer))
     assert(tagsAndText(firstDiv(cleaned)) ==
       List(("div", null), ("div", null), ("p", "text1"), ("ab", "text2")))
   }
@@ -58,7 +62,7 @@ class TeiSpec extends AnyFunSuite {
     inner.text = "text1"
     Dom.subElement(inner, "p").text = "text2"
     inner.tail = "has to be there"
-    val cleaned = Tei.checkTei(teiWith(outer), "fake_url")
+    val cleaned = Tei.checkTei(teiWith(outer))
     val innerDiv = firstDiv(cleaned).children.head
     assert(innerDiv.tag == "div")
     assert(tagsAndText(innerDiv) == List(("div", null), ("p", "text1 text2 has to be there")))
@@ -70,7 +74,7 @@ class TeiSpec extends AnyFunSuite {
     inner.text = "text1"
     Dom.subElement(inner, "quote").text = "text2"
     inner.tail = "has to be there"
-    val cleaned = Tei.checkTei(teiWith(outer), "fake_url")
+    val cleaned = Tei.checkTei(teiWith(outer))
     val innerDiv = firstDiv(cleaned).children.head
     assert(tagsAndText(innerDiv) ==
       List(("div", null), ("p", "text1"), ("quote", "text2"), ("p", "has to be there")))
@@ -83,14 +87,14 @@ class TeiSpec extends AnyFunSuite {
     val p = Dom.subElement(inner, "p")
     p.text = "text2"
     p.tail = "has to be there"
-    val cleaned = Tei.checkTei(teiWith(outer), "fake_url")
+    val cleaned = Tei.checkTei(teiWith(outer))
     val innerDiv = firstDiv(cleaned).children.head
     assert(tagsAndText(innerDiv) == List(("div", null), ("p", "text1 text2 has to be there")))
   }
 
   test("tei end-to-end headers (unit_tests.py:532-535)") {
     val h = "<html><body><article><h1>title</h1><h2>subtitle</h2><p>text</p></article></body></html>"
-    val out = Extraction.extractTei(h, "mocked", null, Zero.copy(fast = true))
+    val out = tei(h, "mocked", null, Zero.copy(fast = true))
     assert(out != null)
     assert(out.contains("<ab rend=\"h1\" type=\"header\">title</ab>"), out)
     assert(out.contains("<ab rend=\"h2\" type=\"header\">subtitle</ab>"), out)
@@ -99,7 +103,7 @@ class TeiSpec extends AnyFunSuite {
 
   test("tei complex head with list (unit_tests.py:536-550)") {
     val h = """<html><body><article><h2><div><p>content</p><ul><li>text1</li><li>text2</li></ul></div></h2></article></body></html>"""
-    val out = Extraction.extractTei(h, "mocked", null, Zero.copy(fast = true))
+    val out = tei(h, "mocked", null, Zero.copy(fast = true))
     assert(out != null)
     assert(out.replace("\n", "").contains("<ab rend=\"h2\" type=\"header\">content<list rend=\"ul\"><item>text1"), out)
   }
@@ -109,7 +113,7 @@ class TeiSpec extends AnyFunSuite {
       java.nio.file.Paths.get("/root/reference/tests/resources/exotic_tags_tei.html")), "UTF-8")
     // fixture is XML-ish; parse leniently and scrub
     val tree = HtmlParser.parseXmlLike(content)
-    val res = Tei.checkTei(tree, "http://dummy")
+    val res = Tei.checkTei(tree)
     val s = Dom.toXml(res)
     assert(s.contains("<hi rend=\"uppercase\">Hello</hi>"), s.take(300))
     assert(s.contains("<p>Teletype text</p>"), s.take(300))

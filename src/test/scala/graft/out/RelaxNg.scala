@@ -7,7 +7,8 @@ import graft.dom.Node
   * the construct subset the TEI P5 schema actually uses (no interleave /
   * mixed / notAllowed / include / combine — verified against the schema).
   *
-  * The schema ships as `graft/tei_schema.rng.gz`, extracted from the
+  * The TEI test oracle: no product path validates. The schema is the test
+  * resource `graft/tei_schema.rng.gz`, extracted from the
   * reference's own asset (`trafilatura/data/tei-schema-pickle.lzma`,
   * xml.py:25,189-200) — TEI Edition 3.6.0.
   *
@@ -459,4 +460,8 @@ object RelaxNg {
       RelaxNg.getClass.getResourceAsStream("/graft/tei_schema.rng.gz"))
     try parse(in) finally in.close()
   }
+
+  /** validate_tei (xml.py:189-200): RelaxNG validation of a TEI document tree
+    * against the TEI P5 schema. */
+  def validateTei(xmldoc: Node): Boolean = teiSchema.validate(xmldoc)
 }
